@@ -50,9 +50,6 @@ object TextFns {
   def sqlHash60(x: String): String =
     s"CAST('0x' || substr(md5($x), 1, 15) AS BIGINT)"
 
-  /** [[hash60]] reduced mod P — the MinHash base hash. */
-  def hashMod(c: Column): Column = hash60(c) % HashMod
-
   def sqlHashMod(x: String): String = s"(${sqlHash60(x)} % $HashMod)"
 
   // ------------------------------------------------------------- tokens

@@ -195,9 +195,11 @@ object MLFeed {
   }
 
   /** B2 — deterministic epoch shuffle key: reshuffle per epoch by mixing
-    * the epoch into the permutation (`data_generator.py:43-47`). */
+    * the epoch into the permutation (`data_generator.py:43-47`). The
+    * epoch offset is a [[graft.plans.ParamLong]], not a literal, so every
+    * epoch runs the same generated code. */
   def epochShuffleKey(key: Column, epoch: Int): Column =
-    permuteKey(key + lit(epoch.toLong * 1000003L))
+    permuteKey(key + graft.plans.ParamLong.param(epoch.toLong * 1000003L))
 
   /** B3 — batch slicing (`data_generator.py:20-35`): rows ordered by
     * `orderKey` get `batch_id = floor(rank/batchSize)`; the ragged tail

@@ -1481,12 +1481,6 @@ object ParquetFile {
     CellCol(defined, longs, bins, dbls)
   }
 
-  /** Never-throw wrapper used by the connector's reader. */
-  private[graft] def tryReadChunkCells(b: Array[Byte], c: Chunk,
-      lf: Leaf, rgRows: Int): Option[CellCol] =
-    try Some(readChunkCells(b, c, lf, rgRows))
-    catch { case _: Throwable => None }
-
   /** One LIST chunk's per-row cells (r12 — the connector's array
     * materializer, pairing [[readChunkCells]] the way the q219 Dremel
     * aggregates pair the flat sum decoders): `defined` = list

@@ -2,29 +2,31 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import graft.functions.Bracket.bracket
 
 /** W6/J3 — AMSR2→SAR bilinear regrid.
   *
   * The reference builds target axes `arange(step/2, sar_extent, step)` and
   * evaluates a `RegularGridInterpolator` (linear, extrapolating:
   * `bounds_error=False, fill_value=None`) per channel
-  * (`/root/reference/asip_v2/archive.py:250-263`). Spark-native design:
+  * (reference `asip_v2/archive.py:250-263`). Spark-native design:
   *
-  *  1. per-scene source CELLS: each grid node paired with its right/down/
-  *     diagonal neighbours via `lead()` window passes and indexed by
-  *     `dense_rank` — no self-join; the shuffles are over the *coarse*
-  *     source grid (tiny vs the SAR target grid);
-  *  2. target axis positions resolved to a bracketing cell index (J3)
-  *     through a broadcast range lookup against the per-scene axis
-  *     interval table, with the first/last interval extended to ±inf —
-  *     linear extrapolation beyond the hull is the same closed-form
-  *     expression with weights outside [0,1], exactly RGI's
-  *     `fill_value=None` behaviour;
-  *  3. the dense target meshgrid joins cells on (scene, li, si) — an equi
-  *     hash join whose build side is the small cell table, so the big
-  *     side streams through without a shuffle when broadcast; bilinear
-  *     weights + 4-corner combine are one codegen'd projection.
+  *  1. one aggregate per scene reduces the coarse source grid to its
+  *     sorted line axis, sorted sample axis and row-major value array;
+  *  2. that one row per scene joins the dense target meshgrid on the
+  *     scene key (the grid row is small, so the big side streams past a
+  *     broadcast while it fits);
+  *  3. each target's bracketing cell comes in closed form,
+  *     `clamp(#{nodes ≤ pos} − 1, 0, n − 2)` per axis
+  *     ([[graft.functions.Bracket]]): the clamp extends the first/last
+  *     interval to ±inf, so linear extrapolation beyond the hull is the
+  *     same 4-corner combine with weights outside [0,1], exactly RGI's
+  *     `fill_value=None` behaviour.
+  *
+  * Steps 2 and 3 are one codegen'd pipeline stage. The source must be a
+  * complete rectilinear grid per scene (every line × sample node once,
+  * non-null positions); any other scene fails the query rather than
+  * being interpolated across the gap.
   */
 object Regrid {
 
@@ -36,80 +38,51 @@ object Regrid {
       .withColumn("_p", explode(sequence(lit(step / 2), col("_e") - 1, lit(step))))
       .select(col(sceneCol), col("_p").cast("double").as(out))
 
-  /** Axis nodes (scene, pos ascending) → covering intervals
-    * (scene, idx, lo, hi, cover_lo, cover_hi): interval idx spans
-    * [lo, hi) = [node_idx, node_idx+1); cover_* extend the first/last
-    * interval to ±inf for extrapolation. */
-  private def intervals(axis: DataFrame, sceneCol: String): DataFrame = {
-    val w = Window.partitionBy(col(sceneCol)).orderBy(col("pos"))
-    axis
-      .withColumn("idx", row_number().over(w) - 1)
-      .withColumn("nxt", lead(col("pos"), 1).over(w))
-      .filter(col("nxt").isNotNull)
-      .withColumn("last_idx",
-        max(col("idx")).over(Window.partitionBy(col(sceneCol))))
-      .select(col(sceneCol), col("idx"),
-        col("pos").as("lo"), col("nxt").as("hi"),
-        when(col("idx") === 0, Double.NegativeInfinity)
-          .otherwise(col("pos")).as("cover_lo"),
-        when(col("idx") === col("last_idx"), Double.PositiveInfinity)
-          .otherwise(col("nxt")).as("cover_hi"))
+  /** Per-scene grid row (scene, la, sa, va): ascending line and sample
+    * axes and the row-major node values. Scenes with fewer than 2 nodes
+    * on an axis have no interval and give no row. */
+  private def grids(src: DataFrame, sceneCol: String): DataFrame = {
+    val g = src.groupBy(col(sceneCol))
+      .agg(sort_array(collect_list(struct(col("line").cast("double").as("l"),
+        col("sample").cast("double").as("s"), col("value").as("v")))).as("g"))
+      .select(col(sceneCol), col("g"), array_distinct(col("g.l")).as("la"),
+        sort_array(array_distinct(col("g.s"))).as("sa"))
+      .filter(size(col("la")) >= 2 && size(col("sa")) >= 2)
+    // sorted by (line, sample), the nodes form a complete grid iff their
+    // samples are the sample axis tiled once per line (a gap or a repeat
+    // breaks the tiling); nulls sort first, so axis(0) finds a null position
+    val complete = col("la")(0).isNotNull && col("sa")(0).isNotNull &&
+      col("g.s") === flatten(array_repeat(col("sa"), size(col("la"))))
+    g.select(col(sceneCol), col("la"), col("sa"),
+      when(complete, col("g.v")).otherwise(raise_error(concat(
+        lit("Regrid.bilinear: scene "), col(sceneCol).cast("string"),
+        lit(" is not a complete rectilinear grid (a node is missing or repeated)"))))
+        .as("va"))
   }
 
-  /** Resolve target positions to their (extrapolation-clamped) bracketing
-    * cell index along one axis. No forced broadcast: the interval table
-    * grows with scene count (VERDICT r1 scale caveat) — under the
-    * autoBroadcastJoinThreshold Catalyst still broadcasts it; beyond,
-    * the equi key on scene keeps it a co-partitioned hash join. */
-  private def lookup(targets: DataFrame, iv: DataFrame, sceneCol: String,
-                     posOut: String, idxOut: String): DataFrame =
-    targets.select(col(sceneCol), col("pos").as(posOut))
-      .join(iv.select(col(sceneCol),
-          col("idx").as(idxOut), col("cover_lo"), col("cover_hi")),
-        Seq(sceneCol))
-      .filter(col(posOut) >= col("cover_lo") && col(posOut) < col("cover_hi"))
-      .drop("cover_lo", "cover_hi")
-
-  /** Bilinear regrid of `src(scene, line, sample, value)` (a rectilinear
-    * per-scene grid, positions in target/SAR pixel units) onto the
-    * per-scene cross product `targetLines(scene,pos)` ×
+  /** Bilinear regrid of `src(scene, line, sample, value)` (a complete
+    * rectilinear per-scene grid, positions in target/SAR pixel units) onto
+    * the per-scene cross product `targetLines(scene,pos)` ×
     * `targetSamples(scene,pos)`. Returns (scene, line, sample, value). */
   def bilinear(src: DataFrame,
                targetLines: DataFrame, targetSamples: DataFrame,
                sceneCol: String = "scene"): DataFrame = {
-    val bySc = Window.partitionBy(col(sceneCol))
-    val wS = Window.partitionBy(col(sceneCol), col("line")).orderBy(col("sample"))
-    val wL = Window.partitionBy(col(sceneCol), col("sample")).orderBy(col("line"))
-    val cells = src
-      .withColumn("li", dense_rank().over(bySc.orderBy(col("line"))) - 1)
-      .withColumn("si", dense_rank().over(bySc.orderBy(col("sample"))) - 1)
-      .withColumn("v12", lead(col("value"), 1).over(wS))
-      .withColumn("s_hi", lead(col("sample"), 1).over(wS))
-      .withColumn("v21", lead(col("value"), 1).over(wL))
-      .withColumn("v22", lead(col("v12"), 1).over(wL))
-      .withColumn("l_hi", lead(col("line"), 1).over(wL))
-      .filter(col("s_hi").isNotNull && col("l_hi").isNotNull)
-      .select(col(sceneCol), col("li"), col("si"),
-        col("line").cast("double").as("l_lo"), col("l_hi").cast("double"),
-        col("sample").cast("double").as("s_lo"), col("s_hi").cast("double"),
-        col("value").as("v11"), col("v12"), col("v21"), col("v22"))
-
-    val lineIv = intervals(
-      src.select(col(sceneCol), col("line").cast("double").as("pos")).distinct(), sceneCol)
-    val sampIv = intervals(
-      src.select(col(sceneCol), col("sample").cast("double").as("pos")).distinct(), sceneCol)
-
-    val tl = lookup(targetLines, lineIv, sceneCol, "tl", "li")
-    val ts = lookup(targetSamples, sampIv, sceneCol, "tsm", "si")
-    val targets = tl.join(ts, Seq(sceneCol)) // per-scene meshgrid
-
+    // +inf, NaN and null targets lie in no cover interval: dropped
+    val targets = targetLines.select(col(sceneCol), col("pos").as("tl"))
+      .join(targetSamples.select(col(sceneCol), col("pos").as("tsm")), Seq(sceneCol))
+      .filter(col("tl") < Double.PositiveInfinity && col("tsm") < Double.PositiveInfinity)
+    def node(dl: Int, ds: Int): Column =
+      col("va")((col("li") + dl) * size(col("sa")) + col("si") + ds)
     val wl = (col("tl") - col("l_lo")) / (col("l_hi") - col("l_lo"))
     val ws = (col("tsm") - col("s_lo")) / (col("s_hi") - col("s_lo"))
-    // No forced broadcast of cells: it is small per scene but grows with
-    // the number of scenes in the batch (VERDICT r1: bound the broadcast).
-    // The optimizer broadcasts while it fits; otherwise the (scene,li,si)
-    // equi key gives a shuffled hash join co-partitioned with targets.
-    targets.join(cells, Seq(sceneCol, "li", "si"))
+    targets.join(grids(src, sceneCol), Seq(sceneCol))
+      .select(col(sceneCol), col("tl"), col("tsm"), col("la"), col("sa"), col("va"),
+        bracket(col("la"), col("tl").cast("double")).as("li"),
+        bracket(col("sa"), col("tsm").cast("double")).as("si"))
+      .select(col(sceneCol), col("tl"), col("tsm"),
+        col("la")(col("li")).as("l_lo"), col("la")(col("li") + 1).as("l_hi"),
+        col("sa")(col("si")).as("s_lo"), col("sa")(col("si") + 1).as("s_hi"),
+        node(0, 0).as("v11"), node(0, 1).as("v12"), node(1, 0).as("v21"), node(1, 1).as("v22"))
       .select(col(sceneCol), col("tl").as("line"), col("tsm").as("sample"),
         (col("v11") * (lit(1.0) - wl) * (lit(1.0) - ws) +
          col("v12") * (lit(1.0) - wl) * ws +

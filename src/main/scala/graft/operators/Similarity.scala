@@ -723,13 +723,6 @@ object Similarity {
           .as("mean_sq_dist"))
   }
 
-  /** [[clusterMetrics]] over an [[autoCodebook]]-elected quantizer —
-    * audits a codebook whose size follows the corpus instead of a
-    * caller-pinned cell count. */
-  def clusterMetricsAutoSized(vectors: DataFrame, quantBits: Int = 20,
-                              targetCell: Long = 125L): DataFrame =
-    clusterMetrics(vectors, autoCodebook(targetCell), quantBits)
-
   /** L69 — cluster-agreement audit (Adjusted Rand Index): how well the
     * quantizer's cell assignment reproduces a ground-truth labeling —
     * the retrain-regression gate for the IVF/SemDeDup codebook (did the

@@ -94,16 +94,15 @@ object PipelineQueries {
 
   val all: Map[String, Query] = Map(
 
-    // W6/J3 — bilinear regrid with extrapolation: interval-bracketing
-    // join in Spark vs closed-form clamp in the oracle — same math.
+    // W6/J3 — bilinear regrid with extrapolation: binary-search bracket
+    // over the per-scene axes in Spark vs closed-form clamp in the
+    // oracle — same math.
     "q10_regrid_bilinear" -> Query(
       (s, dir) => {
         val h = gridHeight(s, dir)
         // scene is a NON-FOLDABLE single-valued key ("s" + line%1): a
-        // lit("s0") constant gets folded out of the Regrid window
-        // partition specs by Catalyst, silently turning every per-scene
-        // window into an unpartitioned one (76 "No Partition Defined"
-        // WARNs per bench run). With a real column reference the plan
+        // lit("s0") constant gets folded out of Regrid's per-scene
+        // grouping by Catalyst. With a real column reference the plan
         // keeps the per-scene partitioning it would have at scale.
         val src = grid(s, dir)
           .filter(col("line") % 10 === 5 && col("sample") % 10 === 5)
