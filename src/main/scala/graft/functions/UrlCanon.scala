@@ -105,7 +105,7 @@ object UrlCanonHelper {
     if (sep <= 0) return null
     val scheme = s.substring(0, sep).toLowerCase(java.util.Locale.ROOT)
     if (scheme != "http" && scheme != "https") return null
-    var i = sep + 3
+    val i = sep + 3
     // authority ends at '/', '?' or '#'
     var ae = i
     while (ae < s.length && s.charAt(ae) != '/' && s.charAt(ae) != '?' &&

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Cursor, Flate, Leb128, Malformed}
+
 /** Avro Object Container File walk — the ROW-format counterpart to
   * the Parquet reader (`ParquetFile.scala`): Kafka archives, CDC
   * dumps and ingest staging ship OCF. Dependency-free subset of the
@@ -14,8 +16,8 @@ import org.apache.spark.sql.Dataset
   *    every data block is (record count, byte size, payload, sync)
   *    and the sync must equal the header's byte-for-byte;
   *  - `deflate` blocks are RAW deflate (no zlib wrapper, the spec's
-  *    choice), JDK `Inflater` (the q149/q178/q205 precedent), with
-  *    exact produced/consumed framing;
+  *    choice), inflated by `graft.codec.Flate` with exact consumed
+  *    framing;
   *  - the schema is PARSED (a minimal JSON walker for the subset),
   *    not assumed: a flat record whose fields are `long`/`int`/
   *    `string`/`boolean`/`double` or the nullable union
@@ -45,9 +47,6 @@ object Avro {
       n_records: Long, sum_long: Long, n_nulls: Long, sum_slen: Long,
       sum_sbytes: Long, valid: Boolean)
 
-  private case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
   private def fail(): Nothing = throw Malformed
 
   private val MaxDecoded = 1L << 26
@@ -184,41 +183,11 @@ object Avro {
     fields
   }
 
-  // ---- binary layer ----
-  private final class R(val b: Array[Byte], var pos: Int, val end: Int) {
-    def u8(): Int = { if (pos >= end) fail(); val v = b(pos) & 0xff; pos += 1; v }
-    def zigzag(): Long = {
-      var v = 0L; var sh = 0; var n = 0
-      while (n < 10) {
-        val x = u8(); v |= (x & 0x7fL) << sh
-        if ((x & 0x80) == 0) return (v >>> 1) ^ -(v & 1L)
-        sh += 7; n += 1
-      }
-      fail()
-    }
-    def bytes(n: Long): Int = { // returns start, advances
-      if (n < 0 || n > end - pos) fail()
-      val s = pos; pos += n.toInt; s
-    }
-  }
-
+  /** A `deflate` block: one raw DEFLATE stream filling the block. */
   private def inflateRaw(b: Array[Byte], off: Int, len: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      inf.setInput(b, off, len)
-      val out = new java.io.ByteArrayOutputStream(math.min(len * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) fail()
-        if (out.size() + n > MaxDecoded) fail()
-        out.write(buf, 0, n)
-      }
-      if (inf.getRemaining != 0) fail()
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => fail()
-    } finally inf.end()
+    val (d, used) = Flate.inflateCapped(b, off, len, MaxDecoded, raw = true)
+    if (used != len) fail()
+    d
   }
 
   private[graft] def parse(id: Long, b: Array[Byte]): AvroInfo = {
@@ -226,7 +195,7 @@ object Avro {
     if (b == null || b.length < 20) return invalid
     try {
       if (b(0) != 'O' || b(1) != 'b' || b(2) != 'j' || b(3) != 1) fail()
-      val r = new R(b, 4, b.length)
+      val r = new Cursor(b, 4, b.length)
       // file metadata map
       var schemaJson: String = null
       var codec = "null"
@@ -238,9 +207,9 @@ object Avro {
           if (cnt < 0) { cnt = -cnt; r.zigzag(): Unit } // block byte size
           var i = 0L
           while (i < cnt) {
-            val kl = r.zigzag(); val ks = r.bytes(kl)
+            val kl = r.zigzag(); val ks = r.take(kl)
             val key = new String(b, ks, kl.toInt, "UTF-8")
-            val vl = r.zigzag(); val vs = r.bytes(vl)
+            val vl = r.zigzag(); val vs = r.take(vl)
             key match {
               case "avro.schema" =>
                 schemaJson = new String(b, vs, vl.toInt, "UTF-8")
@@ -255,7 +224,7 @@ object Avro {
       if (schemaJson == null) fail()
       if (codec != "null" && codec != "deflate") fail()
       val fields = parseSchema(schemaJson)
-      val syncOff = r.bytes(16L)
+      val syncOff = r.take(16L)
       // data blocks
       var nBlocks = 0L; var nRecords = 0L
       var sumLong = 0L; var nNulls = 0L
@@ -263,7 +232,7 @@ object Avro {
       var decoded = 0L
       def decodeRecords(d: Array[Byte], off: Int, len: Int,
           cnt: Long): Unit = {
-        val rr = new R(d, off, off + len)
+        val rr = new Cursor(d, off, off + len)
         var i = 0L
         while (i < cnt) {
           fields.foreach { f =>
@@ -280,9 +249,9 @@ object Avro {
               case T_BOOL =>
                 val v = rr.u8(); if (v > 1) fail()
                 sumLong += v
-              case T_DBL => rr.bytes(8L): Unit // counted, not summed
+              case T_DBL => rr.take(8L): Unit // counted, not summed
               case T_STR =>
-                val l = rr.zigzag(); val s = rr.bytes(l)
+                val l = rr.zigzag(); val s = rr.take(l)
                 sumSlen += l
                 var k = 0
                 while (k < l) { sumSbytes += d(s + k) & 0xff; k += 1 }
@@ -296,9 +265,9 @@ object Avro {
         val cnt = r.zigzag()
         if (cnt < 0) fail()
         val size = r.zigzag()
-        val ds = r.bytes(size)
+        val ds = r.take(size)
         // sync marker must match the header's
-        val ss = r.bytes(16L)
+        val ss = r.take(16L)
         var k = 0
         while (k < 16) { if (b(ss + k) != b(syncOff + k)) fail(); k += 1 }
         if (codec == "deflate") {
@@ -453,19 +422,10 @@ object Avro {
       len: Int): Array[Byte] = {
     if (len < 5) fail()
     val comp = len - 4
-    var p = off; var outLen = 0L; var sh = 0; var n = 0
-    var done = false
-    while (!done) { // preamble varint, read ahead of decompress
-      if (n >= 5 || p >= off + comp) fail()
-      val x = b(p) & 0xff; p += 1
-      outLen |= (x & 0x7fL) << sh
-      if ((x & 0x80) == 0) done = true
-      sh += 7; n += 1
-    }
+    // preamble varint, read ahead of decompress
+    val outLen = new Cursor(b, off, off + comp).uleb(5)
     if (outLen > MaxDecoded) fail()
-    val d =
-      try Snappy.decompress(b, off, comp, outLen.toInt)
-      catch { case Snappy.Malformed => fail() }
+    val d = Snappy.decompress(b, off, comp, outLen.toInt)
     val crc = new java.util.zip.CRC32()
     crc.update(d)
     val c = off + comp
@@ -487,14 +447,14 @@ object Avro {
     var sumSlen = 0L; var sumSbytes = 0L
   }
 
-  private def decodeVal(rr: R, t: AType, agg: DeepAgg): Unit = t match {
+  private def decodeVal(rr: Cursor, t: AType, agg: DeepAgg): Unit = t match {
     case PLong | PInt => agg.sumLong += rr.zigzag()
     case PBool =>
       val v = rr.u8(); if (v > 1) fail()
       agg.sumLong += v
-    case PDbl => rr.bytes(8L): Unit // counted, not summed
+    case PDbl => rr.take(8L): Unit // counted, not summed
     case PStr =>
-      val l = rr.zigzag(); val s = rr.bytes(l)
+      val l = rr.zigzag(); val s = rr.take(l)
       agg.sumSlen += l
       var k = 0
       while (k < l) { agg.sumSbytes += rr.b(s + k) & 0xff; k += 1 }
@@ -527,7 +487,7 @@ object Avro {
     if (b == null || b.length < 20) return invalid
     try {
       if (b(0) != 'O' || b(1) != 'b' || b(2) != 'j' || b(3) != 1) fail()
-      val r = new R(b, 4, b.length)
+      val r = new Cursor(b, 4, b.length)
       var schemaJson: String = null
       var codec = "null"
       var go = true
@@ -538,9 +498,9 @@ object Avro {
           if (cnt < 0) { cnt = -cnt; r.zigzag(): Unit }
           var i = 0L
           while (i < cnt) {
-            val kl = r.zigzag(); val ks = r.bytes(kl)
+            val kl = r.zigzag(); val ks = r.take(kl)
             val key = new String(b, ks, kl.toInt, "UTF-8")
-            val vl = r.zigzag(); val vs = r.bytes(vl)
+            val vl = r.zigzag(); val vs = r.take(vl)
             key match {
               case "avro.schema" =>
                 schemaJson = new String(b, vs, vl.toInt, "UTF-8")
@@ -556,7 +516,7 @@ object Avro {
       if (codec != "null" && codec != "deflate" && codec != "snappy")
         fail()
       val schema = parseDeepSchema(schemaJson)
-      val syncOff = r.bytes(16L)
+      val syncOff = r.take(16L)
       var nBlocks = 0L; var nRecords = 0L
       var decoded = 0L
       val agg = new DeepAgg
@@ -564,8 +524,8 @@ object Avro {
         val cnt = r.zigzag()
         if (cnt < 0) fail()
         val size = r.zigzag()
-        val ds = r.bytes(size)
-        val ss = r.bytes(16L)
+        val ds = r.take(size)
+        val ss = r.take(16L)
         var k = 0
         while (k < 16) {
           if (b(ss + k) != b(syncOff + k)) fail()
@@ -582,7 +542,7 @@ object Avro {
         }
         decoded += dlen
         if (decoded > MaxDecoded) fail()
-        val rr = new R(db, doff, doff + dlen)
+        val rr = new Cursor(db, doff, doff + dlen)
         var i = 0L
         while (i < cnt) { decodeVal(rr, schema, agg); i += 1 }
         if (rr.pos != doff + dlen) fail() // block byte size exact
@@ -615,20 +575,14 @@ object Avro {
   // (and our own reader cross-checks). Subset: the flat record
   // {id: long, v: ["null","long"], s: string} wire shape
   // generalized to (long, nullable-long, string) rows; `null` and
-  // `deflate` codecs (raw JDK Deflater — the inverse of the reader's
-  // raw Inflater); explicit deterministic sync markers; a chosen
+  // `deflate` codecs (raw DEFLATE — the inverse of the reader's
+  // inflate); explicit deterministic sync markers; a chosen
   // records-per-block framing.
   // =================================================================
 
   private final class W {
     val out = new java.io.ByteArrayOutputStream(256)
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0L) { u8(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      u8(v.toInt)
-    }
-    def zigzag(v: Long): Unit = varint((v << 1) ^ (v >> 63))
+    def zigzag(v: Long): Unit = Leb128.write(out, (v << 1) ^ (v >> 63))
     def bytes(b: Array[Byte]): Unit = {
       zigzag(b.length.toLong); out.write(b, 0, b.length)
     }
@@ -636,17 +590,9 @@ object Avro {
     def result: Array[Byte] = out.toByteArray
   }
 
-  private def deflateRaw(b: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(
-      java.util.zip.Deflater.DEFAULT_COMPRESSION, true) // RAW: the spec
-    try {
-      d.setInput(b); d.finish()
-      val out = new java.io.ByteArrayOutputStream(b.length / 2 + 16)
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      out.toByteArray
-    } finally d.end()
-  }
+  /** RAW deflate (the spec's choice) at zlib's default level (-1). */
+  private def deflateRaw(b: Array[Byte]): Array[Byte] =
+    Flate.deflate(b, -1, raw = true)
 
   /** Serialize one complete OCF: records (id, v nullable, s) in
     * `perBlock`-record blocks, `deflate` when asked, the given

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Gzip, Malformed}
+
 /** HTTP/1.1 response parsing inside WARC response records — the real
   * middle step of the WET derivation: a crawl's `response` records
   * carry the full HTTP MESSAGE (status line + headers + body), and
@@ -38,50 +40,6 @@ object Http {
                                    b: Array[Byte]): HttpInfo =
     parseResponseBody(id, idx, b)._1
 
-  /** Decode one complete RFC 1952 gzip member occupying EXACTLY
-    * `[off, off+len)`: CM=8, FLG subset {0, FNAME}, raw inflate,
-    * CRC-32 + ISIZE verified, no slack. Malformed → Warc.Malformed. */
-  private def gunzip(b: Array[Byte], off: Int, len: Int): Array[Byte] = {
-    def fail(): Nothing = throw Warc.Malformed
-    if (len < 18) fail()
-    if (b(off) != 0x1f.toByte || b(off + 1) != 0x8b.toByte ||
-      b(off + 2) != 8) fail()
-    val flg = b(off + 3) & 0xff
-    if ((flg & ~0x08) != 0) fail()
-    var dataOff = off + 10
-    if ((flg & 0x08) != 0) {
-      while (dataOff < off + len && b(dataOff) != 0) dataOff += 1
-      if (dataOff >= off + len) fail()
-      dataOff += 1
-    }
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      inf.setInput(b, dataOff, off + len - dataOff)
-      val out = new java.io.ByteArrayOutputStream(4096)
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch { case _: java.util.zip.DataFormatException => fail() }
-        if (n == 0 && !inf.finished()) fail()
-        if (out.size().toLong + n > (1L << 24)) fail() // zip-bomb cap
-        out.write(buf, 0, n)
-      }
-      val consumed = inf.getBytesRead
-      val inflated = out.toByteArray
-      val tOff = dataOff + consumed.toInt
-      if (tOff + 8 != off + len) fail() // member must fill the body exactly
-      def le32(o: Int): Long =
-        (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-          ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      val crc = new java.util.zip.CRC32()
-      crc.update(inflated)
-      if (crc.getValue != le32(tOff)) fail()
-      if ((inflated.length.toLong & 0xffffffffL) != le32(tOff + 4)) fail()
-      inflated
-    } finally inf.end()
-  }
-
   /** As [[parseResponse]], also returning the DECODED body bytes
     * (null when invalid) — the r10 [[Wet]] seam consumes them, and
     * with `Content-Encoding: gzip` the decoded body is not a slice of
@@ -92,7 +50,7 @@ object Http {
     * in the subset) landing on the record end. Output is bounded by
     * the input (chunks are literal bytes — no expansion). */
   private def dechunk(b: Array[Byte], start: Int): Array[Byte] = {
-    def fail(): Nothing = throw Warc.Malformed
+    def fail(): Nothing = throw Malformed
     val out = new java.io.ByteArrayOutputStream(256)
     var p = start
     var done = false
@@ -126,7 +84,7 @@ object Http {
     val invalid = (HttpInfo(id, idx, 0L, "", "", 0L, 0L, 0L,
       valid = false), null: Array[Byte])
     try {
-      def fail(): Nothing = throw Warc.Malformed
+      def fail(): Nothing = throw Malformed
       def lineEnd(from: Int): Int = {
         var i = from
         while (i + 1 < b.length &&
@@ -203,15 +161,19 @@ object Http {
           java.util.Arrays.copyOfRange(b, p, p + contentLen.toInt)
         }
       val body =
-        if (gzipBody) gunzip(stored, 0, stored.length)
-        else stored
+        if (!gzipBody) stored
+        else { // one member filling the body exactly, zip-bomb cap 16 MiB
+          val (inflated, end) = Gzip.read(stored, 0, stored.length, 1L << 24)
+          if (end != stored.length) fail()
+          inflated
+        }
       var sum = 0L
       var j = 0
       while (j < body.length) { sum += body(j) & 0xff; j += 1 }
       (HttpInfo(id, idx, status, mediaType, charset, nHeaders,
         body.length.toLong, sum, valid = true), body)
     } catch {
-      case Warc.Malformed | _: IndexOutOfBoundsException |
+      case Malformed | _: IndexOutOfBoundsException |
           _: NegativeArraySizeException | _: IllegalArgumentException =>
         invalid
     }
@@ -229,7 +191,7 @@ object Http {
           parseResponse(id, r.idx, r.payload)
       }
       catch {
-        case Warc.Malformed | _: IndexOutOfBoundsException |
+        case Malformed | _: IndexOutOfBoundsException |
             _: NegativeArraySizeException | _: IllegalArgumentException =>
           Nil
       }
@@ -283,7 +245,7 @@ object Http {
           // the oracle replays are of the DECODED body — only a real
           // member decode reproduces them
           val gz = (seed + i) % 4 == 0
-          val body = if (gz) Warc.gzipMember(raw, None) else raw
+          val body = if (gz) Gzip.member(raw, None) else raw
           if (gz) sb.append("Content-Encoding: gzip\r\n")
           sb.append("Content-Length: ").append(body.length).append("\r\n\r\n")
           val head = sb.toString.getBytes("ISO-8859-1")
@@ -312,7 +274,7 @@ object Http {
       System.arraycopy(payload, 0, rec, head.length, payload.length)
       rec(rec.length - 4) = '\r'; rec(rec.length - 3) = '\n'
       rec(rec.length - 2) = '\r'; rec(rec.length - 1) = '\n'
-      out.write(Warc.gzipMember(rec,
+      out.write(Gzip.member(rec,
         if (i % 4 == 1) Some(s"rec-$i") else None))
       i += 1
     }
@@ -380,7 +342,7 @@ object Http {
           }
           val mode = (seed + i) % 4
           val gz = mode == 1 || mode == 3
-          val enc = if (gz) Warc.gzipMember(raw, None) else raw
+          val enc = if (gz) Gzip.member(raw, None) else raw
           if (gz) sb.append("Content-Encoding: gzip\r\n")
           val body =
             if (mode >= 2) {
@@ -417,7 +379,7 @@ object Http {
       System.arraycopy(payload, 0, rec, head.length, payload.length)
       rec(rec.length - 4) = '\r'; rec(rec.length - 3) = '\n'
       rec(rec.length - 2) = '\r'; rec(rec.length - 1) = '\n'
-      out.write(Warc.gzipMember(rec,
+      out.write(Gzip.member(rec,
         if (i % 4 == 1) Some(s"rec-$i") else None))
       i += 1
     }

@@ -1468,7 +1468,14 @@ object LakeMaintenance {
       // probe is rebuilt at the pinned snapshot as before
       val hinted = probeHint.exists(_._2 == snapV)
       val probe = probeHint match {
-        case Some((p, pv)) if pv == snapV => p
+        case Some((p, pv)) if pv == snapV =>
+          // the routing below reads the hint by name and type
+          require(p.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+              Seq("_graft_k" -> org.apache.spark.sql.types.LongType,
+                "_graft_file" -> org.apache.spark.sql.types.StringType),
+            "probe hint must be exactly (_graft_k: long, _graft_file: " +
+              s"string), got ${p.schema.simpleString}")
+          p
         case _ => spark.read.format("graft-lake")
           .option("path", root).option("asOf", snapV.toString)
           .option("withFilePath", "true").load()

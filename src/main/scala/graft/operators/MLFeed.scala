@@ -54,6 +54,11 @@ object MLFeed {
                       beginDay: Int, endDay: Int): DataFrame =
     df.filter((dayofyear(col(tsCol)) - 1).between(beginDay, endDay))
 
+  /** Sort-task fanout over `spark.sql.shuffle.partitions` for the
+    * two-pass rank: bounds per-task sort memory at scale; see
+    * [[withGlobalRank]]. */
+  private val RankFanout = 4
+
   /** Scale-safe global rank: `Window.orderBy(...)` funnels every row
     * through ONE task twice (rank pass + unpartitioned count pass —
     * VERDICT r1 perf: q15 13.3 s at sf0.1, serial at 100×). Instead:
@@ -95,9 +100,9 @@ object MLFeed {
     // global rank is bucketing-invariant (monotone buckets +
     // within-bucket rank + offset sum), so results are unchanged at
     // any fanout. The offsets cross-join grows as (buckets)² — at the
-    // default 4× over 32 partitions that is 16k rows, still tiny.
+    // 4× over 32 partitions that is 16k rows, still tiny.
     val numBuckets = df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "200").toInt * rankFanout(df)
+      .get("spark.sql.shuffle.partitions", "200").toInt * RankFanout
     val bucket = keyDomain match {
       case Some((lo, hi)) =>
         require(hi > lo, s"empty key domain [$lo, $hi)")
@@ -130,15 +135,6 @@ object MLFeed {
     * real data through one task and the plan carries zero
     * "No Partition Defined for Window" hazards. Adds `_rank` (1-based,
     * global) and `_n` (total row count). */
-  /** Sort-task fanout over `spark.sql.shuffle.partitions` for the
-    * two-pass rank (`spark.graft.rank.fanout`, default 4): bounds per-task
-    * sort memory at scale; see [[withGlobalRank]]. */
-  private def rankFanout(df: DataFrame): Int = {
-    val f = df.sparkSession.conf.get("spark.graft.rank.fanout", "4").toInt
-    require(f >= 1 && f <= 64, s"graft.rank.fanout must be in [1, 64], got $f")
-    f
-  }
-
   def rankByBucket(df: DataFrame, bucket: Column, orderKeys: Seq[Column]): DataFrame = {
     // Materialize the order keys as attributes BEFORE the window: the
     // window's required sort evaluates raw SortOrder EXPRESSIONS inside
@@ -162,12 +158,25 @@ object MLFeed {
     // inserts the conf-width exchange and each task sorts
     // n/shuffle.partitions rows (the sf20 spill; see withGlobalRank)
     val sortTasks = df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "200").toInt * rankFanout(df)
+      .get("spark.sql.shuffle.partitions", "200").toInt * RankFanout
     parted.join(broadcast(offsets), Seq("_pid"))
       .repartition(sortTasks, col("_pid"))
       .withColumn("_rank", col("_off") + row_number().over(wInPart))
       .drop(("_pid" +: "_off" +: orderKeys.indices.map(i => s"_ok$i")): _*)
   }
+
+  /** `_rank` (1-based) and `_n` per row: the scale-safe two-pass global
+    * rank, or a window per `partitionBy` group (already parallel). */
+  private def ranked(df: DataFrame, orderKeys: Seq[Column],
+                     partitionBy: Seq[String],
+                     keyDomain: Option[(Long, Long)]): DataFrame =
+    if (partitionBy.isEmpty) withGlobalRank(df, orderKeys, keyDomain)
+    else {
+      val w = Window.partitionBy(partitionBy.map(col): _*).orderBy(orderKeys: _*)
+      val cw = Window.partitionBy(partitionBy.map(col): _*)
+      df.withColumn("_rank", row_number().over(w))
+        .withColumn("_n", count(lit(1)).over(cw))
+    }
 
   /** B1 — exact head/tail split after a deterministic permutation
     * (`utility.py:167-179`): first floor(p*n) rows are the training set.
@@ -179,15 +188,7 @@ object MLFeed {
   def exactSplit(df: DataFrame, orderKeys: Seq[Column], fraction: Double,
                  partitionBy: Seq[String] = Nil,
                  keyDomain: Option[(Long, Long)] = None): DataFrame = {
-    val ranked =
-      if (partitionBy.isEmpty) withGlobalRank(df, orderKeys, keyDomain)
-      else {
-        val w = Window.partitionBy(partitionBy.map(col): _*).orderBy(orderKeys: _*)
-        val cw = Window.partitionBy(partitionBy.map(col): _*)
-        df.withColumn("_rank", row_number().over(w))
-          .withColumn("_n", count(lit(1)).over(cw))
-      }
-    ranked
+    ranked(df, orderKeys, partitionBy, keyDomain)
       .withColumn("split",
         when(col("_rank") <= floor(col("_n") * fraction), "train")
           .otherwise("valid"))
@@ -208,15 +209,7 @@ object MLFeed {
   def batchIds(df: DataFrame, orderKeys: Seq[Column], batchSize: Int,
                partitionBy: Seq[String] = Nil,
                keyDomain: Option[(Long, Long)] = None): DataFrame = {
-    val ranked =
-      if (partitionBy.isEmpty) withGlobalRank(df, orderKeys, keyDomain)
-      else {
-        val w = Window.partitionBy(partitionBy.map(col): _*).orderBy(orderKeys: _*)
-        val cw = Window.partitionBy(partitionBy.map(col): _*)
-        df.withColumn("_rank", row_number().over(w))
-          .withColumn("_n", count(lit(1)).over(cw))
-      }
-    ranked
+    ranked(df, orderKeys, partitionBy, keyDomain)
       .withColumn("batch_id", ((col("_rank") - 1) / batchSize).cast("long"))
       .filter(col("batch_id") < floor(col("_n") / batchSize))
       .drop("_rank", "_n")

@@ -48,7 +48,6 @@ object Mp4 {
       def u32(o: Int): Long =
         ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
           ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-      def u16(o: Int): Int = ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
       def tag(o: Int): String = new String(b, o, 4, "ISO-8859-1")
 
       /** Children of the byte range [start, end): (fourcc, payloadStart,

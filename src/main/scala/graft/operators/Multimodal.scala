@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.codec.{Flate, Malformed}
+
 /** Multimodal-column plumbing (builder brief): images/audio/video ride as
   * opaque `binary` payload columns with a typed metadata struct; decode /
   * feature-extract steps are imperative per-partition stages. Two REAL
@@ -458,8 +460,8 @@ object Multimodal {
 
   /** L95 extended to images (VERDICT r7 #2): parse the payload as a
     * PNG — signature, chunk walk with per-chunk CRC-32 verification,
-    * IHDR field extraction, multi-IDAT zlib inflate via the JDK
-    * `Inflater` (entropy layer included: dynamic-Huffman streams
+    * IHDR field extraction, multi-IDAT zlib inflate via
+    * `graft.codec.Flate` (entropy layer included: dynamic-Huffman streams
     * decode the same as the stored blocks the gate synthesizes), then
     * per-scanline UNfiltering (None/Sub/Up/Average/Paeth over the
     * reconstructed bytes — the spec's recursive definition) and exact
@@ -522,28 +524,17 @@ object Multimodal {
       case 2 => 3 // rgb
       case _ => return invalid
     }
-    val stride = width * bpp
-    val expect = height.toLong * (1 + stride)
-    if (expect > Int.MaxValue) return invalid
-    val raw = new Array[Byte](expect.toInt)
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(idat.toByteArray)
-      var got = 0
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        if (n == 0 && inf.needsInput()) return invalid // truncated stream
-        got += n
-      }
-      if (got != raw.length) return invalid
-      // a stream with MORE pixels than IHDR declares is malformed too
-      if (!inf.finished() && inf.inflate(new Array[Byte](1)) > 0) return invalid
-    } catch {
-      case _: java.util.zip.DataFormatException => return invalid
-    } finally inf.end()
+    // Long: a lying IHDR (width 2^31−1, RGB) cannot wrap these, and the
+    // exact inflate rejects a size its input cannot hold before allocating
+    val strideL = width.toLong * bpp
+    val expect = height * (1 + strideL)
+    val raw =
+      try Flate.inflate(idat.toByteArray, 0, idat.size(), expect, raw = false)
+      catch { case Malformed => return invalid }
+    val stride = strideL.toInt
     // unfilter in place, row-major, over RECONSTRUCTED bytes
     var pxSum = 0L; var pxEnergy = 0L
-    val recon = new Array[Int](height * stride)
+    val recon = new Array[Int](raw.length - height)
     var r = 0
     while (r < height) {
       val ft = raw(r * (1 + stride)) & 0xff

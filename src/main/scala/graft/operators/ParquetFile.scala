@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Cursor, Gzip, Malformed}
+
 /** Dependency-free Parquet FOOTER walk — the lakehouse container
   * itself. Every table this engine reads or writes is Parquet; at
   * 100 TB the footer is the scan planner's whole world (row-group
@@ -81,36 +83,14 @@ object ParquetFile {
       version: Int, numRows: Long, createdBy: String,
       leaves: Vector[Leaf], rowGroups: Vector[RowGroupMeta])
 
-  private case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
   private def fail(): Nothing = throw Malformed
 
   private val MaxDepth = 64
 
-  // ---- Thrift compact-protocol reader ----
-  private final class TReader(val raw: Array[Byte], var pos: Int,
-                              val end: Int) {
-    def u8(): Int = {
-      if (pos >= end) fail(); val v = raw(pos) & 0xff; pos += 1; v
-    }
-    def varint(): Long = { // ULEB128, ≤10 bytes
-      var v = 0L; var sh = 0; var n = 0
-      while (n < 10) {
-        val x = u8(); v |= (x & 0x7fL) << sh
-        if ((x & 0x80) == 0) return v
-        sh += 7; n += 1
-      }
-      fail()
-    }
-    def zigzag(): Long = { val v = varint(); (v >>> 1) ^ -(v & 1L) }
-    def bytes(): Array[Byte] = {
-      val n = varint()
-      if (n < 0 || n > end - pos) fail()
-      val out = java.util.Arrays.copyOfRange(raw, pos, pos + n.toInt)
-      pos += n.toInt; out
-    }
-    def skipN(n: Int): Unit = { if (n > end - pos) fail(); pos += n }
+  // ---- Thrift compact-protocol reader: a graft.codec.Cursor ----
+  private def bytesOf(r: Cursor): Array[Byte] = {
+    val s = r.take(r.uleb(10))
+    java.util.Arrays.copyOfRange(r.b, s, r.pos)
   }
 
   // compact type ids
@@ -120,25 +100,25 @@ object ParquetFile {
   private val T_LIST = 9; private val T_SET = 10; private val T_MAP = 11
   private val T_STRUCT = 12
 
-  private def skipValue(r: TReader, tpe: Int, depth: Int): Unit = {
+  private def skipValue(r: Cursor, tpe: Int, depth: Int): Unit = {
     if (depth > MaxDepth) fail()
     tpe match {
       case T_BOOL_T | T_BOOL_F => () // value lived in the nibble
-      case T_BYTE              => r.skipN(1)
-      case T_I16 | T_I32 | T_I64 => r.varint(): Unit
-      case T_DOUBLE            => r.skipN(8)
-      case T_BIN               => r.bytes(): Unit
+      case T_BYTE              => r.take(1): Unit
+      case T_I16 | T_I32 | T_I64 => r.uleb(10): Unit
+      case T_DOUBLE            => r.take(8): Unit
+      case T_BIN               => r.take(r.uleb(10)): Unit
       case T_LIST | T_SET =>
         val h = r.u8(); val et = h & 0x0f
         var n = (h >>> 4) & 0x0f
         if (n == 15) {
-          val big = r.varint(); if (big < 0 || big > Int.MaxValue) fail()
+          val big = r.uleb(10); if (big < 0 || big > Int.MaxValue) fail()
           n = big.toInt
         }
         var i = 0
         while (i < n) { skipValue(r, et, depth + 1); i += 1 }
       case T_MAP =>
-        val n = r.varint(); if (n < 0 || n > Int.MaxValue) fail()
+        val n = r.uleb(10); if (n < 0 || n > Int.MaxValue) fail()
         if (n > 0) {
           val kv = r.u8(); val kt = (kv >>> 4) & 0x0f; val vt = kv & 0x0f
           var i = 0L
@@ -152,7 +132,7 @@ object ParquetFile {
     }
   }
 
-  private def skipStruct(r: TReader, depth: Int): Unit = {
+  private def skipStruct(r: Cursor, depth: Int): Unit = {
     if (depth > MaxDepth) fail()
     var lastId = 0L
     var continue = true
@@ -169,7 +149,7 @@ object ParquetFile {
 
   /** Walk one struct, handing each (fieldId, type) to `f`; `f` must
     * consume the value exactly (or call skip via the reader). */
-  private def readStruct(r: TReader, depth: Int)(
+  private def readStruct(r: Cursor, depth: Int)(
       f: (Long, Int) => Unit): Unit = {
     if (depth > MaxDepth) fail()
     var lastId = 0L
@@ -185,18 +165,18 @@ object ParquetFile {
     }
   }
 
-  private def listHeader(r: TReader, expect: Int): Int = {
+  private def listHeader(r: Cursor, expect: Int): Int = {
     val h = r.u8(); val et = h & 0x0f
     if (et != expect) fail()
     var n = (h >>> 4) & 0x0f
     if (n == 15) {
-      val big = r.varint(); if (big < 0 || big > Int.MaxValue) fail()
+      val big = r.uleb(10); if (big < 0 || big > Int.MaxValue) fail()
       n = big.toInt
     }
     n
   }
 
-  private def i32Of(r: TReader, tpe: Int): Int = {
+  private def i32Of(r: Cursor, tpe: Int): Int = {
     if (tpe != T_I32 && tpe != T_I16 && tpe != T_BYTE) fail()
     if (tpe == T_BYTE) r.u8().toByte.toInt
     else {
@@ -205,13 +185,13 @@ object ParquetFile {
       v.toInt
     }
   }
-  private def i64Of(r: TReader, tpe: Int): Long = {
+  private def i64Of(r: Cursor, tpe: Int): Long = {
     if (tpe != T_I64 && tpe != T_I32 && tpe != T_I16) fail()
     r.zigzag()
   }
-  private def strOf(r: TReader, tpe: Int): String = {
+  private def strOf(r: Cursor, tpe: Int): String = {
     if (tpe != T_BIN) fail()
-    new String(r.bytes(), java.nio.charset.StandardCharsets.UTF_8)
+    new String(bytesOf(r), java.nio.charset.StandardCharsets.UTF_8)
   }
 
   private def leLong(b: Array[Byte]): Long = {
@@ -222,7 +202,7 @@ object ParquetFile {
 
   // ---- parquet.thrift structures ----
 
-  private def readStatistics(r: TReader, ptype: Int): Stats = {
+  private def readStatistics(r: Cursor, ptype: Int): Stats = {
     var minL: Option[Long] = None; var maxL: Option[Long] = None
     var nulls: Option[Long] = None
     def decode(raw: Array[Byte]): Option[Long] = ptype match {
@@ -234,15 +214,15 @@ object ParquetFile {
     readStruct(r, 6) { (id, tpe) =>
       id match {
         case 3L => nulls = Some(i64Of(r, tpe))
-        case 5L => if (tpe != T_BIN) fail(); maxL = decode(r.bytes())
-        case 6L => if (tpe != T_BIN) fail(); minL = decode(r.bytes())
+        case 5L => if (tpe != T_BIN) fail(); maxL = decode(bytesOf(r))
+        case 6L => if (tpe != T_BIN) fail(); minL = decode(bytesOf(r))
         case _  => skipValue(r, tpe, 6)
       }
     }
     Stats(minL, maxL, nulls)
   }
 
-  private def readColumnMeta(r: TReader): Chunk = {
+  private def readColumnMeta(r: Cursor): Chunk = {
     var ptype = -1; var codec = -1
     var encodings = Vector.empty[Int]
     var path = Vector.empty[String]
@@ -285,7 +265,7 @@ object ParquetFile {
     val stats =
       if (statsBytesStart < 0) Stats(None, None, None)
       else {
-        val sr = new TReader(r.raw, statsBytesStart, statsBytesEnd)
+        val sr = new Cursor(r.b, statsBytesStart, statsBytesEnd)
         readStatistics(sr, ptype)
       }
     Chunk(path.mkString("."), ptype, codec, encodings, numValues,
@@ -293,7 +273,7 @@ object ParquetFile {
       bloomOff = bloomOff, bloomLen = bloomLen)
   }
 
-  private def readColumnChunk(r: TReader): Chunk = {
+  private def readColumnChunk(r: Cursor): Chunk = {
     var meta: Chunk = null
     var oiOff = -1L; var oiLen = -1; var ciOff = -1L; var ciLen = -1
     readStruct(r, 4) { (id, tpe) =>
@@ -312,7 +292,7 @@ object ParquetFile {
     meta.copy(oiOff = oiOff, oiLen = oiLen, ciOff = ciOff, ciLen = ciLen)
   }
 
-  private def readRowGroup(r: TReader): RowGroupMeta = {
+  private def readRowGroup(r: Cursor): RowGroupMeta = {
     var chunks = Vector.empty[Chunk]
     var numRows = -1L; var totBytes = -1L
     readStruct(r, 3) { (id, tpe) =>
@@ -333,7 +313,7 @@ object ParquetFile {
   /** SchemaElement list → leaves via the num_children depth-first
     * walk, accumulating max def/rep levels along the ancestor chain
     * (OPTIONAL adds a def level, REPEATED adds both). */
-  private def readSchema(r: TReader): Vector[Leaf] = {
+  private def readSchema(r: Cursor): Vector[Leaf] = {
     case class El(name: String, ptype: Int, rep: Int, nChildren: Int)
     val n = listHeader(r, T_STRUCT)
     if (n < 1) fail()
@@ -388,7 +368,7 @@ object ParquetFile {
       ((b(b.length - 6) & 0xffL) << 16) | ((b(b.length - 5) & 0xffL) << 24)
     if (fl <= 0 || fl > b.length - 12) fail()
     val start = b.length - 8 - fl.toInt
-    val r = new TReader(b, start, b.length - 8)
+    val r = new Cursor(b, start, b.length - 8)
     var version = -1; var numRows = -1L; var createdBy = ""
     var leaves: Vector[Leaf] = null
     var rgs = Vector.empty[RowGroupMeta]
@@ -423,7 +403,7 @@ object ParquetFile {
 
   // list header when field type already consumed as T_LIST but the
   // element-type check differs (row_groups: struct elements)
-  private def listHeader2(r: TReader): Int = listHeader(r, T_STRUCT)
+  private def listHeader2(r: Cursor): Int = listHeader(r, T_STRUCT)
 
   /** Never-throw row API. */
   private[graft] def parse(id: Long, b: Array[Byte]): Seq[ColChunkMeta] = {
@@ -477,7 +457,7 @@ object ParquetFile {
       dictNv: Int, dictEnc: Int, v2Nulls: Int = -1, v2Rows: Int = -1,
       v2DefLen: Int = -1, v2RepLen: Int = -1, v2Compressed: Boolean = true)
 
-  private def readPageHeader(r: TReader): PageHdr = {
+  private def readPageHeader(r: Cursor): PageHdr = {
     var ptype = -1; var unc = -1; var cmp = -1
     var crc: Option[Int] = None
     var nv = -1; var enc = -1; var defEnc = -1
@@ -541,28 +521,16 @@ object ParquetFile {
     if (bitWidth < 0 || bitWidth > 31) fail()
     if (n == 0) return
     if (bitWidth == 0) { f(0, n); return } // zero-width: all zeros
-    var pos = start
-    def u8(): Int = {
-      if (pos >= end) fail(); val v = b(pos) & 0xff; pos += 1; v
-    }
-    def varint(): Long = {
-      var v = 0L; var sh = 0; var k = 0
-      while (k < 10) {
-        val x = u8(); v |= (x & 0x7fL) << sh
-        if ((x & 0x80) == 0) return v
-        sh += 7; k += 1
-      }
-      fail()
-    }
+    val c = new Cursor(b, start, end)
     val byteWidth = (bitWidth + 7) >> 3
     var left = n
     while (left > 0) {
-      val h = varint()
+      val h = c.uleb(10)
       if ((h & 1L) == 0L) { // RLE run
         val run = h >>> 1
         if (run <= 0 || run > left) fail()
         var v = 0; var i = 0
-        while (i < byteWidth) { v |= u8() << (8 * i); i += 1 }
+        while (i < byteWidth) { v |= c.u8() << (8 * i); i += 1 }
         f(v, run.toInt); left -= run.toInt
       } else { // bit-packed groups (8 values each, LSB-first)
         val groups = h >>> 1
@@ -572,7 +540,7 @@ object ParquetFile {
         var i = 0L
         while (i < cnt) {
           while (bits < bitWidth) {
-            bitBuf |= u8().toLong << bits; bits += 8
+            bitBuf |= c.u8().toLong << bits; bits += 8
           }
           val v = (bitBuf & ((1L << bitWidth) - 1)).toInt
           bitBuf >>>= bitWidth; bits -= bitWidth
@@ -584,36 +552,14 @@ object ParquetFile {
   }
 
   /** One complete RFC 1952 gzip member occupying exactly
-    * `[off, off+len)` (the Parquet GZIP page framing): CM=8, FLG=0
-    * (what the JDK/parquet-mr writer emits), raw inflate to exactly
-    * `expect` bytes, CRC-32 + ISIZE verified, no slack. */
+    * `[off, off+len)` (the Parquet GZIP page framing) that inflates to
+    * exactly `expect` bytes. */
   private def gunzipPage(b: Array[Byte], off: Int, len: Int,
       expect: Int): Array[Byte] = {
-    if (len < 18 || expect < 0 || expect > MaxPage) fail()
-    if (b(off) != 0x1f.toByte || b(off + 1) != 0x8b.toByte ||
-      b(off + 2) != 8 || b(off + 3) != 0) fail()
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      inf.setInput(b, off + 10, len - 18)
-      val out = new Array[Byte](expect)
-      var w = 0
-      while (w < expect && !inf.finished()) {
-        val n = inf.inflate(out, w, expect - w)
-        if (n == 0 && !inf.finished()) fail()
-        w += n
-      }
-      if (w != expect || !inf.finished() || inf.getRemaining != 0) fail()
-      val crc = new java.util.zip.CRC32()
-      crc.update(out)
-      def le32(o: Int): Long =
-        (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-          ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      if (le32(off + len - 8) != (crc.getValue & 0xffffffffL)) fail()
-      if (le32(off + len - 4) != (expect.toLong & 0xffffffffL)) fail()
-      out
-    } catch {
-      case _: java.util.zip.DataFormatException => fail()
-    } finally inf.end()
+    if (expect < 0 || expect > MaxPage) fail()
+    val (out, end) = Gzip.read(b, off, off + len, expect.toLong)
+    if (end != off + len || out.length != expect) fail()
+    out
   }
 
   private final class DictAgg(val n: Int) {
@@ -669,66 +615,51 @@ object ParquetFile {
     * byte. */
   private def deltaBinaryPacked(b: Array[Byte], pos0: Int, end: Int,
       expect: Int): (Array[Long], Int) = {
-    var pos = pos0
-    def u8(): Int = {
-      if (pos >= end) fail(); val v = b(pos) & 0xff; pos += 1; v
-    }
-    def varint(): Long = {
-      var v = 0L; var sh = 0; var k = 0
-      while (k < 10) {
-        val x = u8(); v |= (x & 0x7fL) << sh
-        if ((x & 0x80) == 0) return v
-        sh += 7; k += 1
-      }
-      fail()
-    }
-    def zigzag(): Long = { val v = varint(); (v >>> 1) ^ -(v & 1L) }
-    val blockSize = varint()
+    val c = new Cursor(b, pos0, end)
+    val blockSize = c.uleb(10)
     if (blockSize <= 0 || blockSize % 128 != 0 ||
       blockSize > (1 << 20)) fail()
-    val mbs = varint()
+    val mbs = c.uleb(10)
     if (mbs <= 0 || mbs > 512 || blockSize % mbs != 0 ||
       (blockSize / mbs) % 32 != 0) fail()
-    val total = varint()
+    val total = c.uleb(10)
     if (total < 0 || total > Int.MaxValue - 8) fail()
     if (expect >= 0 && total != expect) fail()
     val n = total.toInt
     val out = new Array[Long](n)
-    if (n > 0) out(0) = zigzag() else { zigzag(): Unit }
+    if (n > 0) out(0) = c.zigzag() else { c.zigzag(): Unit }
     val mbValues = (blockSize / mbs).toInt
     var idx = 1
     while (idx < n) {
-      val minDelta = zigzag()
+      val minDelta = c.zigzag()
       val widths = new Array[Int](mbs.toInt)
       var i = 0
       while (i < mbs) {
-        widths(i) = u8(); if (widths(i) > 64) fail(); i += 1
+        widths(i) = c.u8(); if (widths(i) > 64) fail(); i += 1
       }
       var mb = 0
       while (mb < mbs) {
         if (idx < n) { // an empty trailing miniblock carries no bytes
           val w = widths(mb)
-          val bytes = mbValues * w / 8
-          if (bytes > end - pos) fail()
+          val p = c.take(mbValues * w / 8)
           var v = 0
           while (v < mbValues) {
             var d = 0L
             var k = 0
             while (k < w) {
               val bitIdx = v * w + k
-              if (((b(pos + (bitIdx >> 3)) >> (bitIdx & 7)) & 1) != 0)
+              if (((b(p + (bitIdx >> 3)) >> (bitIdx & 7)) & 1) != 0)
                 d |= 1L << k
               k += 1
             }
             if (idx < n) { out(idx) = out(idx - 1) + minDelta + d; idx += 1 }
             v += 1
           }
-          pos += bytes
         }
         mb += 1
       }
     }
-    (out, pos)
+    (out, c.pos)
   }
 
   /** DELTA_LENGTH_BYTE_ARRAY (6): lengths as DELTA_BINARY_PACKED,
@@ -797,7 +728,7 @@ object ParquetFile {
     var defMask: Array[Boolean] = null
     var k = h.nv
     var pb: Array[Byte] = null; var p = 0; var pEnd = 0
-    var enc = h.enc
+    val enc = h.enc
     if (h.ptype == 0) { // V1: whole page compressed, 4-byte def prefix
       val t = c.codec match {
         case 0 => if (h.cmp != h.unc) fail(); (b, cstart, cstart + h.cmp)
@@ -920,7 +851,7 @@ object ParquetFile {
   /** Read one page header at `pos`, verify its CRC over the stored
     * bytes, and return (header, content start). */
   private def pageAt(b: Array[Byte], pos: Int): (PageHdr, Int) = {
-    val r = new TReader(b, pos, b.length)
+    val r = new Cursor(b, pos, b.length)
     val h = readPageHeader(r)
     val cstart = r.pos
     if (h.cmp > b.length - cstart) fail()
@@ -1721,7 +1652,7 @@ object ParquetFile {
   private[graft] def readOffsetIndex(b: Array[Byte], off: Long,
       len: Int): Vector[PageLoc] = {
     if (off < 0 || len <= 0 || off + len > b.length) fail()
-    val r = new TReader(b, off.toInt, (off + len).toInt)
+    val r = new Cursor(b, off.toInt, (off + len).toInt)
     var locs = Vector.empty[PageLoc]
     readStruct(r, 1) { (id, tpe) =>
       id match {
@@ -1764,7 +1695,7 @@ object ParquetFile {
   private[graft] def readColumnIndex(b: Array[Byte], off: Long,
       len: Int, ptype: Int): ColIndex = {
     if (off < 0 || len <= 0 || off + len > b.length) fail()
-    val r = new TReader(b, off.toInt, (off + len).toInt)
+    val r = new Cursor(b, off.toInt, (off + len).toInt)
     var nulls = Vector.empty[Boolean]
     var mins = Vector.empty[Option[Long]]
     var maxs = Vector.empty[Option[Long]]
@@ -1779,7 +1710,7 @@ object ParquetFile {
       var out = Vector.empty[Option[Long]]
       var i = 0
       while (i < n) {
-        val raw = r.bytes()
+        val raw = bytesOf(r)
         out :+= (if (raw.isEmpty) None else decode(raw))
         i += 1
       }
@@ -1792,7 +1723,7 @@ object ParquetFile {
           if (et != T_BOOL_T && et != T_BOOL_F) fail()
           var n = (h >>> 4) & 0x0f
           if (n == 15) {
-            val big = r.varint()
+            val big = r.uleb(10)
             if (big < 0 || big > Int.MaxValue) fail()
             n = big.toInt
           }
@@ -1910,7 +1841,7 @@ object ParquetFile {
     * bitset (numBytes, a multiple of the 32-byte block). */
   private[graft] def readBloom(b: Array[Byte], off: Long): Bloom = {
     if (off < 0 || off >= b.length) fail()
-    val r = new TReader(b, off.toInt, b.length)
+    val r = new Cursor(b, off.toInt, b.length)
     var numBytes = -1
     var algoOk = false; var hashOk = false; var cmpOk = false
     def union(mark: => Unit): Unit =

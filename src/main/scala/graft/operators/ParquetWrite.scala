@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.codec.Leb128
+
 /** Dependency-free Parquet WRITER — the inverse of `ParquetFile`:
   * the engine can PRODUCE lakehouse files without parquet-mr, and
   * the gate is the strongest differential available — Spark's own
@@ -40,11 +42,7 @@ object ParquetWrite {
   private final class TWriter {
     val out = new java.io.ByteArrayOutputStream(256)
     def u8(v: Int): Unit = out.write(v & 0xff)
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0L) { u8(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      u8(v.toInt)
-    }
+    def varint(v: Long): Unit = Leb128.write(out, v)
     def zigzag(v: Long): Unit = varint((v << 1) ^ (v >> 63))
     def fieldHeader(lastId: Int, id: Int, tpe: Int): Int = {
       val delta = id - lastId
@@ -87,22 +85,15 @@ object ParquetWrite {
   private def rleHybridEncode(vals: Array[Int],
       bitWidth: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(vals.length / 4 + 8)
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0L) {
-        out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-      }
-      out.write(v.toInt)
-    }
     val byteWidth = (bitWidth + 7) >> 3
     def writeRle(v: Int, run: Int): Unit = {
-      varint(run.toLong << 1)
+      Leb128.write(out, run.toLong << 1)
       var k = 0
       while (k < byteWidth) { out.write((v >>> (8 * k)) & 0xff); k += 1 }
     }
     def writeBitPacked(from: Int, count: Int): Unit = {
       val groups = (count + 7) / 8
-      varint((groups.toLong << 1) | 1L)
+      Leb128.write(out, (groups.toLong << 1) | 1L)
       var bitBuf = 0L; var bits = 0
       var i = 0
       val total = groups * 8

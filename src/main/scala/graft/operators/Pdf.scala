@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Flate, Malformed}
+
 /** PDF structural walk + text extraction — the document family's
   * entry: after web crawls, PDFs are the largest public text source
   * (papers, books, reports), and a corpus pipeline must at least walk
@@ -20,9 +22,8 @@ import org.apache.spark.sql.Dataset
   *    required right after) hold text operators: `(string) Tj` with
   *    the escape subset `\\ \( \)` decoded; a `/Filter /FlateDecode`
   *    stream (how virtually every real-world PDF ships content — r10)
-  *    is zlib-inflated (RFC 1950, JDK `Inflater` — the q149/q178
-  *    precedent) BEFORE the Tj scan, with `/Length` counting the
-  *    ENCODED bytes per the spec; corrupt zlib, trailing garbage
+  *    is zlib-inflated (RFC 1950, `graft.codec.Flate`) BEFORE the Tj
+  *    scan, with `/Length` counting the ENCODED bytes per the spec; corrupt zlib, trailing garbage
   *    after the compressed body, or an inflate past the per-file cap
   *    (zip-bomb stance) → invalid;
   *  - page count = objects whose dict carries `/Type /Page` (not
@@ -37,32 +38,15 @@ object Pdf {
                            n_text_ops: Long, text_len: Long,
                            sum_text_bytes: Long, valid: Boolean)
 
-  private case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
-
   /** Per-file inflated-content cap (zip-bomb stance, q178 precedent). */
   private val MaxInflated = 1L << 24
 
   /** zlib-inflate (RFC 1950) one FlateDecode stream; Malformed on
     * corrupt data, truncation, trailing garbage, or a cap overrun. */
   private def inflateZlib(enc: Array[Byte], budget: Long): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(false)
-    try {
-      inf.setInput(enc)
-      val out = new java.io.ByteArrayOutputStream(enc.length * 2 + 64)
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch { case _: java.util.zip.DataFormatException => throw Malformed }
-        if (n == 0 && !inf.finished()) throw Malformed // truncated
-        if (out.size().toLong + n > budget) throw Malformed
-        out.write(buf, 0, n)
-      }
-      if (inf.getRemaining != 0) throw Malformed // slack after the body
-      out.toByteArray
-    } finally inf.end()
+    val (out, used) = Flate.inflateCapped(enc, 0, enc.length, budget, raw = false)
+    if (used != enc.length) throw Malformed // slack after the body
+    out
   }
 
   private[graft] def parse(id: Long, b: Array[Byte]): PdfInfo = {
@@ -255,14 +239,6 @@ object Pdf {
   }
 
   /** Level-6 zlib (RFC 1950) — the FlateDecode writer side. */
-  private[graft] def deflateZlib(content: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(6, false)
-    try {
-      d.setInput(content); d.finish()
-      val out = new java.io.ByteArrayOutputStream(content.length / 2 + 64)
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      out.toByteArray
-    } finally d.end()
-  }
+  private[graft] def deflateZlib(content: Array[Byte]): Array[Byte] =
+    Flate.deflate(content, 6, raw = false)
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.functions.TextFns
 
 /** Embedding similarity search (builder brief; SURVEY.md §7.2 step 11):
   * brute-force cosine top-k as the correctness baseline, and a

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.codec.{Cursor, Leb128, Malformed}
+
 /** Dependency-free Snappy RAW-block decompressor — Parquet's default
   * page codec (what `spark.write.parquet` produces out of the box),
   * from the public format description (`snappy/format_description.txt`):
@@ -21,13 +23,10 @@ package graft.operators
   * Verified differentially against snappy-java (the reference
   * implementation Spark itself links) — the Jpeg-vs-JDK stance.
   *
-  * Throws `Snappy.Malformed` on any structural violation; callers
+  * Throws `graft.codec.Malformed` on any structural violation; callers
   * behind the codec seam catch it into their `valid=false` rows. */
 object Snappy {
 
-  case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
   private def fail(): Nothing = throw Malformed
 
   /** Decompress `b[off, off+len)`; `expect >= 0` additionally demands
@@ -36,29 +35,19 @@ object Snappy {
   def decompress(b: Array[Byte], off: Int, len: Int,
                  expect: Int = -1): Array[Byte] = {
     if (b == null || off < 0 || len < 0 || off + len > b.length) fail()
-    var pos = off
-    val end = off + len
-    def u8(): Int = { if (pos >= end) fail(); val v = b(pos) & 0xff; pos += 1; v }
-    // preamble varint
-    var outLen = 0L; var sh = 0; var n = 0
-    var done = false
-    while (!done) {
-      if (n >= 5) fail() // 32-bit length ⇒ ≤5 varint bytes
-      val x = u8(); outLen |= (x & 0x7fL) << sh
-      if ((x & 0x80) == 0) done = true
-      sh += 7; n += 1
-    }
-    if (outLen < 0 || outLen > Int.MaxValue - 8) fail()
+    val c = new Cursor(b, off, off + len)
+    val outLen = c.uleb(5) // 32-bit length ⇒ ≤5 varint bytes
+    if (outLen > Int.MaxValue - 8) fail()
     if (expect >= 0 && outLen != expect) fail()
     val out = new Array[Byte](outLen.toInt)
     var w = 0
     def le(nb: Int): Int = {
       var v = 0; var i = 0
-      while (i < nb) { v |= u8() << (8 * i); i += 1 }
+      while (i < nb) { v |= c.u8() << (8 * i); i += 1 }
       v
     }
-    while (pos < end) {
-      val t = u8()
+    while (c.pos < c.end) {
+      val t = c.u8()
       (t & 3) match {
         case 0 => // literal
           var l = (t >>> 2) + 1
@@ -66,14 +55,14 @@ object Snappy {
           // to -1; l <= 0 (incl. the format-forbidden zero-length
           // literal) is structurally invalid — strict-reject
           if (l > 60) l = le(l - 60) + 1
-          if (l <= 0 || l > end - pos || l > out.length - w) fail()
-          System.arraycopy(b, pos, out, w, l)
-          pos += l; w += l
+          if (l <= 0 || l > out.length - w) fail()
+          System.arraycopy(b, c.take(l), out, w, l)
+          w += l
         case kind =>
           var l = 0; var o = 0
           if (kind == 1) {
             l = ((t >>> 2) & 7) + 4
-            o = ((t >>> 5) << 8) | u8()
+            o = ((t >>> 5) << 8) | c.u8()
           } else if (kind == 2) {
             l = (t >>> 2) + 1; o = le(2)
           } else {
@@ -109,9 +98,7 @@ object Snappy {
   def compress(src: Array[Byte]): Array[Byte] = {
     require(src != null, "null input")
     val out = new java.io.ByteArrayOutputStream(src.length / 2 + 32)
-    var v = src.length
-    while ((v & ~0x7f) != 0) { out.write((v & 0x7f) | 0x80); v >>>= 7 }
-    out.write(v)
+    Leb128.write(out, src.length.toLong)
     def emitLiteral(from: Int, len: Int): Unit = {
       if (len == 0) return
       val n = len - 1

@@ -178,7 +178,7 @@ object SuffixArray {
       .select(col("doc_id") +: col("pos").cast("long").as("pos") +:
         ascii(col("col")).cast("long").as("c0") +: seedCols: _*)
 
-    var cur0 = chars.localCheckpoint()
+    val cur0 = chars.localCheckpoint()
     // one driver job for count + code-domain probe (the packed seed
     // is only order-correct for single-byte code points)
     val head0 = cur0.agg(count(lit(1)), max(col("c0"))).head

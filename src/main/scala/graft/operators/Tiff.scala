@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Flate, Malformed}
+
 /** TIFF 6.0 IFD walk — the scientific-imagery container (satellite
   * scenes, scanned books, GeoTIFF rasters): where PNG/JPEG/GIF cover
   * the web's images, archival and remote-sensing corpora ship TIFF —
@@ -29,8 +31,7 @@ import org.apache.spark.sql.Dataset
   *    roots, Clear=256/EOI=257, 9→12-bit widths with the spec's
   *    EARLY-CHANGE bump (width grows when the next free entry is
   *    2^w − 1 — one code sooner than GIF's variant, `Gif.scala`);
-  *    Compression 8 is per-strip zlib (RFC 1950, JDK `Inflater` —
-  *    the q149/q178 precedent).
+  *    Compression 8 is per-strip zlib (RFC 1950, `graft.codec.Flate`).
   *
   * The walk cannot be faked: `sum_pixels` reads the strip bytes
   * through the resolved (offset, count) pairs AND through a real
@@ -49,9 +50,6 @@ object Tiff {
                             sum_height: Long, n_strips: Long,
                             sum_pixels: Long, valid: Boolean)
 
-  private case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
 
   private val MaxDecoded = 1L << 26
 
@@ -151,8 +149,10 @@ object Tiff {
               sumPix += lzwDecodeTiff(b, offs(s).toInt, counts(s).toInt,
                 expBytes)
             case 8 =>
-              sumPix += inflateZlibExact(b, offs(s).toInt, counts(s).toInt,
-                expBytes)
+              val d = Flate.inflate(b, offs(s).toInt, counts(s).toInt,
+                expBytes, raw = false)
+              var j = 0
+              while (j < d.length) { sumPix += d(j) & 0xff; j += 1 }
           }
           sumDecoded += expBytes
           s += 1
@@ -239,31 +239,6 @@ object Tiff {
     if (count != expected) fail()
     if (nBits - bitPos >= 8) fail() // full-byte slack after EOI
     sum
-  }
-
-  /** Per-strip zlib inflate (RFC 1950) of `len` bytes at `off`,
-    * required to expand to EXACTLY `expected` bytes with no trailing
-    * input; returns the decoded byte sum. */
-  private def inflateZlibExact(b: Array[Byte], off: Int, len: Int,
-                               expected: Long): Long = {
-    val inf = new java.util.zip.Inflater(false)
-    try {
-      inf.setInput(b, off, len)
-      val buf = new Array[Byte](8192)
-      var sum = 0L; var total = 0L
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch { case _: java.util.zip.DataFormatException => throw Malformed }
-        if (n == 0 && !inf.finished()) throw Malformed // truncated
-        total += n
-        if (total > expected) throw Malformed
-        var j = 0
-        while (j < n) { sum += buf(j) & 0xff; j += 1 }
-      }
-      if (total != expected || inf.getRemaining != 0) throw Malformed
-      sum
-    } finally inf.end()
   }
 
   /** Map-side decode (the q178 pattern). */

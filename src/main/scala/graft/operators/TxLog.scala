@@ -353,7 +353,6 @@ object TxLog {
   def tailOnce(s: SparkSession, logBase: String, stateBase: String,
       ckptLoc: String, filesPerTrigger: Int): Option[DataFrame] = {
     import org.apache.spark.sql.streaming.Trigger
-    import s.implicits._
     var lastId = -1L
     val q = s.readStream
       .option("maxFilesPerTrigger", filesPerTrigger)

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Gzip, Malformed}
+
 /** WARC (ISO 28500) web-archive codec over multi-member gzip — the
   * INGESTION container of a web-crawl training corpus (Common Crawl
   * ships its crawls as `.warc.gz`: one gzip MEMBER per record, so a
@@ -9,8 +11,8 @@ import org.apache.spark.sql.Dataset
   * member). A 100 TB text pipeline starts at exactly this walk:
   * enumerate members, inflate each independently, parse the WARC
   * header block, and hand the payload to the text stages — which is
-  * the subset implemented here, dependency-free (JDK `Inflater` for
-  * DEFLATE, the q149 PNG precedent).
+  * the subset implemented here, dependency-free (`graft.codec.Gzip`
+  * reads the members).
   *
   * Subset: gzip members with CM=8 and FLG ∈ {0, FNAME} (FEXTRA /
   * FCOMMENT / FHCRC / reserved bits → reject — crawl writers emit
@@ -62,10 +64,6 @@ object Warc {
                                                 memberOff: Long,
                                                 memberLen: Long,
                                                 digest: String)
-
-  private[operators] case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
 
   /** Per-member inflated-size cap: a crafted member whose DEFLATE
     * stream expands past this is rejected before the allocation, not
@@ -129,53 +127,10 @@ object Warc {
       var totalInflated = 0L
       while (off < b.length) {
         val memberOff = off
-        // ---- gzip member header (RFC 1952) ----
-        if (off.toLong + 10 > b.length) throw Malformed
-        if (b(off) != 0x1f.toByte || b(off + 1) != 0x8b.toByte ||
-          b(off + 2) != 8) throw Malformed
-        val flg = b(off + 3) & 0xff
-        if ((flg & ~0x08) != 0) throw Malformed // subset: FNAME only
-        var dataOff = off + 10
-        if ((flg & 0x08) != 0) { // skip NUL-terminated original name
-          while (dataOff < b.length && b(dataOff) != 0) dataOff += 1
-          if (dataOff >= b.length) throw Malformed
-          dataOff += 1
-        }
-        // ---- raw-DEFLATE inflate of one member ----
-        val inf = new java.util.zip.Inflater(true)
-        val rec =
-          try {
-            inf.setInput(b, dataOff, b.length - dataOff)
-            val out = new java.io.ByteArrayOutputStream(4096)
-            val buf = new Array[Byte](8192)
-            while (!inf.finished()) {
-              val n =
-                try inf.inflate(buf)
-                catch { case _: java.util.zip.DataFormatException => throw Malformed }
-              if (n == 0 && !inf.finished()) throw Malformed // truncated
-              if (out.size().toLong + n > MaxInflated) throw Malformed
-              totalInflated += n
-              if (totalInflated > MaxArchiveInflated) throw Malformed
-              out.write(buf, 0, n)
-            }
-            val consumed = inf.getBytesRead
-            val inflated = out.toByteArray
-            // trailer: CRC-32 then ISIZE, both little-endian
-            val tOff = dataOff.toLong + consumed
-            if (tOff + 8 > b.length) throw Malformed
-            def le32(o: Long): Long = {
-              val i = o.toInt
-              (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-                ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-            }
-            val crc = new java.util.zip.CRC32()
-            crc.update(inflated)
-            if (crc.getValue != le32(tOff)) throw Malformed
-            if ((inflated.length.toLong & 0xffffffffL) != le32(tOff + 4))
-              throw Malformed
-            off = (tOff + 8).toInt
-            inflated
-          } finally inf.end()
+        val (rec, next) = Gzip.read(b, off, b.length,
+          math.min(MaxInflated, MaxArchiveInflated - totalInflated))
+        totalInflated += rec.length
+        off = next
         // ---- WARC record: version, headers, payload, closing CRLFs ----
         def lineEnd(from: Int): Int = {
           var i = from
@@ -341,7 +296,7 @@ object Warc {
       }
       rec(rec.length - 4) = '\r'; rec(rec.length - 3) = '\n'
       rec(rec.length - 2) = '\r'; rec(rec.length - 1) = '\n'
-      out.write(gzipMember(rec,
+      out.write(Gzip.member(rec,
         if (i % 4 == 1) Some(s"rec-$i") else None))
       i += 1
     }
@@ -383,35 +338,9 @@ object Warc {
       System.arraycopy(payload, 0, rec, head.length, payload.length)
       rec(rec.length - 4) = '\r'; rec(rec.length - 3) = '\n'
       rec(rec.length - 2) = '\r'; rec(rec.length - 1) = '\n'
-      out.write(gzipMember(rec, None))
+      out.write(Gzip.member(rec, None))
       j += 1
     }
-    out.toByteArray
-  }
-
-  /** One RFC 1952 member around `content`: 10-byte header (+ optional
-    * FNAME), level-6 raw DEFLATE, CRC-32 + ISIZE trailer. */
-  private[graft] def gzipMember(content: Array[Byte],
-                                name: Option[String]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0x1f); out.write(0x8b); out.write(8)
-    out.write(if (name.isDefined) 0x08 else 0x00)
-    out.write(0); out.write(0); out.write(0); out.write(0) // MTIME=0
-    out.write(0); out.write(255) // XFL, OS=unknown — deterministic
-    name.foreach { n => out.write(n.getBytes("ISO-8859-1")); out.write(0) }
-    val d = new java.util.zip.Deflater(6, true)
-    try {
-      d.setInput(content); d.finish()
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    } finally d.end()
-    val crc = new java.util.zip.CRC32()
-    crc.update(content)
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    le32(crc.getValue); le32(content.length.toLong & 0xffffffffL)
     out.toByteArray
   }
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Gzip, Malformed}
+
 /** The full WET derivation in ONE map-side pass — archive bytes to
   * training text (r10, VERDICT r9 #1): gzip member inflate (L126,
   * `Warc.walk`) → WARC framing → HTTP transport strip (L133,
@@ -60,7 +62,7 @@ object Wet {
           }
         }
       } catch {
-        case Warc.Malformed | _: IndexOutOfBoundsException |
+        case Malformed | _: IndexOutOfBoundsException |
             _: NegativeArraySizeException | _: IllegalArgumentException =>
           Nil
       }
@@ -127,7 +129,7 @@ object Wet {
     // every docId%5==0 page ships its body gzip-encoded (r10): the
     // WET text is reachable only through the transport gunzip
     val gz = docId % 5 == 0
-    val body = if (gz) Warc.gzipMember(encoded, None) else encoded
+    val body = if (gz) Gzip.member(encoded, None) else encoded
     val msg = new java.io.ByteArrayOutputStream()
     msg.write(("HTTP/1.1 200 OK\r\n" +
       s"Content-Type: text/html; charset=$label\r\n" +
@@ -137,11 +139,11 @@ object Wet {
     val uri = s"HTTP://${source.toUpperCase(java.util.Locale.ROOT)}" +
       s".Example:80/d/$docId?utm_source=x&b=2&a=1#f"
     val out = new java.io.ByteArrayOutputStream()
-    out.write(Warc.gzipMember(warcRecord("response", uri, msg.toByteArray),
+    out.write(Gzip.member(warcRecord("response", uri, msg.toByteArray),
       None))
     // the metadata member: opaque payload the HTTP stage must skip
     val meta = s"crawl-meta $docId".getBytes("ISO-8859-1")
-    out.write(Warc.gzipMember(warcRecord("metadata", uri, meta),
+    out.write(Gzip.member(warcRecord("metadata", uri, meta),
       if (docId % 4 == 1) Some(s"meta-$docId") else None))
     out.toByteArray
   }

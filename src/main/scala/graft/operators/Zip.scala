@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Flate, Malformed}
+
 /** ZIP container walk — the OTHER bundle format public datasets ship
   * in (tar covers the unix lineage, `Tar.scala`; zip covers the rest:
   * Kaggle exports, ML-dataset mirrors, office/EPUB containers).
@@ -20,7 +22,7 @@ import org.apache.spark.sql.Dataset
   *    the central name byte-for-byte; data ranges must stay below
   *    the central directory;
   *  - methods: 0 = stored (csize == usize) and 8 = deflate (raw,
-  *    JDK `Inflater` — the q149/q178 precedent); the inflated length
+  *    `graft.codec.Flate`); the inflated length
   *    must equal `usize` EXACTLY with no unconsumed input, and the
   *    CRC-32 of the decoded bytes must match the central record —
   *    a reader with the offsets, the inflate or the descriptor
@@ -43,9 +45,6 @@ object Zip {
                            sum_payload: Long, sum_name_len: Long,
                            valid: Boolean)
 
-  private case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
 
   private val MaxDecoded = 1L << 26
 
@@ -129,23 +128,7 @@ object Zip {
               (dataOff + csize).toInt)
           else {
             nDeflated += 1
-            val inf = new java.util.zip.Inflater(true)
-            try {
-              inf.setInput(b, dataOff.toInt, csize.toInt)
-              if (usize > Int.MaxValue - 8) fail()
-              val out = new Array[Byte](usize.toInt)
-              var w = 0
-              while (w < out.length && !inf.finished()) {
-                val n = inf.inflate(out, w, out.length - w)
-                if (n == 0 && !inf.finished()) fail()
-                w += n
-              }
-              if (w != out.length || !inf.finished() ||
-                inf.getRemaining != 0) fail() // exact: no slack
-              out
-            } catch {
-              case _: java.util.zip.DataFormatException => fail()
-            } finally inf.end()
+            Flate.inflate(b, dataOff.toInt, csize.toInt, usize, raw = true)
           }
         val crcCheck = new java.util.zip.CRC32()
         crcCheck.update(payload)

@@ -360,9 +360,6 @@ case class LakeMergeIntoCommand(root: String, targetSchema: StructType,
 
   override def innerChildren: Seq[QueryPlan[_]] = Seq(source)
 
-  private def fail(msg: String): Nothing =
-    throw new UnsupportedOperationException(s"graft-lake MERGE: $msg")
-
   private def boxed(r: Row, idx: Int, t: DataType): Any =
     LakeMergeSql.boxed(r, idx, t)
 
@@ -594,7 +591,7 @@ case class LakeUpdateCommand(root: String, targetSchema: StructType,
     throw new UnsupportedOperationException(s"graft-lake UPDATE: $msg")
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     // pin the scan's snapshot fence BEFORE executing it (ADVICE r14):
     // the merge below resolves its own snapshot — rows appended under
     // a matched key between our scan and that resolution must never

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.operators.{GridOps, Ledger, Tiling}
 import Q._

@@ -711,7 +711,7 @@ object LlmQueries {
     * (fixture-side serialization; the LOG is metadata-sized by design).
     * Returns false when the corpus is empty (no commit dirs written). */
   private def writeDeltaLog(s: SparkSession, dir: String, base: String,
-      v: Int, onePerCommit: Boolean = false): Boolean = {
+      v: Int, onePerCommit: Boolean): Boolean = {
     val last = v - 1
     val d = docs(s, dir).select(col("doc_id"),
       col("n_chars").cast("long").as("n_chars"))
@@ -4352,7 +4352,7 @@ object LlmQueries {
     // (signature, IHDR, one store-mode-deflate IDAT with real chunk
     // CRCs + Adler-32, IEND — with scanline filter r % 5 so all five
     // PNG filters appear), then parsed back by Multimodal.decodePng:
-    // chunk walk + CRC verify + JDK-Inflater inflate + per-scanline
+    // chunk walk + CRC verify + zlib inflate + per-scanline
     // unfilter. The oracle emits the TRUTH pixel sums the raster was
     // synthesized from — filters 1–4 make filtered-byte sums diverge
     // from raw sums, so a parser that skips inflate or unfilter
@@ -5854,7 +5854,7 @@ object LlmQueries {
     // DataFileReader consumes our bytes on executors). Our encoder
     // writes the magic + metadata map + schema JSON + deterministic
     // sync, frames records into 2-record blocks, and raw-DEFLATES
-    // even groups (the inverse of the reader's raw Inflater). The
+    // even groups (the inverse of the reader's raw inflate). The
     // record formulas are q215's, so the SAME oracle gates bytes from
     // the real writer (q215) and from ours — an encoder with the
     // zigzag, the union branch, the block framing, the codec or the
@@ -9848,7 +9848,6 @@ object LlmQueries {
     // (fewer LakePartitions) and the all-null-window law.
     "q259_lake_data_skipping" -> Query(
       (s, dir) => {
-        import s.implicits._
         val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakeds_" +
           s.sparkContext.applicationId + "_" +
           java.lang.Integer.toHexString(dir.hashCode)

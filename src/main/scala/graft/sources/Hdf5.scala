@@ -1,12 +1,12 @@
 package graft.sources
 
-import java.util.zip.{Deflater, Inflater}
+import graft.codec.{Flate, Malformed}
 
 /** Minimal dependency-free HDF5 subset — the container family behind
   * NetCDF-4 (`build_dataset.py:28` / `apply_model.py:110` open
   * HDF5-backed `.nc` through the netCDF4 library; `edu.ucar` artifacts
   * are unresolvable offline, SURVEY §7.8.4, so this is written from
-  * the public HDF5 File Format Specification, the PNG/Inflater
+  * the public HDF5 File Format Specification, the PNG decoder's
   * precedent applied to the scientific container).
   *
   * Scope (the shapes the reference's files actually use):
@@ -15,8 +15,8 @@ import java.util.zip.{Deflater, Inflater}
   *  - object headers v1 and v2, with continuation blocks;
   *  - messages: dataspace v1/v2, datatype (fixed-point + IEEE float,
   *    either endianness), fill value, link, data layout v3
-  *    (contiguous + chunked), filter pipeline v1/v2 (deflate via the
-  *    JDK `Inflater`), symbol table, continuation;
+  *    (contiguous + chunked), filter pipeline v1/v2 (deflate via
+  *    `graft.codec.Flate`), symbol table, continuation;
   *  - dataset reads: whole or BANDED row slices — contiguous is one
   *    seek+read; chunked walks the v1 chunk B-tree and touches only
   *    the chunks intersecting the band (task I/O is O(band), the S1
@@ -47,7 +47,7 @@ object Hdf5 {
     def length: Long = b.length
     def readAt(off: Long, len: Int): Array[Byte] = {
       if (off < 0 || len < 0 || off + len > b.length)
-        throw new Malformed
+        throw Malformed
       java.util.Arrays.copyOfRange(b, off.toInt, off.toInt + len)
     }
   }
@@ -55,13 +55,11 @@ object Hdf5 {
     def length: Long = raf.length()
     def readAt(off: Long, len: Int): Array[Byte] = {
       if (off < 0 || len < 0 || off + len > raf.length())
-        throw new Malformed
+        throw Malformed
       val a = new Array[Byte](len)
       raf.seek(off); raf.readFully(a); a
     }
   }
-
-  final class Malformed extends RuntimeException(null, null, false, false)
 
   private val Undef = -1L // 0xFFFF… addresses parse to -1
 
@@ -87,7 +85,7 @@ object Hdf5 {
   // Little-endian primitives over a fetched block
   // ---------------------------------------------------------------
   private final class Cursor(val b: Array[Byte], var off: Int) {
-    def fail(): Nothing = throw new Malformed
+    def fail(): Nothing = throw Malformed
     def need(n: Int): Unit = if (off < 0 || off + n > b.length) fail()
     def u8(): Int = { need(1); off += 1; b(off - 1) & 0xff }
     def u16(): Int = { need(2); val v = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8); off += 2; v }
@@ -162,7 +160,7 @@ object Hdf5 {
         case _ => None
       }
     } catch {
-      case _: Malformed | _: IllegalArgumentException |
+      case Malformed | _: IllegalArgumentException |
            _: IndexOutOfBoundsException | _: NegativeArraySizeException =>
         None
     }
@@ -177,15 +175,15 @@ object Hdf5 {
       case (0x0011, data) => // symbol table: btree addr + heap addr
         val c = new Cursor(data, 0)
         val btree = c.addr(); val heap = c.addr()
-        if (btree == Undef || heap == Undef) throw new Malformed
+        if (btree == Undef || heap == Undef) throw Malformed
         val heapData = readLocalHeap(src, heap)
         walkGroupBtree(src, btree, heapData, out)
       case (0x0006, data) => // link message
         val c = new Cursor(data, 0)
-        if (c.u8() != 1) throw new Malformed // link msg version
+        if (c.u8() != 1) throw Malformed // link msg version
         val flags = c.u8()
         if ((flags & 0x08) != 0) { // link type present: only 0 = hard
-          if (c.u8() != 0) throw new Malformed
+          if (c.u8() != 0) throw Malformed
         }
         if ((flags & 0x04) != 0) c.skip(8) // creation order
         if ((flags & 0x10) != 0) c.skip(1) // charset
@@ -196,7 +194,7 @@ object Hdf5 {
           case 4 => c.u32().toInt
           case _ => c.u64().toInt
         }
-        if (nameLen < 0 || nameLen > 64 * 1024) throw new Malformed
+        if (nameLen < 0 || nameLen > 64 * 1024) throw Malformed
         val name = new String(c.bytes(nameLen), java.nio.charset.StandardCharsets.UTF_8)
         out += ((name, c.addr()))
       case _ => ()
@@ -207,28 +205,28 @@ object Hdf5 {
   private def readLocalHeap(src: ByteSource, addr: Long): Array[Byte] = {
     val c = new Cursor(src.readAt(addr, 32), 0)
     if (!(c.u8() == 'H' && c.u8() == 'E' && c.u8() == 'A' && c.u8() == 'P'))
-      throw new Malformed
-    if (c.u8() != 0) throw new Malformed // heap version
+      throw Malformed
+    if (c.u8() != 0) throw Malformed // heap version
     c.skip(3)
     val dataSize = c.u64()
     c.u64() // free list head
     val dataAddr = c.addr()
     if (dataSize < 0 || dataSize > 16 * 1024 * 1024 || dataAddr == Undef)
-      throw new Malformed
+      throw Malformed
     src.readAt(dataAddr, dataSize.toInt)
   }
 
   private def walkGroupBtree(src: ByteSource, addr: Long, heap: Array[Byte],
       out: scala.collection.mutable.ArrayBuffer[(String, Long)],
       depth: Int = 0): Unit = {
-    if (depth > 16) throw new Malformed // crafted cycle/ladder guard
+    if (depth > 16) throw Malformed // crafted cycle/ladder guard
     val head = new Cursor(src.readAt(addr, 24), 0)
     if (!(head.u8() == 'T' && head.u8() == 'R' && head.u8() == 'E' && head.u8() == 'E'))
-      throw new Malformed
-    if (head.u8() != 0) throw new Malformed // node type 0 = group
+      throw Malformed
+    if (head.u8() != 0) throw Malformed // node type 0 = group
     val level = head.u8()
     val n = head.u16()
-    if (n < 0 || n > 4096) throw new Malformed
+    if (n < 0 || n > 4096) throw Malformed
     // keys are heap offsets (length-size = 8); children are addresses
     val body = new Cursor(src.readAt(addr + 24, (2 * n + 1) * 8), 0)
     body.u64() // key 0
@@ -236,7 +234,7 @@ object Hdf5 {
     while (i < n) {
       val child = body.addr()
       body.u64() // key i+1
-      if (child == Undef) throw new Malformed
+      if (child == Undef) throw Malformed
       if (level > 0) walkGroupBtree(src, child, heap, out, depth + 1)
       else readSnod(src, child, heap, out)
       i += 1
@@ -247,11 +245,11 @@ object Hdf5 {
       out: scala.collection.mutable.ArrayBuffer[(String, Long)]): Unit = {
     val head = new Cursor(src.readAt(addr, 8), 0)
     if (!(head.u8() == 'S' && head.u8() == 'N' && head.u8() == 'O' && head.u8() == 'D'))
-      throw new Malformed
-    if (head.u8() != 1) throw new Malformed
+      throw Malformed
+    if (head.u8() != 1) throw Malformed
     head.skip(1)
     val n = head.u16()
-    if (n < 0 || n > 4096) throw new Malformed
+    if (n < 0 || n > 4096) throw Malformed
     val body = new Cursor(src.readAt(addr + 8, n * 40), 0)
     var i = 0
     while (i < n) {
@@ -259,7 +257,7 @@ object Hdf5 {
       val oh = body.addr()
       body.skip(24) // cache type, reserved, scratch
       if (nameOff < 0 || nameOff >= heap.length || oh == Undef)
-        throw new Malformed
+        throw Malformed
       var end = nameOff.toInt
       while (end < heap.length && heap(end) != 0) end += 1
       out += ((new String(heap, nameOff.toInt, end - nameOff.toInt,
@@ -275,7 +273,7 @@ object Hdf5 {
     if (first.sameElements("OHDR".getBytes)) {
       // v2: OHDR ver flags [times] [attr counts] chunk0size, msgs, checksum
       val c = new Cursor(src.readAt(addr, 16), 4)
-      if (c.u8() != 2) throw new Malformed
+      if (c.u8() != 2) throw Malformed
       val flags = c.u8()
       var skip = 0
       if ((flags & 0x20) != 0) skip += 16 // times
@@ -288,7 +286,7 @@ object Hdf5 {
         case 4 => hc.u32()
         case _ => hc.u64()
       }
-      if (chunk0 < 0 || chunk0 > 16 * 1024 * 1024) throw new Malformed
+      if (chunk0 < 0 || chunk0 > 16 * 1024 * 1024) throw Malformed
       val msgStart = addr + 6 + skip + szBytes
       val creationOrder = (flags & 0x04) != 0
       parseV2Messages(src, src.readAt(msgStart, chunk0.toInt),
@@ -296,13 +294,13 @@ object Hdf5 {
     } else {
       // v1: ver res nmsgs refcount hdrsize, 4-byte pad, messages
       val c = new Cursor(src.readAt(addr, 16), 0)
-      if (c.u8() != 1) throw new Malformed
+      if (c.u8() != 1) throw Malformed
       c.skip(1)
       val nMsgs = c.u16()
       c.u32() // ref count
       val hdrSize = c.u32()
       if (nMsgs < 0 || nMsgs > 4096 || hdrSize < 0 || hdrSize > 16 * 1024 * 1024)
-        throw new Malformed
+        throw Malformed
       parseV1Messages(src, src.readAt(addr + 16, hdrSize.toInt), nMsgs, msgs)
     }
     msgs.toSeq
@@ -317,18 +315,18 @@ object Hdf5 {
       queue = queue.tail
       while (remaining > 0 && c.off + 8 <= c.b.length) {
         val t = c.u16(); val sz = c.u16(); c.skip(4) // flags + reserved
-        if (sz < 0 || c.off + sz > c.b.length) throw new Malformed
+        if (sz < 0 || c.off + sz > c.b.length) throw Malformed
         val data = c.bytes(sz)
         remaining -= 1
         if (t == 0x0010) { // continuation: offset + length
           val cc = new Cursor(data, 0)
           val off = cc.addr(); val len = cc.u64()
-          if (off == Undef || len < 0 || len > 16 * 1024 * 1024) throw new Malformed
+          if (off == Undef || len < 0 || len > 16 * 1024 * 1024) throw Malformed
           queue = src.readAt(off, len.toInt) :: queue
         } else out += ((t, data))
       }
     }
-    if (remaining > 0) throw new Malformed
+    if (remaining > 0) throw Malformed
   }
 
   private def parseV2Messages(src: ByteSource, block0: Array[Byte],
@@ -340,23 +338,23 @@ object Hdf5 {
       blocksSeen += 1
       // a continuation chain pointing back at itself would loop forever
       // (v1 is bounded by its message COUNT; v2 has no such field)
-      if (blocksSeen > 64) throw new Malformed
+      if (blocksSeen > 64) throw Malformed
       val c = new Cursor(queue.head, 0)
       queue = queue.tail
       // a trailing gap smaller than a message header terminates a block
       while (c.b.length - c.off >= 4 + (if (creationOrder) 2 else 0)) {
         val t = c.u8(); val sz = c.u16(); c.skip(1) // flags
         if (creationOrder) c.skip(2)
-        if (sz < 0 || c.off + sz > c.b.length) throw new Malformed
+        if (sz < 0 || c.off + sz > c.b.length) throw Malformed
         val data = c.bytes(sz)
         if (t == 0x0010) {
           val cc = new Cursor(data, 0)
           val off = cc.addr(); val len = cc.u64()
-          if (off == Undef || len < 8 || len > 16 * 1024 * 1024) throw new Malformed
+          if (off == Undef || len < 8 || len > 16 * 1024 * 1024) throw Malformed
           // continuation blocks in v2 carry OCHK signature + checksum
           val blk = src.readAt(off, len.toInt)
           if (!(blk(0) == 'O' && blk(1) == 'C' && blk(2) == 'H' && blk(3) == 'K'))
-            throw new Malformed
+            throw Malformed
           queue = java.util.Arrays.copyOfRange(blk, 4, blk.length - 4) :: queue
         } else if (t == 0) { // NIL gap inside chunk: skip
         } else out += ((t, data))
@@ -379,10 +377,10 @@ object Hdf5 {
         val flags = c.u8()
         if (ver == 1) c.skip(5)
         else if (ver == 2) c.skip(1) // type
-        else throw new Malformed
-        if (rank < 0 || rank > 8) throw new Malformed
+        else throw Malformed
+        if (rank < 0 || rank > 8) throw Malformed
         dims = Array.fill(rank)(c.u64())
-        if (dims.exists(d => d < 0 || d > Int.MaxValue)) throw new Malformed
+        if (dims.exists(d => d < 0 || d > Int.MaxValue)) throw Malformed
         val _ = flags
       case (0x0003, data) => // datatype
         val c = new Cursor(data, 0)
@@ -390,42 +388,42 @@ object Hdf5 {
         val cls = classAndVersion & 0x0f
         val b0 = c.u8(); c.skip(2) // class bit fields
         val size = c.u32()
-        if (size <= 0 || size > 8) throw new Malformed
+        if (size <= 0 || size > 8) throw Malformed
         elemSize = size.toInt
         little = (b0 & 0x01) == 0
         cls match {
           case 0 => isFloat = false; signed = (b0 & 0x08) != 0
           case 1 => isFloat = true; signed = true
-          case _ => throw new Malformed // out of subset
+          case _ => throw Malformed // out of subset
         }
       case (0x0008, data) => // data layout v3
         val c = new Cursor(data, 0)
-        if (c.u8() != 3) throw new Malformed
+        if (c.u8() != 3) throw Malformed
         layoutClass = c.u8()
         layoutClass match {
           case 1 => // contiguous
             dataAddr = c.addr(); dataSize = c.u64()
           case 2 => // chunked
             val dimensionality = c.u8()
-            if (dimensionality < 2 || dimensionality > 9) throw new Malformed
+            if (dimensionality < 2 || dimensionality > 9) throw Malformed
             btree = c.addr()
             chunkDims = Array.fill(dimensionality - 1)(c.u32().toInt)
             c.u32() // element-size pseudo-dim
-            if (chunkDims.exists(d => d <= 0 || d > (1 << 26))) throw new Malformed
+            if (chunkDims.exists(d => d <= 0 || d > (1 << 26))) throw Malformed
             // chunk ELEMENT COUNT bounded in LONG before any Int
             // product can wrap (the NcClassic ADVICE r8 lesson: a
             // crafted header with dims near 2^26 each wraps cr*cc
             // into a small positive Int and allocates a wrong-size
             // buffer) — 2^26 elements ≈ 512 MB of doubles is already
             // far beyond any sane chunk
-            if (chunkDims.map(_.toLong).product > (1L << 26)) throw new Malformed
-          case _ => throw new Malformed // compact: out of subset
+            if (chunkDims.map(_.toLong).product > (1L << 26)) throw Malformed
+          case _ => throw Malformed // compact: out of subset
         }
       case (0x000B, data) => // filter pipeline
         val c = new Cursor(data, 0)
         val ver = c.u8()
         val n = c.u8()
-        if (ver == 1) c.skip(6) else if (ver != 2) throw new Malformed
+        if (ver == 1) c.skip(6) else if (ver != 2) throw Malformed
         var i = 0
         while (i < n) {
           val id = c.u16()
@@ -437,15 +435,15 @@ object Hdf5 {
           while (j < nVals) { c.u32(); j += 1 }
           if (ver == 1 && nVals % 2 == 1) c.skip(4)
           if (id == 1) deflated = true
-          else throw new Malformed // shuffle/szip/fletcher: out of subset
+          else throw Malformed // shuffle/szip/fletcher: out of subset
           i += 1
         }
       case _ => () // fill value, attributes, mtime…: not needed
     }
-    if (dims == null || elemSize == 0 || layoutClass < 0) throw new Malformed
+    if (dims == null || elemSize == 0 || layoutClass < 0) throw Malformed
     val chunks =
       if (layoutClass == 2) {
-        if (btree == Undef) throw new Malformed
+        if (btree == Undef) throw Malformed
         val buf = scala.collection.mutable.ArrayBuffer.empty[Chunk]
         walkChunkBtree(src, btree, dims.length, buf)
         buf.toSeq
@@ -457,14 +455,14 @@ object Hdf5 {
   private def walkChunkBtree(src: ByteSource, addr: Long, rank: Int,
       out: scala.collection.mutable.ArrayBuffer[Chunk],
       depth: Int = 0): Unit = {
-    if (depth > 16) throw new Malformed // crafted cycle/ladder guard
+    if (depth > 16) throw Malformed // crafted cycle/ladder guard
     val head = new Cursor(src.readAt(addr, 24), 0)
     if (!(head.u8() == 'T' && head.u8() == 'R' && head.u8() == 'E' && head.u8() == 'E'))
-      throw new Malformed
-    if (head.u8() != 1) throw new Malformed // node type 1 = chunk
+      throw Malformed
+    if (head.u8() != 1) throw Malformed // node type 1 = chunk
     val level = head.u8()
     val n = head.u16()
-    if (n < 0 || n > 65536) throw new Malformed
+    if (n < 0 || n > 65536) throw Malformed
     val keySize = 8 + (rank + 1) * 8
     val body = new Cursor(src.readAt(addr + 24, n * (keySize + 8) + keySize), 0)
     var i = 0
@@ -474,10 +472,10 @@ object Hdf5 {
       val offs = Array.fill(rank)(body.u64())
       body.u64() // trailing 0 offset (element-size dim)
       val child = body.addr()
-      if (child == Undef || size < 0) throw new Malformed
+      if (child == Undef || size < 0) throw Malformed
       if (level > 0) walkChunkBtree(src, child, rank, out, depth + 1)
       else out += Chunk(offs, size, child)
-      if (out.length > (1 << 22)) throw new Malformed // chunk-count bound
+      if (out.length > (1 << 22)) throw Malformed // chunk-count bound
       i += 1
     }
   }
@@ -533,18 +531,25 @@ object Hdf5 {
         nRows * w * ds.elemSize)
       decodeElems(ds, raw, 0, nRows * w)
     } else {
+      if (ds.chunkDims.length != 2) throw Malformed
       val cr = ds.chunkDims(0); val cc = ds.chunkDims(1)
       val outArr = new Array[Double](nRows * w)
       ds.chunks.foreach { ch =>
+        // a chunk starts on the chunk grid, inside the dataset
+        if (ch.offsets.length != 2 || (0 to 1).exists(k => ch.offsets(k) < 0 ||
+            ch.offsets(k) >= ds.dims(k) || ch.offsets(k) % ds.chunkDims(k) != 0))
+          throw Malformed
         val r0 = ch.offsets(0).toInt; val c0 = ch.offsets(1).toInt
         val rHi = math.min(r0 + cr, h); val cHi = math.min(c0 + cc, w)
         val rLo = math.max(r0, rowStart)
         val rEnd = math.min(rHi, rowStart + nRows)
         if (rLo < rEnd) {
           val raw0 = src.readAt(ch.addr, ch.size)
-          val raw = if (ds.deflated) inflate(raw0, cr * cc * ds.elemSize)
+          val raw =
+            if (ds.deflated) Flate.inflate(raw0, 0, raw0.length,
+              cr.toLong * cc * ds.elemSize, raw = false)
             else raw0
-          if (raw.length < cr * cc * ds.elemSize) throw new Malformed
+          if (raw.length < cr * cc * ds.elemSize) throw Malformed
           val vals = decodeElems(ds, raw, 0, cr * cc)
           var r = rLo
           while (r < rEnd) {
@@ -559,24 +564,6 @@ object Hdf5 {
       }
       outArr
     }
-  }
-
-  private def inflate(in: Array[Byte], expected: Int): Array[Byte] = {
-    val inf = new Inflater()
-    try {
-      inf.setInput(in)
-      val outArr = new Array[Byte](expected)
-      var total = 0
-      while (total < expected && !inf.finished()) {
-        val n = inf.inflate(outArr, total, expected - total)
-        if (n == 0 && inf.needsInput()) throw new Malformed
-        total += n
-      }
-      if (total != expected) throw new Malformed
-      outArr
-    } catch {
-      case _: java.util.zip.DataFormatException => throw new Malformed
-    } finally inf.end()
   }
 
   // ---------------------------------------------------------------
@@ -906,7 +893,7 @@ object Hdf5 {
               r += 1
             }
             val raw = encodeElems(v, cells)
-            val stored = if (v.deflate > 0) deflateBytes(raw, v.deflate) else raw
+            val stored = if (v.deflate > 0) Flate.deflate(raw, v.deflate, raw = false) else raw
             out.alignTo(8)
             val a = out.pos.toLong
             out.bytesRaw(stored)
@@ -956,20 +943,6 @@ object Hdf5 {
       i += 1
     }
     outB
-  }
-
-  private def deflateBytes(in: Array[Byte], level: Int): Array[Byte] = {
-    val d = new Deflater(level)
-    try {
-      d.setInput(in); d.finish()
-      val buf = new Array[Byte](in.length + 64)
-      val outB = new java.io.ByteArrayOutputStream()
-      while (!d.finished()) {
-        val n = d.deflate(buf)
-        outB.write(buf, 0, n)
-      }
-      outB.toByteArray
-    } finally d.end()
   }
 
   // ---------------------------------------------------------------

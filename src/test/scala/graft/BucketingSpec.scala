@@ -1,8 +1,5 @@
 package graft
 
-
-import org.apache.spark.sql.functions._
-
 /** Bucketing — the co-located-join story for repeated large-table joins
   * at 100 TB (SURVEY.md §7.2 step 11 scale notes): two tables bucketed
   * on the join key join WITHOUT a shuffle on either side. */

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** q61 chunking-geometry laws on the real driver table: contiguous
   * chunk ids, exact window sizes, full coverage with the configured
   * overlap — the invariants a RAG pipeline depends on, checked

@@ -30,7 +30,7 @@ class ClusterMetricsSpec extends SparkSpec {
 
     val q = (1L << quantBits).toDouble
     val expected = vecs
-      .map { case (id, vf) =>
+      .map { case (_, vf) =>
         val v = vf.map(_.toDouble).toArray
         val nn = dot(v, v)
         // cosine-nearest centroid, ties on centroid id (the shared rule)

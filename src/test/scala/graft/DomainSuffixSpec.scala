@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.DomainSuffix
 
 /** Public-suffix registered-domain extraction (q183): every PSL rule

@@ -65,7 +65,6 @@ class FuzzyJoinSpec extends SparkSpec {
   }
 
   test("empty and single-char records do not break variant generation") {
-    import spark.implicits._
     val ws = Seq("", "a", "b", "ab")
     noException should be thrownBy run(ws, 2)
     run(ws, 2) shouldBe brute(ws, 2)

@@ -23,7 +23,7 @@ class HardNegativesSpec extends SparkSpec {
         1L << p else 0L
     }.sum
     rows.flatMap { case (id, lab, e) =>
-      val cands = rows.filter { case (id2, lab2, e2) =>
+      val cands = rows.filter { case (_, lab2, e2) =>
         lab2 != lab && bucket(e2) == bucket(e)
       }.map { case (id2, _, e2) =>
         (id2, dot(e, e2) / math.sqrt(dot(e, e) * dot(e2, e2)))

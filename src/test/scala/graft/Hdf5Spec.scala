@@ -1,5 +1,6 @@
 package graft
 
+import graft.codec.Malformed
 import graft.sources.Hdf5
 import graft.sources.Hdf5._
 import org.scalatest.funsuite.AnyFunSuite
@@ -111,7 +112,7 @@ class Hdf5Spec extends AnyFunSuite with Matchers {
           // if structure still parses, data access must also be total
           f.datasets.foreach { ds =>
             try Hdf5.readRows(new ArraySource(mutated), ds, 0, ds.dims(0).toInt)
-            catch { case _: Hdf5.Malformed | _: IllegalArgumentException => () }
+            catch { case Malformed | _: IllegalArgumentException => () }
           }
         }
       }

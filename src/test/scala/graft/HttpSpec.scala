@@ -1,5 +1,6 @@
 package graft
 
+import graft.codec.Gzip
 import graft.operators.{Http, Warc}
 
 /** HTTP-in-WARC parsing (q185): formula round-trip, framing
@@ -41,7 +42,7 @@ class HttpSpec extends SparkSpec {
 
   test("Content-Encoding gzip: decoded stats, corrupt/unknown reject (r10)") {
     val raw = Array.tabulate(50)(k => ((k * 7) % 256).toByte)
-    val gz = Warc.gzipMember(raw, None)
+    val gz = Gzip.member(raw, None)
     val msg = (("HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n" +
       s"Content-Encoding: gzip\r\nContent-Length: ${gz.length}\r\n\r\n")
       .getBytes("ISO-8859-1")) ++ gz
@@ -120,7 +121,7 @@ class HttpSpec extends SparkSpec {
       .valid shouldBe false
     // gzip UNDER chunked: CE first, TE outermost — decoded stats
     val raw = Array.tabulate(64)(k => ((k * 11) % 256).toByte)
-    val gz = Warc.gzipMember(raw, None)
+    val gz = Gzip.member(raw, None)
     val chunks = gz.grouped(9).map { g =>
       Integer.toHexString(g.length) + "\r\n" +
         new String(g, "ISO-8859-1") + "\r\n"

@@ -411,4 +411,20 @@ class LakeDistributedMergeSpec extends SparkSpec {
     asSet(lake(c)) shouldBe asSet(lake(a))
     digests(c) shouldBe digests(a)
   }
+
+  test("probeHint schema: a fresh hint must be exactly (_graft_k: long, " +
+      "_graft_file: string); a reordered hint fails before any commit") {
+    val base = buildTable(2, 50)
+    val v = TxLog.nextVersion(s"$base/log", s"$base/ckpt") - 1L
+    val reordered = spark.read.format("graft-lake").option("path", base)
+      .option("asOf", v.toString).option("withFilePath", "true").load()
+      .select(col("_graft_file"), col("doc_id").as("_graft_k"))
+    intercept[IllegalArgumentException] {
+      LakeMaintenance.mergeDistributed(spark, base,
+        changesOf(Seq((10L, Some(1L), "x")), Seq.empty, Seq.empty,
+          matchedOp = "u"), "doc_id", probeHint = Some((reordered, v)))
+    }.getMessage should include(
+      "probe hint must be exactly (_graft_k: long, _graft_file: string)")
+    TxLog.commitVersions(s"$base/log").max shouldBe v // no commit
+  }
 }

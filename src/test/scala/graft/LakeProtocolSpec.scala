@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{LakeMaintenance, ParquetFile, ParquetWrite, TxLog}
+import graft.operators.{LakeMaintenance, ParquetWrite, TxLog}
 
 /** Round-14 log-lifecycle laws: the PROTOCOL action (Delta's
   * minReader/minWriter feature gate — refuse loudly, never mis-read),

@@ -86,7 +86,7 @@ class LakeStatsSpec extends SparkSpec {
       "counts, a small lake table broadcast-joins at PLAN time (AQE " +
       "off), and pruning shrinks the estimate") {
     val base = build(8)
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     // the optimizer's view: logical stats come from the scan
     def planStats(df: DataFrame): BigInt =
       df.queryExecution.optimizedPlan.stats.sizeInBytes

@@ -11,7 +11,6 @@ import graft.operators.ParquetFile
   * array<double>, required elements (no null-row def level), and the
   * never-throw contract on malformed and flat inputs. */
 class ParquetListSpec extends SparkSpec {
-  import spark.implicits._
 
   private def tmpDir(): String = {
     val d = java.nio.file.Files.createTempDirectory("plist").toFile

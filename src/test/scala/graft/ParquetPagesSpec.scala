@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.ParquetFile
 import java.nio.file.Files
-import org.apache.spark.sql.Row
 
 /** Parquet data-page decode (q203/q204): values read back through the
   * footer offsets from files Spark's real writer produced — PLAIN and

@@ -411,8 +411,8 @@ class ParquetWriteSpec extends SparkSpec {
     (score, w, emb)
   }
 
-  private def fpFileBytes(n: Int, rowsPerGroup: Int = Int.MaxValue,
-      pageRows: Int = Int.MaxValue): Array[Byte] = {
+  private def fpFileBytes(n: Int, rowsPerGroup: Int,
+      pageRows: Int): Array[Byte] = {
     val (score, w, emb) = fpSample(n)
     ParquetWrite.writeFile(Seq(
       ParquetWrite.LongCol("id", (0 until n).map(_.toLong).toArray),

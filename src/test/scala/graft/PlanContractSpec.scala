@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-
 /** Physical-plan contracts for the load-bearing queries: the invariants
   * PLANS.md narrates, pinned as tests so a plan regression (lost
   * broadcast, new unpartitioned window, fact-side shuffle, codegen

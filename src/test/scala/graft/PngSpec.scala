@@ -209,4 +209,19 @@ class PngSpec extends SparkSpec {
     an[IllegalArgumentException] should be thrownBy
       Multimodal.pngPayloadBytes(Array.fill(11000 * 6)(0), 6) // LEN overflow
   }
+
+  test("lying IHDR sizes with valid CRCs: invalid, no Int overflow, and " +
+      "no raster allocated before the inflate") {
+    import HostileInputSpec.{allocatedBy, lyingPng}
+    // 2^30 RGB and 2^31-1 gray overflowed width*bpp and 1+stride in Int;
+    // 2^28 x 3 gray asked for an 805 MB raster from a 12-byte stream
+    Seq((1 << 30, 1, 2), (Int.MaxValue, 1, 0), (1 << 28, 3, 0)).foreach {
+      case (w, h, ct) =>
+        val png = lyingPng(w, h, ct)
+        png.length shouldBe 69
+        var info: Multimodal.PngInfo = null
+        allocatedBy { info = Multimodal.parsePng(1L, png) } should be < (16L << 20)
+        withClue(s"${w}x$h colorType $ct: ") { info.valid shouldBe false }
+    }
+  }
 }

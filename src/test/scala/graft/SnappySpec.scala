@@ -1,5 +1,6 @@
 package graft
 
+import graft.codec.Malformed
 import graft.operators.Snappy
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -58,7 +59,7 @@ class SnappySpec extends AnyFunSuite with Matchers {
 
   test("declared-length mismatch rejects") {
     val c = org.xerial.snappy.Snappy.compress("hello world hello".getBytes)
-    intercept[Snappy.Malformed.type] {
+    intercept[Malformed.type] {
       Snappy.decompress(c, 0, c.length, 5)
     }
   }
@@ -68,7 +69,7 @@ class SnappySpec extends AnyFunSuite with Matchers {
     for (keep <- 0 until c.length) {
       val t = java.util.Arrays.copyOf(c, keep)
       try { Snappy.decompress(t, 0, t.length): Unit }
-      catch { case Snappy.Malformed => () }
+      catch { case Malformed => () }
     }
     val rnd = new scala.util.Random(3)
     for (_ <- 0 until 500) {
@@ -76,10 +77,10 @@ class SnappySpec extends AnyFunSuite with Matchers {
       val i = rnd.nextInt(m.length)
       m(i) = (m(i) ^ (1 << rnd.nextInt(8))).toByte
       try { Snappy.decompress(m, 0, m.length): Unit }
-      catch { case Snappy.Malformed => () }
+      catch { case Malformed => () }
     }
     // zero offset copy is malformed
-    intercept[Snappy.Malformed.type] {
+    intercept[Malformed.type] {
       // preamble: 4; literal of 1 byte; copy kind 1 with offset 0
       Snappy.decompress(Array[Byte](4, 0, 'a', 0x05, 0), 0, 5)
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.SuffixArray
 
 /** Suffix-array construction by prefix doubling (L121): brute-force
@@ -142,7 +140,7 @@ class SuffixArraySpec extends SparkSpec {
       val c = t.take(cap)
       val ivs = spans.collect { case (d, s, e) if d == id => (s, e) }
         .sorted
-      var cov = 0; var out = new StringBuilder; var k = 0L
+      var cov = 0; val out = new StringBuilder; var k = 0L
       ivs.foreach { case (s, e) =>
         if (k == 0 || s > cov) { out ++= c.substring(cov.min(s), s); k += 1 }
         cov = cov.max(e)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.queries.Q
 
 /** Differential gate for the native 128-bit decimal-sum aggregate: dsum

@@ -1,5 +1,6 @@
 package graft
 
+import graft.codec.Gzip
 import graft.operators.Warc
 
 /** WARC / multi-member gzip codec (q178): round-trip differential
@@ -91,7 +92,7 @@ class WarcSpec extends SparkSpec {
   test("zip-bomb guard: a member inflating past the cap is rejected") {
     // 17 MiB of zeros deflates to ~17 KB; the parser must reject on the
     // inflated-size cap BEFORE materializing the 17 MiB
-    val bomb = Warc.gzipMember(new Array[Byte](17 << 20), None)
+    val bomb = Gzip.member(new Array[Byte](17 << 20), None)
     Warc.parse(1L, bomb).valid shouldBe false
   }
 
@@ -110,7 +111,7 @@ class WarcSpec extends SparkSpec {
         System.arraycopy(head, 0, rec, 0, head.length)
         rec(rec.length - 4) = '\r'; rec(rec.length - 3) = '\n'
         rec(rec.length - 2) = '\r'; rec(rec.length - 1) = '\n'
-        out.write(Warc.gzipMember(rec, None))
+        out.write(Gzip.member(rec, None))
       }
       out.toByteArray
     }
@@ -122,11 +123,11 @@ class WarcSpec extends SparkSpec {
     val rec = ("WARC/1.0\r\nWARC-Type: response\r\n" +
       "WARC-Target-URI: http://h.example/\r\nContent-Length: 2\r\n\r\n" +
       "ab\r\n\r\nX").getBytes("ISO-8859-1")
-    Warc.parse(1L, Warc.gzipMember(rec, None)).valid shouldBe false
+    Warc.parse(1L, Gzip.member(rec, None)).valid shouldBe false
     val ok = ("WARC/1.0\r\nWARC-Type: response\r\n" +
       "WARC-Target-URI: http://h.example/\r\nContent-Length: 2\r\n\r\n" +
       "ab\r\n\r\n").getBytes("ISO-8859-1")
-    val r = Warc.parse(1L, Warc.gzipMember(ok, None))
+    val r = Warc.parse(1L, Gzip.member(ok, None))
     r.valid shouldBe true
     r.n_records shouldBe 1L
     r.sum_payload_bytes shouldBe ('a'.toLong + 'b'.toLong)
@@ -140,7 +141,7 @@ class WarcSpec extends SparkSpec {
         "Content-Length: 0").filterNot(_.startsWith(drop))
       val rec = ("WARC/1.0\r\n" + lines.mkString("", "\r\n", "\r\n") +
         "\r\n\r\n\r\n").getBytes("ISO-8859-1")
-      Warc.parse(1L, Warc.gzipMember(rec, None)).valid shouldBe false
+      Warc.parse(1L, Gzip.member(rec, None)).valid shouldBe false
     }
   }
 
