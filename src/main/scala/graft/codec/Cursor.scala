@@ -4,10 +4,18 @@ package graft.codec
   * throws [[Malformed]]. Plain fields and primitive results, so a
   * varint read allocates nothing. */
 final class Cursor(val b: Array[Byte], var pos: Int, val end: Int) {
+  def this(b: Array[Byte], pos: Int) = this(b, pos, b.length)
   def u8(): Int = {
     if (pos >= end) throw Malformed
     val v = b(pos) & 0xff; pos += 1; v
   }
+  /** Fixed-width reads, laid out and signed as in [[Bytes]]. */
+  def le16(): Int = Bytes.le16(b, take(2))
+  def be16(): Int = Bytes.be16(b, take(2))
+  def le32(): Int = Bytes.le32(b, take(4))
+  def be32(): Int = Bytes.be32(b, take(4))
+  def le64(): Long = Bytes.le64(b, take(8))
+  def be64(): Long = Bytes.be64(b, take(8))
   /** Unsigned LEB128 of at most `maxBytes` bytes. */
   def uleb(maxBytes: Int): Long = {
     var v = 0L; var sh = 0; var n = 0

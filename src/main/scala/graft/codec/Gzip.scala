@@ -7,10 +7,6 @@ import java.util.zip.CRC32
   * bits reject); the CRC-32 and ISIZE trailer is checked. */
 object Gzip {
 
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-
   /** One member that starts at `off` and ends at or before `end`, with at
     * most `cap` content bytes. Returns the content and the offset just
     * past the member's trailer. */
@@ -31,7 +27,7 @@ object Gzip {
     val t = p + used
     val crc = new CRC32()
     crc.update(out)
-    if (le32(b, t) != crc.getValue || le32(b, t + 4) != out.length.toLong)
+    if (Bytes.le32(b, t) != crc.getValue.toInt || Bytes.le32(b, t + 4) != out.length)
       throw Malformed
     (out, t + 8)
   }
@@ -49,11 +45,7 @@ object Gzip {
     out.write(Flate.deflate(content, 6, raw = true))
     val crc = new CRC32()
     crc.update(content)
-    def put32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    put32(crc.getValue); put32(content.length.toLong)
+    Bytes.putLe32(out, crc.getValue.toInt); Bytes.putLe32(out, content.length)
     out.toByteArray
   }
 }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
+import graft.codec.Bytes
+
 /** Native Catalyst expression: per-window energies of a binary payload
   * interpreted as little-endian signed int16 PCM —
   * `energies[w] = Σ_{i<win} s(w·win+i)²` over full windows (partial
@@ -45,7 +47,7 @@ case class PcmEnergies(child: Expression, win: Int)
       var i = 0
       while (i < win) {
         val o = (w * win + i) * 2
-        val s = ((bytes(o) & 0xff) | (bytes(o + 1) << 8)).toShort.toLong
+        val s = Bytes.le16(bytes, o).toShort.toLong
         acc += s * s
         i += 1
       }
@@ -71,7 +73,7 @@ case class PcmEnergies(child: Expression, win: Int)
           long $acc = 0L;
           for (int $i = 0; $i < $win; $i++) {
             int $o = ($w * $win + $i) * 2;
-            long $s = (short) (($bytes[$o] & 0xff) | ($bytes[$o + 1] << 8));
+            long $s = (short) graft.codec.Bytes.le16($bytes, $o);
             $acc += $s * $s;
           }
           $out[$w] = $acc;

@@ -11,6 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+import graft.codec.Bytes
+
 /** Native Catalyst expression: token n-gram shingle hashes
   * (`array<string>` → `array<bigint>`) — the portable-hash pipeline
   * `transform(shingles(toks, n), s => hash60(s) % mod)` fused into one
@@ -103,11 +105,8 @@ object ShingleHashes {
       }
       md.reset()
       val d = md.digest(sb.toString.getBytes(StandardCharsets.UTF_8))
-      // first 15 hex digits = bytes 0..6 + the high nibble of byte 7
-      var h = 0L
-      var b = 0
-      while (b < 7) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-      h = (h << 4) | ((d(7) & 0xf0L) >>> 4)
+      // first 15 hex digits = the top 60 bits of the big-endian first 8 bytes
+      val h = Bytes.be64(d, 0) >>> 4
       out(i) = if (mod > 0) h % mod else h
       i += 1
     }

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
-import graft.codec.{Cursor, Flate, Leb128, Malformed}
+import scala.util.control.NonFatal
+
+import graft.codec.{Bytes, Cursor, Flate, Leb128, Malformed}
 
 /** Avro Object Container File walk — the ROW-format counterpart to
   * the Parquet reader (`ParquetFile.scala`): Kafka archives, CDC
@@ -428,10 +430,7 @@ object Avro {
     val d = Snappy.decompress(b, off, comp, outLen.toInt)
     val crc = new java.util.zip.CRC32()
     crc.update(d)
-    val c = off + comp
-    val want = ((b(c) & 0xffL) << 24) | ((b(c + 1) & 0xffL) << 16) |
-      ((b(c + 2) & 0xffL) << 8) | (b(c + 3) & 0xffL)
-    if ((crc.getValue & 0xffffffffL) != want) fail()
+    if (crc.getValue.toInt != Bytes.be32(b, off + comp)) fail()
     d
   }
 
@@ -646,9 +645,9 @@ object Avro {
     val c = Snappy.compress(body)
     val crc = new java.util.zip.CRC32()
     crc.update(body, 0, body.length)
-    val v = crc.getValue
-    c ++ Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-      (v >>> 8).toByte, v.toByte)
+    val out = new java.io.ByteArrayOutputStream(c.length + 4)
+    out.write(c); Bytes.putBe32(out, crc.getValue.toInt)
+    out.toByteArray
   }
 
   /** Serialize one NESTED-schema OCF (r12 — the writer mirror of the
@@ -809,7 +808,7 @@ object Avro {
             sumSlen, sumSbytes, valid = true)
         } finally r.close()
       } catch {
-        case _: Throwable =>
+        case NonFatal(_) =>
           AvroDeepInfo(id, 0L, 0L, 0L, 0L, 0L, 0L, 0L, valid = false)
       }
     })
@@ -852,7 +851,7 @@ object Avro {
             sumSbytes, valid = true)
         } finally r.close()
       } catch {
-        case _: Throwable =>
+        case NonFatal(_) =>
           AvroInfo(id, 0L, 0L, 0L, 0L, 0L, 0L, valid = false)
       }
     })

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Bytes, Malformed}
+
 /** GIF (87a/89a) decoder — the third still-image codec of the media
   * family (PNG q149/q153's sibling): web crawls are full of GIFs, and
   * a multimodal corpus pipeline must at least structurally validate
@@ -38,10 +40,6 @@ object Gif {
                            gct_colors: Long, sum_pixel_indices: Long,
                            max_index: Long, valid: Boolean)
 
-  private case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
-
   /** Max decoded pixels per file (zip-bomb stance, q178 precedent). */
   private val MaxPixels = 1L << 26
 
@@ -51,10 +49,9 @@ object Gif {
     try {
       def fail(): Nothing = throw Malformed
       def u8(o: Int): Int = { if (o >= b.length) fail(); b(o) & 0xff }
-      def u16(o: Int): Int = u8(o) | (u8(o + 1) << 8)
       val hdr = new String(b, 0, 6, "ISO-8859-1")
       if (hdr != "GIF87a" && hdr != "GIF89a") fail()
-      val sw = u16(6); val sh = u16(8)
+      val sw = Bytes.le16(b, 6); val sh = Bytes.le16(b, 8)
       if (sw == 0 || sh == 0) fail()
       val packed = u8(10)
       var off = 13
@@ -80,8 +77,8 @@ object Gif {
             while (len != 0) { off += 1 + len; len = u8(off) }
             off += 1
           case 0x2C =>
-            val left = u16(off + 1); val top = u16(off + 3)
-            val w = u16(off + 5); val h = u16(off + 7)
+            val left = Bytes.le16(b, off + 1); val top = Bytes.le16(b, off + 3)
+            val w = Bytes.le16(b, off + 5); val h = Bytes.le16(b, off + 7)
             val ip = u8(off + 9)
             if (w == 0 || h == 0) fail()
             if (left.toLong + w > sw || top.toLong + h > sh) fail()
@@ -224,9 +221,8 @@ object Gif {
     require(nFrames >= 1 && nFrames <= 16, s"bad nFrames $nFrames")
     require(seed >= 0, s"bad seed $seed")
     val out = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
     out.write("GIF89a".getBytes("ISO-8859-1"))
-    u16(w); u16(h)
+    Bytes.putLe16(out, w); Bytes.putLe16(out, h)
     out.write(0x80 | 0x01) // GCT present, size bits = 1 → 4 colors
     out.write(0); out.write(0)
     var c = 0
@@ -239,7 +235,8 @@ object Gif {
     out.write(0)
     var f = 0
     while (f < nFrames) {
-      out.write(0x2C); u16(0); u16(0); u16(w); u16(h); out.write(0)
+      out.write(0x2C); Bytes.putLe16(out, 0); Bytes.putLe16(out, 0)
+      Bytes.putLe16(out, w); Bytes.putLe16(out, h); out.write(0)
       out.write(2) // LZW min code size
       val pixels = new Array[Byte](w * h)
       var p = 0

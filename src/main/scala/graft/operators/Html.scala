@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.Malformed
+
 /** HTML visible-text extraction — the WET step of a web-crawl corpus:
   * the record payloads the L126 WARC walk (q178) hands over are HTML,
   * and the text the pipeline trains on is what a renderer would SHOW —
@@ -38,10 +40,6 @@ object Html {
                             n_paragraphs: Long, n_links: Long, n_hosts: Long,
                             text_len: Long, sum_text_bytes: Long,
                             valid: Boolean)
-
-  private case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
 
   private def isNameChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Cursor, Malformed}
+
 /** Baseline JPEG (ITU-T T.81 / JFIF) decoder — the entropy-coded image
   * format the earlier rounds documented as library-blocked, implemented
   * dependency-free: marker segment walk (SOI/APPn/COM/DQT/DHT/SOF0/
@@ -48,8 +50,6 @@ object Jpeg {
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
 
-  private final class Malformed(msg: String = "") extends RuntimeException(msg)
-
   /** Canonical Huffman table: decode one symbol bit-by-bit (max 16). */
   private final class Huff(counts: Array[Int], symbols: Array[Byte]) {
     // mincode/maxcode/valptr per length (T.81 F.2.2.3)
@@ -78,7 +78,7 @@ object Jpeg {
         code = (code << 1) | br.bit()
         l += 1
       }
-      throw new Malformed
+      throw Malformed
     }
   }
 
@@ -89,13 +89,13 @@ object Jpeg {
     private var nBits = 0
     def bit(): Int = {
       if (nBits == 0) {
-        if (pos >= b.length) throw new Malformed
+        if (pos >= b.length) throw Malformed
         var v = b(pos) & 0xff; pos += 1
         if (v == 0xff) {
-          if (pos >= b.length) throw new Malformed
+          if (pos >= b.length) throw Malformed
           val m = b(pos) & 0xff
           if (m == 0x00) pos += 1 // stuffed FF
-          else throw new Malformed // marker inside entropy read = overrun
+          else throw Malformed // marker inside entropy read = overrun
           v = 0xff
         }
         cur = v; nBits = 8
@@ -110,9 +110,9 @@ object Jpeg {
     }
     def alignAndExpectRestart(n: Int): Unit = {
       nBits = 0
-      if (pos + 2 > b.length) throw new Malformed
+      if (pos + 2 > b.length) throw Malformed
       if ((b(pos) & 0xff) != 0xff || (b(pos + 1) & 0xff) != (0xd0 + n))
-        throw new Malformed
+        throw Malformed
       pos += 2
     }
   }
@@ -169,12 +169,8 @@ object Jpeg {
     * sequential-baseline JPEG. */
   def decode(b: Array[Byte]): Option[Decoded] = {
     try {
-      var pos = 0
-      def u8(): Int = {
-        if (pos >= b.length) throw new Malformed
-        pos += 1; b(pos - 1) & 0xff
-      }
-      def u16(): Int = { val hi = u8(); (hi << 8) | u8() }
+      val cur = new Cursor(b, 0, b.length)
+      import cur.{be16 => u16, u8}
       if (u8() != 0xff || u8() != 0xd8) return None // SOI
       val quant = new Array[Array[Int]](4)
       val huffDc = new Array[Huff](4)
@@ -191,31 +187,31 @@ object Jpeg {
         var marker = u8()
         while (marker == 0xff) marker = u8()
         marker match {
-          case 0xd9 => throw new Malformed // EOI before any scan
+          case 0xd9 => throw Malformed // EOI before any scan
           case 0xdb => // DQT
-            val segLen = u16(); val end = pos + segLen - 2
-            while (pos < end) {
+            val segLen = u16(); val end = cur.pos + segLen - 2
+            while (cur.pos < end) {
               val pqtq = u8()
               val pq = pqtq >> 4; val tq = pqtq & 15
-              if (pq > 1 || tq > 3) throw new Malformed
+              if (pq > 1 || tq > 3) throw Malformed
               val t = new Array[Int](64)
               var i = 0
               while (i < 64) { t(i) = if (pq == 1) u16() else u8(); i += 1 }
               if (quant(tq) == null) nQuant += 1
               quant(tq) = t
             }
-            if (pos != end) throw new Malformed
+            if (cur.pos != end) throw Malformed
           case 0xc4 => // DHT
-            val segLen = u16(); val end = pos + segLen - 2
-            while (pos < end) {
+            val segLen = u16(); val end = cur.pos + segLen - 2
+            while (cur.pos < end) {
               val tcth = u8()
               val tc = tcth >> 4; val th = tcth & 15
-              if (tc > 1 || th > 3) throw new Malformed
+              if (tc > 1 || th > 3) throw Malformed
               val counts = new Array[Int](16)
               var total = 0
               var i = 0
               while (i < 16) { counts(i) = u8(); total += counts(i); i += 1 }
-              if (total > 256) throw new Malformed
+              if (total > 256) throw Malformed
               val syms = new Array[Byte](total)
               i = 0
               while (i < total) { syms(i) = u8().toByte; i += 1 }
@@ -223,51 +219,51 @@ object Jpeg {
               if (tc == 0) { if (huffDc(th) == null) nHuff += 1; huffDc(th) = h }
               else { if (huffAc(th) == null) nHuff += 1; huffAc(th) = h }
             }
-            if (pos != end) throw new Malformed
+            if (cur.pos != end) throw Malformed
           case 0xdd => // DRI
-            if (u16() != 4) throw new Malformed
+            if (u16() != 4) throw Malformed
             restartInterval = u16()
           case 0xc0 => // SOF0 — sequential baseline
-            val segLen = u16(); val end = pos + segLen - 2
+            val segLen = u16(); val end = cur.pos + segLen - 2
             precision = u8()
             height = u16(); width = u16()
             val nc = u8()
             if (precision != 8 || nc < 1 || nc > 4 ||
-              width <= 0 || height <= 0) throw new Malformed
+              width <= 0 || height <= 0) throw Malformed
             comps = Array.fill(nc) {
               val id = u8(); val hv = u8(); val tq = u8()
               val c = Component(id, hv >> 4, hv & 15, tq)
               if (c.h < 1 || c.h > 4 || c.v < 1 || c.v > 4 || tq > 3)
-                throw new Malformed
+                throw Malformed
               c
             }
-            if (pos != end) throw new Malformed
+            if (cur.pos != end) throw Malformed
             sofSeen = true
           case 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 |
                0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
             return None // extended/progressive/arithmetic: out of scope
           case 0xda => // SOS — one interleaved baseline scan
-            if (!sofSeen) throw new Malformed
-            val segLen = u16(); val end = pos + segLen - 2
+            if (!sofSeen) throw Malformed
+            val segLen = u16(); val end = cur.pos + segLen - 2
             val ns = u8()
-            if (ns != comps.length) throw new Malformed // non-interleaved: out of scope
+            if (ns != comps.length) throw Malformed // non-interleaved: out of scope
             var i = 0
             while (i < ns) {
               val cs = u8(); val tdta = u8()
-              val comp = comps.find(_.id == cs).getOrElse(throw new Malformed)
+              val comp = comps.find(_.id == cs).getOrElse(throw Malformed)
               comp.td = tdta >> 4; comp.ta = tdta & 15
               i += 1
             }
-            pos += 3 // Ss/Se/Ah-Al (fixed for baseline)
-            if (pos != end) throw new Malformed
-            result = decodeScan(b, pos, width, height, comps, quant,
+            cur.pos += 3 // Ss/Se/Ah-Al (fixed for baseline)
+            if (cur.pos != end) throw Malformed
+            result = decodeScan(b, cur.pos, width, height, comps, quant,
               huffDc, huffAc, restartInterval, nQuant, nHuff, precision)
           case 0x01 => () // TEM, standalone
           case mk if mk >= 0xd0 && mk <= 0xd7 => () // stray RST, standalone
           case _ => // APPn / COM / anything with a length: skip
             val len = u16()
-            if (len < 2 || pos + len - 2 > b.length) throw new Malformed
-            pos += len - 2
+            if (len < 2 || cur.pos + len - 2 > b.length) throw Malformed
+            cur.pos += len - 2
         }
       }
       Some(result)
@@ -277,9 +273,8 @@ object Jpeg {
       // memory pressure as a data-quality signal. Allocation size is
       // instead bounded up front (pixel cap + Long plane-byte cap in
       // decodeScan), so a crafted header can't reach a huge allocation.
-      case e@(_: Malformed | _: ArrayIndexOutOfBoundsException |
-           _: NegativeArraySizeException) =>
-        if (sys.props.contains("graft.jpeg.debug")) e.printStackTrace()
+      case Malformed | _: ArrayIndexOutOfBoundsException |
+           _: NegativeArraySizeException =>
         None
     }
   }
@@ -289,14 +284,14 @@ object Jpeg {
                          huffDc: Array[Huff], huffAc: Array[Huff],
                          restartInterval: Int, nQuant: Int, nHuff: Int,
                          precision: Int): Decoded = {
-    if (width.toLong * height > 64L * 1024 * 1024) throw new Malformed
+    if (width.toLong * height > 64L * 1024 * 1024) throw Malformed
     val hMax = comps.map(_.h).max
     val vMax = comps.map(_.v).max
     val mcusX = (width + 8 * hMax - 1) / (8 * hMax)
     val mcusY = (height + 8 * vMax - 1) / (8 * vMax)
     comps.foreach { c =>
       if (quant(c.tq) == null || huffDc(c.td) == null || huffAc(c.ta) == null)
-        throw new Malformed
+        throw Malformed
     }
     // per-component plane at its own sampled resolution; the pixel cap
     // above does NOT bound plane sizes (a 2^26×1 image with 4×
@@ -306,7 +301,7 @@ object Jpeg {
     val planeH = comps.map(c => mcusY * 8 * c.v)
     comps.indices.foreach { i =>
       if (planeW(i).toLong * planeH(i) > 128L * 1024 * 1024)
-        throw new Malformed
+        throw Malformed
     }
     val planes = Array.tabulate(comps.length)(i =>
       new Array[Int](planeW(i) * planeH(i)))
@@ -336,7 +331,7 @@ object Jpeg {
             // one 8x8 block
             java.util.Arrays.fill(coef, 0.0)
             val sDc = huffDc(c.td).decode(br)
-            if (sDc > 15) throw new Malformed
+            if (sDc > 15) throw Malformed
             val diff = extendSign(br.bits(sDc), sDc)
             dcPred(ci) += diff
             coef(0) = dcPred(ci).toDouble * qt(0)
@@ -349,7 +344,7 @@ object Jpeg {
                 else k = 64 // EOB
               } else {
                 k += r
-                if (k > 63) throw new Malformed
+                if (k > 63) throw Malformed
                 coef(Zigzag(k)) = extendSign(br.bits(s), s).toDouble * qt(k)
                 k += 1
               }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.{Bytes, Malformed}
+
 /** MP4 / ISO-BMFF (ISO 14496-12) box-walk codec — the VIDEO container
   * entry of the media family (images: PNG q149 / JPEG q153, audio: WAV
   * q126 / MP3 q154–q170). A training pipeline ingesting video never
@@ -37,17 +39,11 @@ object Mp4 {
                            sum_key_rel_off: Long, sum_key_bytes: Long,
                            valid: Boolean)
 
-  private case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
-
   private[graft] def parse(id: Long, b: Array[Byte]): Mp4Info = {
     val invalid = Mp4Info(id, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L,
       valid = false)
     try {
-      def u32(o: Int): Long =
-        ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-          ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+      def u32(o: Int): Long = Bytes.be32(b, o) & 0xffffffffL
       def tag(o: Int): String = new String(b, o, 4, "ISO-8859-1")
 
       /** Children of the byte range [start, end): (fourcc, payloadStart,
@@ -234,11 +230,12 @@ object Mp4 {
     val nChunks = (nSamples + spc - 1) / spc
     val duration = deltas.map(_.toLong).sum
 
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be16(v: Int): Array[Byte] =
-      Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+    def be32(v: Long): Array[Byte] = {
+      val o = new java.io.ByteArrayOutputStream(4); Bytes.putBe32(o, v.toInt); o.toByteArray
+    }
+    def be16(v: Int): Array[Byte] = {
+      val o = new java.io.ByteArrayOutputStream(2); Bytes.putBe16(o, v); o.toByteArray
+    }
     def cat(parts: Array[Byte]*): Array[Byte] = {
       val o = new java.io.ByteArrayOutputStream()
       parts.foreach(o.write)

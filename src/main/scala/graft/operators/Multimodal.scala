@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.codec.{Flate, Malformed}
+import graft.codec.{Bytes, Flate, Malformed}
 
 /** Multimodal-column plumbing (builder brief): images/audio/video ride as
   * opaque `binary` payload columns with a typed metadata struct; decode /
@@ -195,9 +195,8 @@ object Multimodal {
   }
 
   private[graft] def parseWav(id: Long, b: Array[Byte]): WavInfo = {
-    def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    def u32(o: Int): Long = (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
+    def u16(o: Int): Int = Bytes.le16(b, o)
+    def u32(o: Int): Long = Bytes.le32(b, o) & 0xffffffffL
     def tag(o: Int): String =
       new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
     val invalid = WavInfo(id, 0, 0, 0L, 0, 0, -1L, 0L, 0L, valid = false)
@@ -227,7 +226,7 @@ object Multimodal {
             nSamples = sz / 2
             var i = 0
             while (i + 1 < sz) {
-              val s = ((b(body + i + 1) << 8) | (b(body + i) & 0xff)).toLong
+              val s = Bytes.le16(b, body + i).toShort.toLong
               energy += s * s
               i += 2
             }
@@ -421,38 +420,26 @@ object Multimodal {
     val adler = new java.util.zip.Adler32()
     adler.update(scan)
     val out = new java.io.ByteArrayOutputStream(64 + scanLen)
-    def be32(v: Long): Unit = {
-      out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-    }
     def chunk(typ: String, data: Array[Byte]): Unit = {
-      be32(data.length.toLong)
+      Bytes.putBe32(out, data.length)
       val tb = typ.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
       out.write(tb); out.write(data, 0, data.length)
       val crc = new java.util.zip.CRC32()
       crc.update(tb); crc.update(data)
-      be32(crc.getValue)
+      Bytes.putBe32(out, crc.getValue.toInt)
     }
     out.write(Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A)
       .map(_.toByte), 0, 8)
     val ihdr = new java.io.ByteArrayOutputStream(13)
-    def ihdrBe32(v: Int): Unit = {
-      ihdr.write((v >> 24) & 0xff); ihdr.write((v >> 16) & 0xff)
-      ihdr.write((v >> 8) & 0xff); ihdr.write(v & 0xff)
-    }
-    ihdrBe32(w); ihdrBe32(h)
+    Bytes.putBe32(ihdr, w); Bytes.putBe32(ihdr, h)
     ihdr.write(8); ihdr.write(0); ihdr.write(0); ihdr.write(0); ihdr.write(0)
     chunk("IHDR", ihdr.toByteArray)
     val idat = new java.io.ByteArrayOutputStream(11 + scanLen)
     idat.write(0x78); idat.write(0x01)                      // zlib header
     idat.write(0x01)                                        // BFINAL|stored
-    idat.write(scanLen & 0xff); idat.write((scanLen >> 8) & 0xff)
-    val nlen = 65535 - scanLen
-    idat.write(nlen & 0xff); idat.write((nlen >> 8) & 0xff)
+    Bytes.putLe16(idat, scanLen); Bytes.putLe16(idat, 65535 - scanLen)
     idat.write(scan, 0, scanLen)
-    val ad = adler.getValue
-    idat.write(((ad >> 24) & 0xff).toInt); idat.write(((ad >> 16) & 0xff).toInt)
-    idat.write(((ad >> 8) & 0xff).toInt); idat.write((ad & 0xff).toInt)
+    Bytes.putBe32(idat, adler.getValue.toInt)
     chunk("IDAT", idat.toByteArray)
     chunk("IEND", Array.emptyByteArray)
     out.toByteArray
@@ -484,8 +471,7 @@ object Multimodal {
 
   private[graft] def parsePng(id: Long, b: Array[Byte]): PngInfo = {
     val invalid = PngInfo(id, 0, 0, 0, 0, 0, 0L, 0L, 0L, valid = false)
-    def u32(o: Int): Long = ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+    def u32(o: Int): Long = Bytes.be32(b, o) & 0xffffffffL
     val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
     if (b.length < 8 + 12 || !(0 until 8).forall(i => (b(i) & 0xff) == sig(i)))
       return invalid

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
-import graft.codec.{Cursor, Gzip, Malformed}
+import scala.util.control.NonFatal
+
+import graft.codec.{Bytes, Cursor, Gzip, Malformed}
 
 /** Dependency-free Parquet FOOTER walk — the lakehouse container
   * itself. Every table this engine reads or writes is Parquet; at
@@ -194,10 +196,12 @@ object ParquetFile {
     new String(bytesOf(r), java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  private def leLong(b: Array[Byte]): Long = {
-    var v = 0L; var i = b.length - 1
-    while (i >= 0) { v = (v << 8) | (b(i) & 0xffL); i -= 1 }
-    v
+  /** A PLAIN-encoded min/max bound as a long: INT32 sign-extends,
+    * INT64 as is; other types carry none. */
+  private def boundOf(raw: Array[Byte], ptype: Int): Option[Long] = ptype match {
+    case 1 => if (raw.length != 4) fail(); Some(Bytes.le32(raw, 0).toLong)
+    case 2 => if (raw.length != 8) fail(); Some(Bytes.le64(raw, 0))
+    case _ => None
   }
 
   // ---- parquet.thrift structures ----
@@ -205,17 +209,11 @@ object ParquetFile {
   private def readStatistics(r: Cursor, ptype: Int): Stats = {
     var minL: Option[Long] = None; var maxL: Option[Long] = None
     var nulls: Option[Long] = None
-    def decode(raw: Array[Byte]): Option[Long] = ptype match {
-      case 1 => if (raw.length != 4) fail()
-                Some(leLong(raw).toInt.toLong) // INT32 sign-extends
-      case 2 => if (raw.length != 8) fail(); Some(leLong(raw))
-      case _ => None
-    }
     readStruct(r, 6) { (id, tpe) =>
       id match {
         case 3L => nulls = Some(i64Of(r, tpe))
-        case 5L => if (tpe != T_BIN) fail(); maxL = decode(bytesOf(r))
-        case 6L => if (tpe != T_BIN) fail(); minL = decode(bytesOf(r))
+        case 5L => if (tpe != T_BIN) fail(); maxL = boundOf(bytesOf(r), ptype)
+        case 6L => if (tpe != T_BIN) fail(); minL = boundOf(bytesOf(r), ptype)
         case _  => skipValue(r, tpe, 6)
       }
     }
@@ -364,10 +362,9 @@ object ParquetFile {
     def ascii(off: Int): String =
       new String(b, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
     if (ascii(0) != "PAR1" || ascii(b.length - 4) != "PAR1") fail()
-    val fl = (b(b.length - 8) & 0xffL) | ((b(b.length - 7) & 0xffL) << 8) |
-      ((b(b.length - 6) & 0xffL) << 16) | ((b(b.length - 5) & 0xffL) << 24)
+    val fl = Bytes.le32(b, b.length - 8)
     if (fl <= 0 || fl > b.length - 12) fail()
-    val start = b.length - 8 - fl.toInt
+    val start = b.length - 8 - fl
     val r = new Cursor(b, start, b.length - 8)
     var version = -1; var numRows = -1L; var createdBy = ""
     var leaves: Vector[Leaf] = null
@@ -421,7 +418,7 @@ object ParquetFile {
             m.rowGroups.length, valid = true)
         }
       }
-    } catch { case _: Throwable => Seq(invalid) }
+    } catch { case NonFatal(_) => Seq(invalid) }
   }
 
   /** Map-side decode over (media_id, file bytes) rows. */
@@ -529,8 +526,7 @@ object ParquetFile {
       if ((h & 1L) == 0L) { // RLE run
         val run = h >>> 1
         if (run <= 0 || run > left) fail()
-        var v = 0; var i = 0
-        while (i < byteWidth) { v |= c.u8() << (8 * i); i += 1 }
+        val v = Bytes.le(b, c.take(byteWidth), byteWidth).toInt
         f(v, run.toInt); left -= run.toInt
       } else { // bit-packed groups (8 values each, LSB-first)
         val groups = h >>> 1
@@ -575,21 +571,15 @@ object ParquetFile {
       ptype: Int)(cb: (Long, Long, Long) => Unit): Int = {
     var pos = pos0
     def need(n: Int): Unit = if (n > end - pos) fail()
-    def le32(): Long = {
-      need(4)
-      val v = (b(pos) & 0xffL) | ((b(pos + 1) & 0xffL) << 8) |
-        ((b(pos + 2) & 0xffL) << 16) | ((b(pos + 3) & 0xffL) << 24)
-      pos += 4; v
-    }
+    def le32(): Int = { need(4); val v = Bytes.le32(b, pos); pos += 4; v }
     var i = 0
     ptype match {
       case 1 => // INT32, sign-extended
-        while (i < k) { cb(le32().toInt.toLong, 0L, 0L); i += 1 }
+        while (i < k) { cb(le32().toLong, 0L, 0L); i += 1 }
       case 2 => // INT64
         while (i < k) {
           need(8)
-          var v = 0L; var j = 7
-          while (j >= 0) { v = (v << 8) | (b(pos + j) & 0xffL); j -= 1 }
+          val v = Bytes.le64(b, pos)
           pos += 8; cb(v, 0L, 0L); i += 1
         }
       case 6 => // BYTE_ARRAY: 4-byte LE length + bytes
@@ -598,7 +588,7 @@ object ParquetFile {
           if (l < 0 || l > end - pos) fail()
           var s = 0L; var j = 0
           while (j < l) { s += b(pos + j) & 0xff; j += 1 }
-          pos += l.toInt; cb(0L, l, s); i += 1
+          pos += l; cb(0L, l.toLong, s); i += 1
         }
       case _ => fail() // BOOLEAN/FLOAT/DOUBLE/INT96/FLBA out of subset
     }
@@ -742,8 +732,7 @@ object ParquetFile {
       if (lf.maxDef == 1) {
         if (h.defEnc != 3) fail()
         if (4 > pEnd - p) fail()
-        val len = (pb(p) & 0xff) | ((pb(p + 1) & 0xff) << 8) |
-          ((pb(p + 2) & 0xff) << 16) | ((pb(p + 3) & 0xff) << 24)
+        val len = Bytes.le32(pb, p)
         p += 4
         if (len < 0 || len > pEnd - p) fail()
         defMask = new Array[Boolean](h.nv)
@@ -997,18 +986,8 @@ object ParquetFile {
       ptype: Int, qs: Double)(cb: Long => Unit): Int = {
     var pos = pos0
     def need(n: Int): Unit = if (n > end - pos) fail()
-    def le32(): Int = {
-      need(4)
-      val v = (b(pos) & 0xff) | ((b(pos + 1) & 0xff) << 8) |
-        ((b(pos + 2) & 0xff) << 16) | ((b(pos + 3) & 0xff) << 24)
-      pos += 4; v
-    }
-    def le64(): Long = {
-      need(8)
-      var v = 0L; var j = 7
-      while (j >= 0) { v = (v << 8) | (b(pos + j) & 0xffL); j -= 1 }
-      pos += 8; v
-    }
+    def le32(): Int = { need(4); val v = Bytes.le32(b, pos); pos += 4; v }
+    def le64(): Long = { need(8); val v = Bytes.le64(b, pos); pos += 8; v }
     var i = 0
     ptype match {
       case 1 => while (i < k) { cb(le32().toLong); i += 1 }
@@ -1055,8 +1034,7 @@ object ParquetFile {
     val out = new Array[Int](n)
     if (maxLvl == 0) return (out, p0)
     if (4 > pEnd - p0) fail()
-    val len = (pb(p0) & 0xff) | ((pb(p0 + 1) & 0xff) << 8) |
-      ((pb(p0 + 2) & 0xff) << 16) | ((pb(p0 + 3) & 0xff) << 24)
+    val len = Bytes.le32(pb, p0)
     val p = p0 + 4
     if (len < 0 || len > pEnd - p) fail()
     fillLevels(pb, p, p + len, n, maxLvl, out)
@@ -1214,7 +1192,7 @@ object ParquetFile {
       }
       ListColSumRow(id, colPath, acc(0), acc(1), acc(2), acc(3),
         acc(4), acc(5), valid = true)
-    } catch { case _: Throwable => invalid }
+    } catch { case NonFatal(_) => invalid }
   }
 
   /** Map-side list-column decode over (media_id, file bytes) rows —
@@ -1273,10 +1251,6 @@ object ParquetFile {
           (d, 0, d.length)
       }
 
-    def le32(buf: Array[Byte], p: Int): Int =
-      (buf(p) & 0xff) | ((buf(p + 1) & 0xff) << 8) |
-        ((buf(p + 2) & 0xff) << 16) | ((buf(p + 3) & 0xff) << 24)
-
     /** Decode k PLAIN cells starting at p; cb(longV, binV, dblV). */
     def plainCells(buf: Array[Byte], p0: Int, pEnd: Int, k: Int)(
         cb: (Long, Array[Byte], Double) => Unit): Int = {
@@ -1286,29 +1260,22 @@ object ParquetFile {
         c.ptype match {
           case 1 =>
             if (4 > pEnd - p) fail()
-            cb(le32(buf, p).toLong, null, 0.0); p += 4
+            cb(Bytes.le32(buf, p).toLong, null, 0.0); p += 4
           case 2 =>
             if (8 > pEnd - p) fail()
-            var v = 0L; var j = 7
-            while (j >= 0) {
-              v = (v << 8) | (buf(p + j) & 0xffL); j -= 1
-            }
-            cb(v, null, 0.0); p += 8
+            cb(Bytes.le64(buf, p), null, 0.0); p += 8
           case 4 =>
             if (4 > pEnd - p) fail()
             cb(0L, null,
-              java.lang.Float.intBitsToFloat(le32(buf, p)).toDouble)
+              java.lang.Float.intBitsToFloat(Bytes.le32(buf, p)).toDouble)
             p += 4
           case 5 =>
             if (8 > pEnd - p) fail()
-            var v = 0L; var j = 7
-            while (j >= 0) {
-              v = (v << 8) | (buf(p + j) & 0xffL); j -= 1
-            }
-            cb(0L, null, java.lang.Double.longBitsToDouble(v)); p += 8
+            cb(0L, null, java.lang.Double.longBitsToDouble(Bytes.le64(buf, p)))
+            p += 8
           case 6 =>
             if (4 > pEnd - p) fail()
-            val l = le32(buf, p); p += 4
+            val l = Bytes.le32(buf, p); p += 4
             if (l < 0 || l > pEnd - p) fail()
             cb(0L, java.util.Arrays.copyOfRange(buf, p, p + l), 0.0)
             p += l
@@ -1442,14 +1409,6 @@ object ParquetFile {
         buf.clear()
       }
     }
-    def le32(bb: Array[Byte], p: Int): Int =
-      (bb(p) & 0xff) | ((bb(p + 1) & 0xff) << 8) |
-        ((bb(p + 2) & 0xff) << 16) | ((bb(p + 3) & 0xff) << 24)
-    def le64(bb: Array[Byte], p: Int): Long = {
-      var v = 0L; var j = 7
-      while (j >= 0) { v = (v << 8) | (bb(p + j) & 0xffL); j -= 1 }
-      v
-    }
     var pos = c.dataPageOff.toInt
     if (c.dataPageOff < 0 || c.dataPageOff >= b.length) fail()
     var remaining = c.numValues
@@ -1480,11 +1439,11 @@ object ParquetFile {
       var j = 0
       while (j < k) {
         vals(j) = c.ptype match {
-          case 2 => java.lang.Long.valueOf(le64(pb, p2 + 8 * j))
+          case 2 => java.lang.Long.valueOf(Bytes.le64(pb, p2 + 8 * j))
           case 5 => java.lang.Double.valueOf(
-            java.lang.Double.longBitsToDouble(le64(pb, p2 + 8 * j)))
+            java.lang.Double.longBitsToDouble(Bytes.le64(pb, p2 + 8 * j)))
           case _ => java.lang.Float.valueOf(
-            java.lang.Float.intBitsToFloat(le32(pb, p2 + 4 * j)))
+            java.lang.Float.intBitsToFloat(Bytes.le32(pb, p2 + 4 * j)))
         }
         j += 1
       }
@@ -1699,19 +1658,13 @@ object ParquetFile {
     var nulls = Vector.empty[Boolean]
     var mins = Vector.empty[Option[Long]]
     var maxs = Vector.empty[Option[Long]]
-    def decode(raw: Array[Byte]): Option[Long] = ptype match {
-      case 1 => if (raw.length != 4) fail()
-                Some(leLong(raw).toInt.toLong)
-      case 2 => if (raw.length != 8) fail(); Some(leLong(raw))
-      case _ => None
-    }
     def boundList(): Vector[Option[Long]] = {
       val n = listHeader(r, T_BIN)
       var out = Vector.empty[Option[Long]]
       var i = 0
       while (i < n) {
         val raw = bytesOf(r)
-        out :+= (if (raw.isEmpty) None else decode(raw))
+        out :+= (if (raw.isEmpty) None else boundOf(raw, ptype))
         i += 1
       }
       out
@@ -1780,24 +1733,16 @@ object ParquetFile {
     val P3 = 0x165667B19E3779F9L; val P4 = 0x85EBCA77C2B2AE63L
     val P5 = 0x27D4EB2F165667C5L
     val len = b.length
-    def le64(o: Int): Long = {
-      var v = 0L; var i = 7
-      while (i >= 0) { v = (v << 8) | (b(o + i) & 0xffL); i -= 1 }
-      v
-    }
-    def le32(o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
     def rotl(x: Long, r: Int): Long = (x << r) | (x >>> (64 - r))
     var h = 0L
     var i = 0
     if (len >= 32) {
       var v1 = P1 + P2; var v2 = P2; var v3 = 0L; var v4 = -P1
       while (i + 32 <= len) {
-        v1 = rotl(v1 + le64(i) * P2, 31) * P1
-        v2 = rotl(v2 + le64(i + 8) * P2, 31) * P1
-        v3 = rotl(v3 + le64(i + 16) * P2, 31) * P1
-        v4 = rotl(v4 + le64(i + 24) * P2, 31) * P1
+        v1 = rotl(v1 + Bytes.le64(b, i) * P2, 31) * P1
+        v2 = rotl(v2 + Bytes.le64(b, i + 8) * P2, 31) * P1
+        v3 = rotl(v3 + Bytes.le64(b, i + 16) * P2, 31) * P1
+        v4 = rotl(v4 + Bytes.le64(b, i + 24) * P2, 31) * P1
         i += 32
       }
       h = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
@@ -1808,11 +1753,11 @@ object ParquetFile {
     } else h = P5 // seed 0 + P5
     h += len
     while (i + 8 <= len) {
-      h = rotl(h ^ (rotl(le64(i) * P2, 31) * P1), 27) * P1 + P4
+      h = rotl(h ^ (rotl(Bytes.le64(b, i) * P2, 31) * P1), 27) * P1 + P4
       i += 8
     }
     if (i + 4 <= len) {
-      h = rotl(h ^ (le32(i) * P1), 23) * P2 + P3
+      h = rotl(h ^ ((Bytes.le32(b, i) & 0xffffffffL) * P1), 23) * P2 + P3
       i += 4
     }
     while (i < len) {
@@ -1825,10 +1770,9 @@ object ParquetFile {
 
   /** xxHash64 of a value's PLAIN encoding (8-byte LE for INT64). */
   private[graft] def bloomHashLong(v: Long): Long = {
-    val raw = new Array[Byte](8)
-    var i = 0
-    while (i < 8) { raw(i) = ((v >>> (8 * i)) & 0xff).toByte; i += 1 }
-    xxHash64(raw)
+    val raw = new java.io.ByteArrayOutputStream(8)
+    Bytes.putLe64(raw, v)
+    xxHash64(raw.toByteArray)
   }
 
   private val BloomSalt = Array(0x47b6137b, 0x44974d91, 0x8824ad5b,
@@ -1878,9 +1822,7 @@ object ParquetFile {
     while (i < 8) {
       val bit = (x * BloomSalt(i)) >>> 27
       val o = base + i * 4
-      val word = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-        ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-      if (((word >>> bit) & 1) == 0) return false
+      if (((Bytes.le32(b, o) >>> bit) & 1) == 0) return false
       i += 1
     }
     true
@@ -1913,7 +1855,7 @@ object ParquetFile {
             valid = true)
         }
       } catch {
-        case _: Throwable =>
+        case NonFatal(_) =>
           Seq(BloomProbeRow(id, 0L, might = false, valid = false))
       }
     })
@@ -2008,7 +1950,7 @@ object ParquetFile {
       }
       PagePrunedRow(id, matched, sumKey, sumVal, pagesKey,
         pagesKeyScanned, pagesVal, pagesValScanned, valid = true)
-    } catch { case _: Throwable => invalid }
+    } catch { case NonFatal(_) => invalid }
   }
 
   /** Map-side page-pruned read over (media_id, file bytes) rows. */
@@ -2072,7 +2014,7 @@ object ParquetFile {
       }
       PrunedReadRow(id, matched, sumKey, sumVal,
         m.rowGroups.length.toLong, scanned, valid = true)
-    } catch { case _: Throwable => invalid }
+    } catch { case NonFatal(_) => invalid }
   }
 
   /** Map-side pruned read over (media_id, file bytes) rows. */
@@ -2102,7 +2044,7 @@ object ParquetFile {
         ColumnSumRow(id, p, a(0), a(1), a(2), a(3), a(4), valid = true)
       }
     } catch {
-      case _: Throwable =>
+      case NonFatal(_) =>
         Seq(ColumnSumRow(id, "", 0L, 0L, 0L, 0L, 0L, valid = false))
     }
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.codec.Leb128
+import graft.codec.{Bytes, Leb128}
 
 /** Dependency-free Parquet WRITER — the inverse of `ParquetFile`:
   * the engine can PRODUCE lakehouse files without parquet-mr, and
@@ -71,10 +71,7 @@ object ParquetWrite {
   }
 
   private def leLong(v: Long): Array[Byte] = {
-    val b = new Array[Byte](8)
-    var i = 0
-    while (i < 8) { b(i) = ((v >>> (8 * i)) & 0xff).toByte; i += 1 }
-    b
+    val o = new java.io.ByteArrayOutputStream(8); Bytes.putLe64(o, v); o.toByteArray
   }
 
   /** RLE/bit-packed hybrid encoder (parquet-format Encodings.md):
@@ -88,8 +85,7 @@ object ParquetWrite {
     val byteWidth = (bitWidth + 7) >> 3
     def writeRle(v: Int, run: Int): Unit = {
       Leb128.write(out, run.toLong << 1)
-      var k = 0
-      while (k < byteWidth) { out.write((v >>> (8 * k)) & 0xff); k += 1 }
+      Bytes.putLe(out, v, byteWidth)
     }
     def writeBitPacked(from: Int, count: Int): Unit = {
       val groups = (count + 7) / 8
@@ -228,9 +224,8 @@ object ParquetWrite {
   }
 
   private def leFloat(v: Float): Array[Byte] = {
-    val bits = java.lang.Float.floatToIntBits(v)
-    Array[Byte](bits.toByte, (bits >>> 8).toByte,
-      (bits >>> 16).toByte, (bits >>> 24).toByte)
+    val o = new java.io.ByteArrayOutputStream(4)
+    Bytes.putLe32(o, java.lang.Float.floatToIntBits(v)); o.toByteArray
   }
   private def leDouble(v: Double): Array[Byte] =
     leLong(java.lang.Double.doubleToLongBits(v))
@@ -387,14 +382,13 @@ object ParquetWrite {
       def plainBytes(longs: Seq[Long], bins: Seq[Array[Byte]],
           dbls: Seq[Double]): Array[Byte] = {
         val o = new java.io.ByteArrayOutputStream()
-        if (ptype == 2) longs.foreach(v => o.write(leLong(v), 0, 8))
-        else if (ptype == 5) dbls.foreach(v => o.write(leDouble(v), 0, 8))
+        if (ptype == 2) longs.foreach(v => Bytes.putLe64(o, v))
+        else if (ptype == 5)
+          dbls.foreach(v => Bytes.putLe64(o, java.lang.Double.doubleToLongBits(v)))
         else if (ptype == 4)
-          dbls.foreach(v => o.write(leFloat(v.toFloat), 0, 4))
+          dbls.foreach(v => Bytes.putLe32(o, java.lang.Float.floatToIntBits(v.toFloat)))
         else bins.foreach { b =>
-          o.write(b.length & 0xff); o.write((b.length >> 8) & 0xff)
-          o.write((b.length >> 16) & 0xff); o.write((b.length >> 24) & 0xff)
-          o.write(b, 0, b.length)
+          Bytes.putLe32(o, b.length); o.write(b, 0, b.length)
         }
         o.toByteArray
       }
@@ -450,11 +444,7 @@ object ParquetWrite {
           val slice = java.util.Arrays.copyOfRange(defs, rowAt,
             rowAt + pRows)
           val enc = rleHybridEncode(slice, 1)
-          body.write(enc.length & 0xff)
-          body.write((enc.length >> 8) & 0xff)
-          body.write((enc.length >> 16) & 0xff)
-          body.write((enc.length >> 24) & 0xff)
-          body.write(enc, 0, enc.length)
+          Bytes.putLe32(body, enc.length); body.write(enc, 0, enc.length)
         }
         if (useDict) {
           body.write(bw)
@@ -583,9 +573,9 @@ object ParquetWrite {
         var k = vFrom
         while (k < vTo) {
           ptype match {
-            case 2 => o.write(leLong(longVals(k)), 0, 8)
-            case 5 => o.write(leDouble(dblVals(k)), 0, 8)
-            case 4 => o.write(leFloat(dblVals(k).toFloat), 0, 4)
+            case 2 => Bytes.putLe64(o, longVals(k))
+            case 5 => Bytes.putLe64(o, java.lang.Double.doubleToLongBits(dblVals(k)))
+            case 4 => Bytes.putLe32(o, java.lang.Float.floatToIntBits(dblVals(k).toFloat))
             case _ => throw new IllegalArgumentException(s"$ptype")
           }
           k += 1
@@ -617,11 +607,7 @@ object ParquetWrite {
           var t = 0
           while (t < nv) { slice(t) = buf(eFrom + t); t += 1 }
           val enc = rleHybridEncode(slice, bw)
-          body.write(enc.length & 0xff)
-          body.write((enc.length >> 8) & 0xff)
-          body.write((enc.length >> 16) & 0xff)
-          body.write((enc.length >> 24) & 0xff)
-          body.write(enc, 0, enc.length)
+          Bytes.putLe32(body, enc.length); body.write(enc, 0, enc.length)
         }
         lvlRun(reps, 1)
         lvlRun(defs, 2)
@@ -895,8 +881,7 @@ object ParquetWrite {
     f.stop() // FileMetaData
     val fb = f.bytes
     out.write(fb, 0, fb.length)
-    out.write(fb.length & 0xff); out.write((fb.length >> 8) & 0xff)
-    out.write((fb.length >> 16) & 0xff); out.write((fb.length >> 24) & 0xff)
+    Bytes.putLe32(out, fb.length)
     out.write('P'); out.write('A'); out.write('R'); out.write('1')
     out.toByteArray
   }

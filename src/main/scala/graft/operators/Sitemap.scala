@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.Malformed
+
 /** Sitemap XML walk (sitemaps.org protocol) — the crawl SEED source:
   * before a frontier exists, discovery starts from the sitemaps hosts
   * publish, and at corpus scale that is millions of XML files whose
@@ -28,10 +30,6 @@ object Sitemap {
   final case class SitemapInfo(media_id: Long, n_urls: Long, n_hosts: Long,
                                n_lastmod: Long, sum_prio_tenths: Long,
                                sum_loc_chars: Long, valid: Boolean)
-
-  private case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
 
   private[graft] def parse(id: Long, xml: String): SitemapInfo = {
     val invalid = SitemapInfo(id, 0L, 0L, 0L, 0L, 0L, valid = false)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.codec.{Cursor, Leb128, Malformed}
+import graft.codec.{Bytes, Cursor, Leb128, Malformed}
 
 /** Dependency-free Snappy RAW-block decompressor — Parquet's default
   * page codec (what `spark.write.parquet` produces out of the box),
@@ -41,11 +41,6 @@ object Snappy {
     if (expect >= 0 && outLen != expect) fail()
     val out = new Array[Byte](outLen.toInt)
     var w = 0
-    def le(nb: Int): Int = {
-      var v = 0; var i = 0
-      while (i < nb) { v |= c.u8() << (8 * i); i += 1 }
-      v
-    }
     while (c.pos < c.end) {
       val t = c.u8()
       (t & 3) match {
@@ -54,7 +49,7 @@ object Snappy {
           // escaped length: the 3/4-byte LE read can wrap negative or
           // to -1; l <= 0 (incl. the format-forbidden zero-length
           // literal) is structurally invalid — strict-reject
-          if (l > 60) l = le(l - 60) + 1
+          if (l > 60) l = Bytes.le(b, c.take(l - 60), l - 60).toInt + 1
           if (l <= 0 || l > out.length - w) fail()
           System.arraycopy(b, c.take(l), out, w, l)
           w += l
@@ -64,9 +59,9 @@ object Snappy {
             l = ((t >>> 2) & 7) + 4
             o = ((t >>> 5) << 8) | c.u8()
           } else if (kind == 2) {
-            l = (t >>> 2) + 1; o = le(2)
+            l = (t >>> 2) + 1; o = c.le16()
           } else {
-            l = (t >>> 2) + 1; o = le(4)
+            l = (t >>> 2) + 1; o = c.le32()
           }
           if (o <= 0 || o > w || l > out.length - w) fail()
           var i = 0
@@ -105,28 +100,23 @@ object Snappy {
       if (n < 60) out.write(n << 2)
       else if (n < 256) { out.write(60 << 2); out.write(n) }
       else { // fragments cap length at 65536: 2 LE bytes suffice
-        out.write(61 << 2); out.write(n & 0xff); out.write((n >> 8) & 0xff)
+        out.write(61 << 2); Bytes.putLe16(out, n)
       }
       out.write(src, from, len)
     }
     def emitCopy(offset: Int, len0: Int): Unit = {
       var len = len0
       while (len > 64) { // long matches split into kind-10 maxima
-        out.write((63 << 2) | 2)
-        out.write(offset & 0xff); out.write((offset >> 8) & 0xff)
+        out.write((63 << 2) | 2); Bytes.putLe16(out, offset)
         len -= 64
       }
       if (len >= 4 && len <= 11 && offset < 2048) { // kind 01
         out.write(((offset >> 8) << 5) | ((len - 4) << 2) | 1)
         out.write(offset & 0xff)
       } else { // kind 10
-        out.write(((len - 1) << 2) | 2)
-        out.write(offset & 0xff); out.write((offset >> 8) & 0xff)
+        out.write(((len - 1) << 2) | 2); Bytes.putLe16(out, offset)
       }
     }
-    def read32(p: Int): Int =
-      (src(p) & 0xff) | ((src(p + 1) & 0xff) << 8) |
-        ((src(p + 2) & 0xff) << 16) | ((src(p + 3) & 0xff) << 24)
     def hash(x: Int): Int = (x * 0x1e35a7bd) >>> (32 - HashBits)
     val table = new Array[Int](1 << HashBits)
     var blockStart = 0
@@ -136,10 +126,10 @@ object Snappy {
       var ip = blockStart
       var lit = blockStart
       while (ip + 4 <= blockEnd) {
-        val h = hash(read32(ip))
+        val h = hash(Bytes.le32(src, ip))
         val cand = table(h)
         table(h) = ip
-        if (cand >= blockStart && read32(cand) == read32(ip)) {
+        if (cand >= blockStart && Bytes.le32(src, cand) == Bytes.le32(src, ip)) {
           var mlen = 4
           while (ip + mlen < blockEnd &&
               src(cand + mlen) == src(ip + mlen)) mlen += 1

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
+import graft.codec.Malformed
+
 /** USTAR (POSIX.1-1988 tar) container walk — the BUNDLE format public
   * text datasets ship in (webtext dumps, book corpora, image/label
   * pairs all travel as `.tar` shards; WebDataset-style loaders walk
@@ -34,10 +36,6 @@ object Tar {
                            n_dirs: Long, sum_size: Long, max_size: Long,
                            sum_payload_bytes: Long, n_name_chars: Long,
                            valid: Boolean)
-
-  private case object Malformed extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
 
   private val Block = 512
 

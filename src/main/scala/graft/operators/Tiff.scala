@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
-import graft.codec.{Flate, Malformed}
+import graft.codec.{Bytes, Flate, Malformed}
 
 /** TIFF 6.0 IFD walk — the scientific-imagery container (satellite
   * scenes, scanned books, GeoTIFF rasters): where PNG/JPEG/GIF cover
@@ -66,11 +66,10 @@ object Tiff {
       def u8(o: Long): Int = {
         if (o < 0 || o >= b.length) fail(); b(o.toInt) & 0xff
       }
-      def u16(o: Long): Int =
-        if (le) u8(o) | (u8(o + 1) << 8) else (u8(o) << 8) | u8(o + 1)
+      def at(o: Long): Int = { if (o < 0 || o > b.length) fail(); o.toInt }
+      def u16(o: Long): Int = if (le) Bytes.le16(b, at(o)) else Bytes.be16(b, at(o))
       def u32(o: Long): Long =
-        if (le) u16(o).toLong | (u16(o + 2).toLong << 16)
-        else (u16(o).toLong << 16) | u16(o + 2).toLong
+        (if (le) Bytes.le32(b, at(o)) else Bytes.be32(b, at(o))) & 0xffffffffL
       if (u16(2) != 42) fail()
       var ifdOff = u32(4)
       var nPages = 0L; var sumW = 0L; var sumH = 0L
@@ -264,12 +263,9 @@ object Tiff {
     require(seed >= 0, s"bad seed $seed")
     val le = seed % 2 == 0
     val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit =
-      if (le) { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      else { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
+    def w16(v: Int): Unit = if (le) Bytes.putLe16(out, v) else Bytes.putBe16(out, v)
     def w32(v: Long): Unit =
-      if (le) { w16((v & 0xffff).toInt); w16(((v >> 16) & 0xffff).toInt) }
-      else { w16(((v >> 16) & 0xffff).toInt); w16((v & 0xffff).toInt) }
+      if (le) Bytes.putLe32(out, v.toInt) else Bytes.putBe32(out, v.toInt)
     out.write(if (le) 'I' else 'M'); out.write(if (le) 'I' else 'M')
     w16(42)
     // pass 1: raw strips + per-page compression (sizes drive layout)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Dataset
 
-import graft.codec.{Flate, Malformed}
+import graft.codec.{Bytes, Flate, Malformed}
 
 /** ZIP container walk — the OTHER bundle format public datasets ship
   * in (tar covers the unix lineage, `Tar.scala`; zip covers the rest:
@@ -53,15 +53,8 @@ object Zip {
     if (b == null || b.length < 22) return invalid
     try {
       def fail(): Nothing = throw Malformed
-      def u16(o: Int): Int = {
-        if (o < 0 || o + 2 > b.length) fail()
-        (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-      }
-      def u32(o: Int): Long = {
-        if (o < 0 || o + 4 > b.length) fail()
-        (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-          ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-      }
+      def u16(o: Int): Int = Bytes.le16(b, o)
+      def u32(o: Int): Long = Bytes.le32(b, o) & 0xffffffffL
       // EOCD backward scan: highest offset whose comment length lands
       // exactly on EOF
       var eocd = -1
@@ -160,10 +153,14 @@ object Zip {
   // Writer (test/synthesis side): the REAL JDK writer, not ours.
   // ---------------------------------------------------------------
 
+  private val EntryTime = java.time.LocalDateTime.of(2020, 1, 1, 0, 0)
+
   /** `nEntries` entries via `java.util.zip.ZipOutputStream`: entry f
     * is named `e<f>_<seed>.txt`, length `20 + (seed+f)%50`, byte j
     * `(seed + 3f + j) % 256`; STORED when `(seed+f)%2 == 0` else
-    * DEFLATED (both code paths exercised in every archive of ≥2). */
+    * DEFLATED (both code paths exercised in every archive of ≥2); every
+    * entry's DOS time is `EntryTime`, so the bytes depend only on the
+    * arguments. */
   def zipPayload(nEntries: Int, seed: Int): Array[Byte] = {
     require(nEntries >= 1 && nEntries <= 4096, s"bad nEntries $nEntries")
     require(seed >= 0, s"bad seed $seed")
@@ -176,6 +173,7 @@ object Zip {
       var j = 0
       while (j < len) { data(j) = ((seed + 3 * f + j) % 256).toByte; j += 1 }
       val e = new java.util.zip.ZipEntry(s"e${f}_$seed.txt")
+      e.setTimeLocal(EntryTime)
       if ((seed + f) % 2 == 0) {
         e.setMethod(java.util.zip.ZipEntry.STORED)
         e.setSize(len.toLong)

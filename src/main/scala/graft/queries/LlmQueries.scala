@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.codec.Bytes
 import graft.functions.TextFns
 import graft.operators.{BloomPrune, Bpe, CharsetDecode, Curation, Dedup, Drift, FuzzyJoin, Gif, GraphRank, HeavyHitters, Html, Http, Jpeg, Mp3, Mp4, Multimodal, NaiveBayes, Packing, Pdf, Pii, Robots, Sampling, Similarity, Sitemap, Spectral, SuffixArray, Tar, Tiff, Warc, Wet}
 import graft.operators.{Avro, DomainSuffix, ParquetFile, TxLog, Zip}
@@ -98,7 +99,7 @@ object LlmQueries {
         case mk if mk >= 0xd0 && mk <= 0xd7 => pos += 2
         case 0xda | 0xd9 => done = true // scan data / EOI: layout is done
         case mk =>
-          val len = ((b(pos + 2) & 0xff) << 8) | (b(pos + 3) & 0xff)
+          val len = Bytes.be16(b, pos + 2)
           val seg = pos + 4; val end = pos + 2 + len
           mk match {
             case 0xdb => // DQT: each entry 1 + 64 (8-bit) / 128 bytes
@@ -123,7 +124,7 @@ object LlmQueries {
                 i += 1
               }
             case 0xdd =>
-              dri = ((b(seg) & 0xff) << 8) | (b(seg + 1) & 0xff)
+              dri = Bytes.be16(b, seg)
             case _ => ()
           }
           pos = end

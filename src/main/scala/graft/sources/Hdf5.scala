@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.codec.{Flate, Malformed}
+import graft.codec.{Bytes, Cursor, Flate, Malformed}
 
 /** Minimal dependency-free HDF5 subset — the container family behind
   * NetCDF-4 (`build_dataset.py:28` / `apply_model.py:110` open
@@ -82,31 +82,14 @@ object Hdf5 {
   final case class H5File(superblockVersion: Int, datasets: Seq[H5Dataset])
 
   // ---------------------------------------------------------------
-  // Little-endian primitives over a fetched block
+  // Little-endian fields over a fetched block
   // ---------------------------------------------------------------
-  private final class Cursor(val b: Array[Byte], var off: Int) {
-    def fail(): Nothing = throw Malformed
-    def need(n: Int): Unit = if (off < 0 || off + n > b.length) fail()
-    def u8(): Int = { need(1); off += 1; b(off - 1) & 0xff }
-    def u16(): Int = { need(2); val v = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8); off += 2; v }
-    def u32(): Long = {
-      need(4)
-      var v = 0L; var i = 3
-      while (i >= 0) { v = (v << 8) | (b(off + i) & 0xffL); i -= 1 }
-      off += 4; v
-    }
-    def u64(): Long = {
-      need(8)
-      var v = 0L; var i = 7
-      while (i >= 0) { v = (v << 8) | (b(off + i) & 0xffL); i -= 1 }
-      off += 8; v
-    }
-    /** Address: all-ones = undefined → [[Undef]]. */
-    def addr(): Long = { val v = u64(); if (v == -1L) Undef else { if (v < 0) fail(); v } }
-    def skip(n: Int): Unit = { need(n); off += n }
-    def bytes(n: Int): Array[Byte] = {
-      need(n); val a = java.util.Arrays.copyOfRange(b, off, off + n); off += n; a
-    }
+  /** Address: all-ones = undefined → [[Undef]]. */
+  private def readAddr(c: Cursor): Long = {
+    val v = c.le64(); if (v == -1L) Undef else { if (v < 0) throw Malformed; v }
+  }
+  private def bytes(c: Cursor, n: Int): Array[Byte] = {
+    val s = c.take(n); java.util.Arrays.copyOfRange(c.b, s, s + n)
   }
 
   // ---------------------------------------------------------------
@@ -130,31 +113,31 @@ object Hdf5 {
           // group symbol-table entry
           val c = new Cursor(src.readAt(0, 96), 8)
           if (c.u8() != 0) return None // superblock v0
-          c.skip(1) // free space version
-          c.skip(1) // root group version
-          c.skip(1) // reserved
-          c.skip(1) // shared header version
+          c.take(1) // free space version
+          c.take(1) // root group version
+          c.take(1) // reserved
+          c.take(1) // shared header version
           if (c.u8() != 8 || c.u8() != 8) return None // offset/length sizes
-          c.skip(1) // reserved
-          c.skip(2 + 2 + 4) // leaf k, internal k, flags
-          val base = c.addr(); if (base != 0) return None
-          c.addr() // free space
-          c.addr() // eof
-          c.addr() // driver info
+          c.take(1) // reserved
+          c.take(2 + 2 + 4) // leaf k, internal k, flags
+          val base = readAddr(c); if (base != 0) return None
+          readAddr(c) // free space
+          readAddr(c) // eof
+          readAddr(c) // driver info
           // root symbol table entry
-          c.u64() // link name offset
-          val rootOh = c.addr(); if (rootOh == Undef) return None
+          c.le64() // link name offset
+          val rootOh = readAddr(c); if (rootOh == Undef) return None
           val datasets = readGroup(src, rootOh)
           Some(H5File(0, datasets))
         case 2 | 3 =>
           val c = new Cursor(src.readAt(0, 48), 8)
-          c.skip(1) // version byte already known
+          c.take(1) // version byte already known
           if (c.u8() != 8 || c.u8() != 8) return None
-          c.skip(1) // flags
-          val base = c.addr(); if (base != 0) return None
-          c.addr() // extension
-          c.addr() // eof
-          val rootOh = c.addr(); if (rootOh == Undef) return None
+          c.take(1) // flags
+          val base = readAddr(c); if (base != 0) return None
+          readAddr(c) // extension
+          readAddr(c) // eof
+          val rootOh = readAddr(c); if (rootOh == Undef) return None
           val datasets = readGroup(src, rootOh)
           Some(H5File(version, datasets))
         case _ => None
@@ -174,7 +157,7 @@ object Hdf5 {
     msgs.foreach {
       case (0x0011, data) => // symbol table: btree addr + heap addr
         val c = new Cursor(data, 0)
-        val btree = c.addr(); val heap = c.addr()
+        val btree = readAddr(c); val heap = readAddr(c)
         if (btree == Undef || heap == Undef) throw Malformed
         val heapData = readLocalHeap(src, heap)
         walkGroupBtree(src, btree, heapData, out)
@@ -185,18 +168,18 @@ object Hdf5 {
         if ((flags & 0x08) != 0) { // link type present: only 0 = hard
           if (c.u8() != 0) throw Malformed
         }
-        if ((flags & 0x04) != 0) c.skip(8) // creation order
-        if ((flags & 0x10) != 0) c.skip(1) // charset
+        if ((flags & 0x04) != 0) c.take(8) // creation order
+        if ((flags & 0x10) != 0) c.take(1) // charset
         val lenSize = 1 << (flags & 0x03)
         val nameLen = lenSize match {
           case 1 => c.u8()
-          case 2 => c.u16()
-          case 4 => c.u32().toInt
-          case _ => c.u64().toInt
+          case 2 => c.le16()
+          case 4 => c.le32()
+          case _ => c.le64().toInt
         }
         if (nameLen < 0 || nameLen > 64 * 1024) throw Malformed
-        val name = new String(c.bytes(nameLen), java.nio.charset.StandardCharsets.UTF_8)
-        out += ((name, c.addr()))
+        val name = new String(bytes(c, nameLen), java.nio.charset.StandardCharsets.UTF_8)
+        out += ((name, readAddr(c)))
       case _ => ()
     }
     out.toSeq.map { case (name, addr) => readDataset(src, name, addr) }
@@ -207,10 +190,10 @@ object Hdf5 {
     if (!(c.u8() == 'H' && c.u8() == 'E' && c.u8() == 'A' && c.u8() == 'P'))
       throw Malformed
     if (c.u8() != 0) throw Malformed // heap version
-    c.skip(3)
-    val dataSize = c.u64()
-    c.u64() // free list head
-    val dataAddr = c.addr()
+    c.take(3)
+    val dataSize = c.le64()
+    c.le64() // free list head
+    val dataAddr = readAddr(c)
     if (dataSize < 0 || dataSize > 16 * 1024 * 1024 || dataAddr == Undef)
       throw Malformed
     src.readAt(dataAddr, dataSize.toInt)
@@ -225,15 +208,15 @@ object Hdf5 {
       throw Malformed
     if (head.u8() != 0) throw Malformed // node type 0 = group
     val level = head.u8()
-    val n = head.u16()
+    val n = head.le16()
     if (n < 0 || n > 4096) throw Malformed
     // keys are heap offsets (length-size = 8); children are addresses
     val body = new Cursor(src.readAt(addr + 24, (2 * n + 1) * 8), 0)
-    body.u64() // key 0
+    body.le64() // key 0
     var i = 0
     while (i < n) {
-      val child = body.addr()
-      body.u64() // key i+1
+      val child = readAddr(body)
+      body.le64() // key i+1
       if (child == Undef) throw Malformed
       if (level > 0) walkGroupBtree(src, child, heap, out, depth + 1)
       else readSnod(src, child, heap, out)
@@ -247,15 +230,15 @@ object Hdf5 {
     if (!(head.u8() == 'S' && head.u8() == 'N' && head.u8() == 'O' && head.u8() == 'D'))
       throw Malformed
     if (head.u8() != 1) throw Malformed
-    head.skip(1)
-    val n = head.u16()
+    head.take(1)
+    val n = head.le16()
     if (n < 0 || n > 4096) throw Malformed
     val body = new Cursor(src.readAt(addr + 8, n * 40), 0)
     var i = 0
     while (i < n) {
-      val nameOff = body.u64()
-      val oh = body.addr()
-      body.skip(24) // cache type, reserved, scratch
+      val nameOff = body.le64()
+      val oh = readAddr(body)
+      body.take(24) // cache type, reserved, scratch
       if (nameOff < 0 || nameOff >= heap.length || oh == Undef)
         throw Malformed
       var end = nameOff.toInt
@@ -279,13 +262,7 @@ object Hdf5 {
       if ((flags & 0x20) != 0) skip += 16 // times
       if ((flags & 0x10) != 0) skip += 4  // max-compact/min-dense
       val szBytes = 1 << (flags & 0x03)
-      val hc = new Cursor(src.readAt(addr + 6 + skip, szBytes), 0)
-      val chunk0 = szBytes match {
-        case 1 => hc.u8().toLong
-        case 2 => hc.u16().toLong
-        case 4 => hc.u32()
-        case _ => hc.u64()
-      }
+      val chunk0 = Bytes.le(src.readAt(addr + 6 + skip, szBytes), 0, szBytes)
       if (chunk0 < 0 || chunk0 > 16 * 1024 * 1024) throw Malformed
       val msgStart = addr + 6 + skip + szBytes
       val creationOrder = (flags & 0x04) != 0
@@ -295,13 +272,13 @@ object Hdf5 {
       // v1: ver res nmsgs refcount hdrsize, 4-byte pad, messages
       val c = new Cursor(src.readAt(addr, 16), 0)
       if (c.u8() != 1) throw Malformed
-      c.skip(1)
-      val nMsgs = c.u16()
-      c.u32() // ref count
-      val hdrSize = c.u32()
+      c.take(1)
+      val nMsgs = c.le16()
+      c.le32() // ref count
+      val hdrSize = c.le32()
       if (nMsgs < 0 || nMsgs > 4096 || hdrSize < 0 || hdrSize > 16 * 1024 * 1024)
         throw Malformed
-      parseV1Messages(src, src.readAt(addr + 16, hdrSize.toInt), nMsgs, msgs)
+      parseV1Messages(src, src.readAt(addr + 16, hdrSize), nMsgs, msgs)
     }
     msgs.toSeq
   }
@@ -313,14 +290,14 @@ object Hdf5 {
     while (remaining > 0 && queue.nonEmpty) {
       val c = new Cursor(queue.head, 0)
       queue = queue.tail
-      while (remaining > 0 && c.off + 8 <= c.b.length) {
-        val t = c.u16(); val sz = c.u16(); c.skip(4) // flags + reserved
-        if (sz < 0 || c.off + sz > c.b.length) throw Malformed
-        val data = c.bytes(sz)
+      while (remaining > 0 && c.pos + 8 <= c.end) {
+        val t = c.le16(); val sz = c.le16(); c.take(4) // flags + reserved
+        if (sz < 0 || c.pos + sz > c.end) throw Malformed
+        val data = bytes(c, sz)
         remaining -= 1
         if (t == 0x0010) { // continuation: offset + length
           val cc = new Cursor(data, 0)
-          val off = cc.addr(); val len = cc.u64()
+          val off = readAddr(cc); val len = cc.le64()
           if (off == Undef || len < 0 || len > 16 * 1024 * 1024) throw Malformed
           queue = src.readAt(off, len.toInt) :: queue
         } else out += ((t, data))
@@ -342,14 +319,14 @@ object Hdf5 {
       val c = new Cursor(queue.head, 0)
       queue = queue.tail
       // a trailing gap smaller than a message header terminates a block
-      while (c.b.length - c.off >= 4 + (if (creationOrder) 2 else 0)) {
-        val t = c.u8(); val sz = c.u16(); c.skip(1) // flags
-        if (creationOrder) c.skip(2)
-        if (sz < 0 || c.off + sz > c.b.length) throw Malformed
-        val data = c.bytes(sz)
+      while (c.end - c.pos >= 4 + (if (creationOrder) 2 else 0)) {
+        val t = c.u8(); val sz = c.le16(); c.take(1) // flags
+        if (creationOrder) c.take(2)
+        if (sz < 0 || c.pos + sz > c.end) throw Malformed
+        val data = bytes(c, sz)
         if (t == 0x0010) {
           val cc = new Cursor(data, 0)
-          val off = cc.addr(); val len = cc.u64()
+          val off = readAddr(cc); val len = cc.le64()
           if (off == Undef || len < 8 || len > 16 * 1024 * 1024) throw Malformed
           // continuation blocks in v2 carry OCHK signature + checksum
           val blk = src.readAt(off, len.toInt)
@@ -375,21 +352,21 @@ object Hdf5 {
         val ver = c.u8()
         val rank = c.u8()
         val flags = c.u8()
-        if (ver == 1) c.skip(5)
-        else if (ver == 2) c.skip(1) // type
+        if (ver == 1) c.take(5)
+        else if (ver == 2) c.take(1) // type
         else throw Malformed
         if (rank < 0 || rank > 8) throw Malformed
-        dims = Array.fill(rank)(c.u64())
+        dims = Array.fill(rank)(c.le64())
         if (dims.exists(d => d < 0 || d > Int.MaxValue)) throw Malformed
         val _ = flags
       case (0x0003, data) => // datatype
         val c = new Cursor(data, 0)
         val classAndVersion = c.u8()
         val cls = classAndVersion & 0x0f
-        val b0 = c.u8(); c.skip(2) // class bit fields
-        val size = c.u32()
+        val b0 = c.u8(); c.take(2) // class bit fields
+        val size = c.le32()
         if (size <= 0 || size > 8) throw Malformed
-        elemSize = size.toInt
+        elemSize = size
         little = (b0 & 0x01) == 0
         cls match {
           case 0 => isFloat = false; signed = (b0 & 0x08) != 0
@@ -402,13 +379,13 @@ object Hdf5 {
         layoutClass = c.u8()
         layoutClass match {
           case 1 => // contiguous
-            dataAddr = c.addr(); dataSize = c.u64()
+            dataAddr = readAddr(c); dataSize = c.le64()
           case 2 => // chunked
             val dimensionality = c.u8()
             if (dimensionality < 2 || dimensionality > 9) throw Malformed
-            btree = c.addr()
-            chunkDims = Array.fill(dimensionality - 1)(c.u32().toInt)
-            c.u32() // element-size pseudo-dim
+            btree = readAddr(c)
+            chunkDims = Array.fill(dimensionality - 1)(c.le32())
+            c.le32() // element-size pseudo-dim
             if (chunkDims.exists(d => d <= 0 || d > (1 << 26))) throw Malformed
             // chunk ELEMENT COUNT bounded in LONG before any Int
             // product can wrap (the NcClassic ADVICE r8 lesson: a
@@ -423,17 +400,17 @@ object Hdf5 {
         val c = new Cursor(data, 0)
         val ver = c.u8()
         val n = c.u8()
-        if (ver == 1) c.skip(6) else if (ver != 2) throw Malformed
+        if (ver == 1) c.take(6) else if (ver != 2) throw Malformed
         var i = 0
         while (i < n) {
-          val id = c.u16()
-          val nameLen = if (ver == 2 && id < 256) 0 else c.u16()
-          c.u16() // flags
-          val nVals = c.u16()
-          if (nameLen > 0) c.skip((nameLen + 7) & ~7)
+          val id = c.le16()
+          val nameLen = if (ver == 2 && id < 256) 0 else c.le16()
+          c.le16() // flags
+          val nVals = c.le16()
+          if (nameLen > 0) c.take((nameLen + 7) & ~7)
           var j = 0
-          while (j < nVals) { c.u32(); j += 1 }
-          if (ver == 1 && nVals % 2 == 1) c.skip(4)
+          while (j < nVals) { c.le32(); j += 1 }
+          if (ver == 1 && nVals % 2 == 1) c.take(4)
           if (id == 1) deflated = true
           else throw Malformed // shuffle/szip/fletcher: out of subset
           i += 1
@@ -461,17 +438,17 @@ object Hdf5 {
       throw Malformed
     if (head.u8() != 1) throw Malformed // node type 1 = chunk
     val level = head.u8()
-    val n = head.u16()
+    val n = head.le16()
     if (n < 0 || n > 65536) throw Malformed
     val keySize = 8 + (rank + 1) * 8
     val body = new Cursor(src.readAt(addr + 24, n * (keySize + 8) + keySize), 0)
     var i = 0
     while (i < n) {
-      val size = body.u32().toInt
-      body.u32() // filter mask
-      val offs = Array.fill(rank)(body.u64())
-      body.u64() // trailing 0 offset (element-size dim)
-      val child = body.addr()
+      val size = body.le32()
+      body.le32() // filter mask
+      val offs = Array.fill(rank)(body.le64())
+      body.le64() // trailing 0 offset (element-size dim)
+      val child = readAddr(body)
       if (child == Undef || size < 0) throw Malformed
       if (level > 0) walkChunkBtree(src, child, rank, out, depth + 1)
       else out += Chunk(offs, size, child)
@@ -491,14 +468,7 @@ object Hdf5 {
     var i = 0
     while (i < count) {
       val base = from + i * sz
-      var v = 0L
-      if (ds.littleEndian) {
-        var j = sz - 1
-        while (j >= 0) { v = (v << 8) | (raw(base + j) & 0xffL); j -= 1 }
-      } else {
-        var j = 0
-        while (j < sz) { v = (v << 8) | (raw(base + j) & 0xffL); j += 1 }
-      }
+      val v = if (ds.littleEndian) Bytes.le(raw, base, sz) else Bytes.be(raw, base, sz)
       outArr(i) =
         if (ds.isFloat && sz == 8) java.lang.Double.longBitsToDouble(v)
         else if (ds.isFloat && sz == 4)
@@ -616,9 +586,9 @@ object Hdf5 {
     def pos: Int = buf.size()
     def byte(v: Int): Unit = buf.write(v & 0xff)
     def bytesRaw(a: Array[Byte]): Unit = buf.write(a, 0, a.length)
-    def le16(v: Int): Unit = { byte(v); byte(v >> 8) }
-    def le32(v: Long): Unit = { var i = 0; while (i < 4) { byte((v >> (8 * i)).toInt); i += 1 } }
-    def le64(v: Long): Unit = { var i = 0; while (i < 8) { byte((v >> (8 * i)).toInt); i += 1 } }
+    def le16(v: Int): Unit = Bytes.putLe16(buf, v)
+    def le32(v: Long): Unit = Bytes.putLe32(buf, v.toInt)
+    def le64(v: Long): Unit = Bytes.putLe64(buf, v)
     def undef8(): Unit = le64(-1L)
     /** Reserve an 8-byte slot filled from `v()` at result() time. */
     def patch8(v: () => Long): Unit = { patches ::= ((pos, v)); le64(0L) }
@@ -629,15 +599,13 @@ object Hdf5 {
     var checksumFixups = List.empty[(Int, Int, Int)]
     def result(): Array[Byte] = {
       val a = buf.toByteArray
-      patches.foreach { case (p, v) =>
-        val x = v()
-        var i = 0
-        while (i < 8) { a(p + i) = ((x >> (8 * i)) & 0xff).toByte; i += 1 }
+      def set(p: Int, v: Long, n: Int): Unit = {
+        val le = new java.io.ByteArrayOutputStream(n); Bytes.putLe(le, v, n)
+        System.arraycopy(le.toByteArray, 0, a, p, n)
       }
+      patches.foreach { case (p, v) => set(p, v(), 8) }
       checksumFixups.foreach { case (p, from, until) =>
-        val cs = lookup3(a, from, until - from)
-        var i = 0
-        while (i < 4) { a(p + i) = ((cs >> (8 * i)) & 0xff).toByte; i += 1 }
+        set(p, lookup3(a, from, until - from), 4)
       }
       a
     }
@@ -925,7 +893,7 @@ object Hdf5 {
 
   private def encodeElems(v: H5Var, cells: Array[Double]): Array[Byte] = {
     val sz = v.dtype.elemSize
-    val outB = new Array[Byte](cells.length * sz)
+    val outB = new java.io.ByteArrayOutputStream(cells.length * sz)
     var i = 0
     while (i < cells.length) {
       val bits = v.dtype match {
@@ -934,15 +902,10 @@ object Hdf5 {
         case TInt32 => cells(i).toLong & 0xffffffffL
         case TInt8 => cells(i).toLong & 0xffL
       }
-      var j = 0
-      while (j < sz) {
-        val shift = if (v.bigEndian) 8 * (sz - 1 - j) else 8 * j
-        outB(i * sz + j) = ((bits >> shift) & 0xff).toByte
-        j += 1
-      }
+      if (v.bigEndian) Bytes.putBe(outB, bits, sz) else Bytes.putLe(outB, bits, sz)
       i += 1
     }
-    outB
+    outB.toByteArray
   }
 
   // ---------------------------------------------------------------
@@ -954,11 +917,7 @@ object Hdf5 {
     def rot(x: Int, k: Int): Int = (x << k) | (x >>> (32 - k))
     var a = 0xdeadbeef + len0; var b = a; var c = a
     var off = from; var len = len0
-    def word(o: Int, n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v |= (data(o + i) & 0xff) << (8 * i); i += 1 }
-      v
-    }
+    def word(o: Int, n: Int): Int = Bytes.le(data, o, n).toInt
     while (len > 12) {
       a += word(off, 4); b += word(off + 4, 4); c += word(off + 8, 4)
       a -= c; a ^= rot(c, 4); c += b

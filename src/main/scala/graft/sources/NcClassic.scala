@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets.US_ASCII
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.codec.{Bytes, Cursor, Malformed}
+
 /** Dependency-free NetCDF *classic* (CDF-1 / CDF-2) container codec —
   * the reference's actual scene-file family: `build_dataset.py:28`,
   * `apply_model.py:110` and `archive.py:19-20` open one `.nc` file per
@@ -78,8 +80,6 @@ object NcClassic {
       v.dimIds.foldLeft(1L)((a, d) => a * math.max(dims(d).length, 0))
   }
 
-  private final class Malformed extends RuntimeException
-
   /** Safe header parse: `None` for anything that is not a well-formed
     * classic container (bad magic, truncated list, negative length,
     * out-of-range dim id…). At 100 TB a poisoned payload must never
@@ -91,39 +91,24 @@ object NcClassic {
     * against it, not against the prefix. */
   def parseHeader(b: Array[Byte], totalLen: Long = -1L): Option[NcHeader] = {
     val fileLen = if (totalLen >= 0) totalLen else b.length.toLong
-    var off = 0
-    def fail(): Nothing = throw new Malformed
-    def u8(): Int = {
-      if (off + 1 > b.length) fail(); off += 1; b(off - 1) & 0xff
-    }
-    def u32(): Long = {
-      if (off + 4 > b.length) fail()
-      val v = ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-        ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-      off += 4; v
-    }
-    def i32(): Int = { val v = u32(); if (v > Int.MaxValue) fail(); v.toInt }
-    def u64(): Long = {
-      if (off + 8 > b.length) fail()
-      var v = 0L; var i = 0
-      while (i < 8) { v = (v << 8) | (b(off + i) & 0xffL); i += 1 }
-      off += 8; if (v < 0) fail(); v
-    }
-    def pad4(n: Int): Int = (n + 3) & ~3
+    val c = new Cursor(b, 0, b.length)
+    def fail(): Nothing = throw Malformed
+    def u32(): Long = c.be32() & 0xffffffffL
+    def i32(): Int = { val v = c.be32(); if (v < 0) fail(); v }
+    def u64(): Long = { val v = c.be64(); if (v < 0) fail(); v }
     // bounds arithmetic in LONG: a crafted header with n near 2^31/sz
     // wraps `n * sz` (and pad4) in Int, slipping past the length check
     // into a huge allocation / out-of-bounds read (ADVICE r8)
     def pad4L(n: Long): Long = (n + 3) & ~3L
     def name(): String = {
-      val n = i32(); if (n < 0 || off.toLong + pad4L(n.toLong) > b.length) fail()
-      val s = new String(b, off, n, US_ASCII); off += pad4(n); s
+      val n = i32()
+      new String(b, c.take(pad4L(n.toLong)), n, US_ASCII)
     }
     def attr(): NcAttr = {
       val nm = name(); val t = i32(); val n = i32()
       if (n < 0) fail()
       val sz = typeSize(t)
-      if (off.toLong + pad4L(n.toLong * sz) > b.length) fail()
-      val start = off
+      val start = c.take(pad4L(n.toLong * sz))
       val (text, nums) =
         if (t == NcChar) (new String(b, start, n, US_ASCII), Array.empty[Double])
         else {
@@ -132,7 +117,6 @@ object NcClassic {
           while (i < n) { a(i) = readNum(b, start + i * sz, t); i += 1 }
           ("", a)
         }
-      off += pad4(n * sz)
       NcAttr(nm, t, n, text, nums)
     }
     // tagged list header: either ABSENT (0, 0) or (tag, nelems)
@@ -144,8 +128,8 @@ object NcClassic {
     }
     try {
       if (b.length < 8 || b(0) != 'C' || b(1) != 'D' || b(2) != 'F') return None
-      off = 3
-      val version = u8()
+      c.pos = 3
+      val version = c.u8()
       if (version != 1 && version != 2) return None
       val numRecs = u32() // 0xFFFFFFFF = streaming; kept verbatim
       val dims = IndexedSeq.fill(listCount(0x0A)) {
@@ -170,7 +154,7 @@ object NcClassic {
       // IOOBE/NegativeArraySize as defense-in-depth behind the Long
       // bounds checks — a malformed header must yield None, never a
       // stage-killing throw (the q134 never-throw contract)
-      case _: Malformed | _: IllegalArgumentException |
+      case Malformed | _: IllegalArgumentException |
            _: IndexOutOfBoundsException | _: NegativeArraySizeException =>
         None
     }
@@ -180,18 +164,10 @@ object NcClassic {
     * classic numeric types; NC_CHAR yields the byte value). */
   private def readNum(b: Array[Byte], off: Int, t: Int): Double = t match {
     case NcByte | NcChar => b(off).toDouble
-    case NcShort => (((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)).toShort.toDouble
-    case NcInt =>
-      (((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-        ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)).toDouble
-    case NcFloat =>
-      java.lang.Float.intBitsToFloat(
-        ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-          ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)).toDouble
-    case NcDouble =>
-      var v = 0L; var i = 0
-      while (i < 8) { v = (v << 8) | (b(off + i) & 0xffL); i += 1 }
-      java.lang.Double.longBitsToDouble(v)
+    case NcShort => Bytes.be16(b, off).toShort.toDouble
+    case NcInt => Bytes.be32(b, off).toDouble
+    case NcFloat => java.lang.Float.intBitsToFloat(Bytes.be32(b, off)).toDouble
+    case NcDouble => java.lang.Double.longBitsToDouble(Bytes.be64(b, off))
     case other => throw new IllegalArgumentException(s"unknown nc_type $other")
   }
 
@@ -247,10 +223,7 @@ object NcClassic {
     require(version == 1 || version == 2, s"classic version must be 1|2")
     val bo = new java.io.ByteArrayOutputStream()
     def u8(v: Int): Unit = bo.write(v & 0xff)
-    def u32(v: Long): Unit = {
-      u8((v >>> 24).toInt); u8((v >>> 16).toInt); u8((v >>> 8).toInt); u8(v.toInt)
-    }
-    def u64(v: Long): Unit = { u32(v >>> 32); u32(v & 0xffffffffL) }
+    def u32(v: Long): Unit = Bytes.putBe32(bo, v.toInt)
     def padTo4(): Unit = while (bo.size() % 4 != 0) u8(0)
     def name(s: String): Unit = {
       val nb = s.getBytes(US_ASCII); u32(nb.length); bo.write(nb); padTo4()
@@ -261,7 +234,7 @@ object NcClassic {
         val tb = a.text.getBytes(US_ASCII); u32(tb.length); bo.write(tb)
       } else {
         u32(a.nums.length)
-        a.nums.foreach(writeNum(_, a.ncType, u8, u32, u64))
+        a.nums.foreach(writeNum(bo, _, a.ncType))
       }
       padTo4()
     }
@@ -299,7 +272,7 @@ object NcClassic {
         if (v.atts.isEmpty) { u32(0); u32(0) }
         else { u32(0x0C); u32(v.atts.size); v.atts.foreach(attr) }
         u32(v.ncType); u32(vsizeOf(v))
-        if (version == 1) u32(begin) else u64(begin)
+        if (version == 1) u32(begin) else Bytes.putBe64(bo, begin)
       }
     }
     require(bo.size() == headerSz, s"header arithmetic drift: ${bo.size()} != $headerSz")
@@ -307,19 +280,19 @@ object NcClassic {
     vars.foreach { case (v, data) =>
       val n = v.dimIds.foldLeft(1L)((a, d) => a * dimLen(d))
       require(data.length == n, s"${v.name}: ${data.length} values for $n cells")
-      data.foreach(writeNum(_, v.ncType, u8, u32, u64))
+      data.foreach(writeNum(bo, _, v.ncType))
       padTo4()
     }
     bo.toByteArray
   }
 
-  private def writeNum(d: Double, t: Int, u8: Int => Unit,
-                       u32: Long => Unit, u64: Long => Unit): Unit = t match {
-    case NcByte | NcChar => u8(d.toInt)
-    case NcShort => val s = d.toInt; u8(s >>> 8); u8(s)
-    case NcInt => u32(d.toLong & 0xffffffffL)
-    case NcFloat => u32(java.lang.Float.floatToIntBits(d.toFloat) & 0xffffffffL)
-    case NcDouble => u64(java.lang.Double.doubleToLongBits(d))
+  private def writeNum(out: java.io.ByteArrayOutputStream, d: Double,
+                       t: Int): Unit = t match {
+    case NcByte | NcChar => out.write(d.toInt & 0xff)
+    case NcShort => Bytes.putBe16(out, d.toInt)
+    case NcInt => Bytes.putBe32(out, d.toLong.toInt)
+    case NcFloat => Bytes.putBe32(out, java.lang.Float.floatToIntBits(d.toFloat))
+    case NcDouble => Bytes.putBe64(out, java.lang.Double.doubleToLongBits(d))
     case other => throw new IllegalArgumentException(s"unknown nc_type $other")
   }
 

@@ -4,11 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.codec.{Gzip, Malformed}
-import graft.operators.{Avro, Http, Multimodal, ParquetFile, ParquetWrite,
-  Pdf, Tiff, Warc, Zip}
-import graft.sources.Hdf5
+import graft.operators.{Avro, Gif, Http, Jpeg, Mp3, Mp4, Multimodal, ParquetFile,
+  ParquetWrite, Pdf, Tar, Tiff, Warc, Zip}
+import graft.sources.{Hdf5, NcClassic}
 
-/** The hostile-input law for the decoders built on `graft.codec`: each
+/** The hostile-input law for the binary decoders: each
   * public entry point, fed its own writer's fixture damaged by
   * truncation at every offset, seeded single-bit flips, `0x7fffffff`
   * written at every 4-byte offset (both byte orders) and CRC-valid
@@ -51,7 +51,18 @@ class HostileInputSpec extends AnyFunSuite with Matchers {
         try Hdf5.readRows(src, ds, 0, ds.dims.headOption.fold(0)(_.toInt)): Unit
         catch { case Malformed | _: IllegalArgumentException => () }
       })
-    }))
+    }),
+    Decoder("gif", Gif.gifPayload(6, 4, 2, 3), b => Gif.parse(1L, b): Unit),
+    Decoder("jpeg", jpegFixture, b => Jpeg.parseInfo(1L, b): Unit),
+    Decoder("mp3-frames", mp3SideInfoFixture, b => Mp3.parseFrames(1L, b): Unit),
+    Decoder("mp3-side-info", mp3SideInfoFixture, b => Mp3.parseSideInfo(1L, b): Unit),
+    Decoder("mp3-spectral", mp3SpectralFixture, b => Mp3.parseSpectral(1L, b): Unit),
+    Decoder("mp3-synth", mp3SpectralFixture, b => Mp3.parseSynth(1L, b): Unit),
+    Decoder("mp4", Mp4.mp4Payload(4, 2), b => Mp4.parse(1L, b): Unit),
+    Decoder("tar", Tar.tarPayload(2, 1), b => Tar.parse(1L, b): Unit),
+    Decoder("nc-header", ncFixture, b => NcClassic.parseHeader(b): Unit),
+    Decoder("nc-info", ncFixture, b => NcClassic.parseInfo(1L, b): Unit),
+    Decoder("wav", wavFixture, b => Multimodal.parseWav(1L, b): Unit))
 
   /** Runs every damaged copy; returns the first few escapes. */
   private def escapes(d: Decoder, cases: Iterator[(String, Array[Byte])]): Seq[String] =
@@ -75,6 +86,16 @@ class HostileInputSpec extends AnyFunSuite with Matchers {
     Http.parseResponse(1L, 0L, byName("http")).valid shouldBe true
     ParquetFile.parseColumnSums(1L, byName("parquet")).forall(_.valid) shouldBe true
     Hdf5.parse(new Hdf5.ArraySource(hdf5Fixture)).map(_.datasets.size) shouldBe Some(2)
+    Gif.parse(1L, byName("gif")).valid shouldBe true
+    Jpeg.parseInfo(1L, jpegFixture).valid shouldBe true
+    Mp3.parseFrames(1L, mp3SideInfoFixture).valid shouldBe true
+    Mp3.parseSideInfo(1L, mp3SideInfoFixture).valid shouldBe true
+    Mp3.parseSpectral(1L, mp3SpectralFixture).valid shouldBe true
+    Mp3.parseSynth(1L, mp3SpectralFixture).valid shouldBe true
+    Mp4.parse(1L, byName("mp4")).valid shouldBe true
+    Tar.parse(1L, byName("tar")).valid shouldBe true
+    NcClassic.parseInfo(1L, ncFixture).valid shouldBe true
+    Multimodal.parseWav(1L, wavFixture).valid shouldBe true
   }
 
   decoders.foreach { d =>
@@ -187,6 +208,46 @@ object HostileInputSpec {
 
   def httpGzipMessage(content: Array[Byte]): Array[Byte] =
     httpMessage(Gzip.member(content, None))
+
+  /** A 16×8 gray JPEG from the JDK's own encoder. */
+  lazy val jpegFixture: Array[Byte] = {
+    System.setProperty("java.awt.headless", "true")
+    val img = new java.awt.image.BufferedImage(16, 8,
+      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    img.getRaster.setPixels(0, 0, 16, 8, Array.tabulate(128)(i => (i * 29) % 256))
+    val bo = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(img, "jpg", bo))
+    bo.toByteArray
+  }
+
+  lazy val mp3SideInfoFixture: Array[Byte] = Mp3.mp3PayloadSideInfo(2, 1, 0)
+
+  lazy val mp3SpectralFixture: Array[Byte] = Mp3.mp3PayloadSpectral(2, 3, 0)
+
+  lazy val ncFixture: Array[Byte] = {
+    import NcClassic._
+    NcClassic.bytes(2, Seq("line" -> 3, "sample" -> 4),
+      Seq(NcAttr("title", NcChar, 0, "hostile", Array.empty),
+        NcAttr("aoi", NcInt, 2, "", Array(3.0, 97.0))),
+      Seq((VarSpec("sig", NcShort, Seq(0, 1)), Array.tabulate(12)(i => i * 1000.0 - 6000)),
+        (VarSpec("d", NcDouble, Seq(0, 1)), Array.tabulate(12)(i => i * 0.5))))
+  }
+
+  /** RIFF/WAVE: a 16-byte PCM `fmt ` chunk, an odd-size `LIST` chunk
+    * (so the pad byte is walked) and 40 bytes of 16-bit samples. */
+  lazy val wavFixture: Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(12 + 24 + 12 + 48)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put("RIFF".getBytes("US-ASCII")).putInt(12 + 24 + 12 + 48 - 8)
+      .put("WAVE".getBytes("US-ASCII"))
+    bb.put("fmt ".getBytes("US-ASCII")).putInt(16).putShort(1.toShort)
+      .putShort(2.toShort).putInt(8000).putInt(32000).putShort(4.toShort)
+      .putShort(16.toShort)
+    bb.put("LIST".getBytes("US-ASCII")).putInt(3).put(Array[Byte](1, 2, 3, 0))
+    bb.put("data".getBytes("US-ASCII")).putInt(40)
+    (0 until 20).foreach(i => bb.putShort((i * 1733 - 16000).toShort))
+    bb.array()
+  }
 
   def hdf5Fixture: Array[Byte] = {
     import graft.sources.Hdf5._
