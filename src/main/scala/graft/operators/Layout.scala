@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.BucketOffsets.bucket_offsets
 
 /** Storage-layout keys for data-skipping writes (L38): sorting (or
   * range-partitioning) a table by a Z-order key before writing gives
@@ -57,10 +58,12 @@ object Layout {
     * the cumulative walk over it is BUCKETED (the q15 two-pass-rank
     * pattern — `MLFeed.rankByBucket`): a deterministic monotone bucket
     * id from the histogram's own min/max aggregate splits the cumsum
-    * into per-bucket windows, with per-bucket offsets from a
-    * buckets²-row cross-join aggregate — so even a corpus-cardinality
-    * key never funnels through one task (no `Exchange SinglePartition`
-    * anywhere in the plan; the r8 verdict's scale-killer). The cut
+    * into per-bucket windows, with per-bucket offsets from one
+    * [[graft.plans.BucketOffsets]] aggregate over the bucketed
+    * histogram — so even a corpus-cardinality key never funnels through
+    * one task (the r8 verdict's scale-killer): the plan's only
+    * `Exchange SinglePartition`s merge per-partition aggregate buffers
+    * (the min/max and the ≤ 64 bucket counts), not rows. The cut
     * table broadcasts; assignment is a map-side range lookup (a join on
     * shard-interval containment against ≤ numShards rows). Balance is
     * within max-value-multiplicity of N/numShards by construction. */
@@ -98,14 +101,12 @@ object Layout {
               (col("_rs_hi") - col("_rs_lo"))).cast("int"),
             lit(0)), lit(numBuckets - 1))))
       .drop("_rs_lo", "_rs_hi")
-    // per-bucket offsets + grand total from a buckets²-row aggregate —
-    // never an unpartitioned window (the rankByBucket offsets trick)
-    val sums = bucketed.groupBy(col("_rs_b")).agg(sum(col(cnt)).as("_bs"))
-    val offs = sums.as("sa").crossJoin(broadcast(sums.as("sb")))
-      .groupBy(col("sa._rs_b").as("_rs_b"))
-      .agg(sum(when(col("sb._rs_b") < col("sa._rs_b"), col("sb._bs"))
-          .otherwise(lit(0L))).as("_rs_off"),
-        sum(col("sb._bs")).as(tot))
+    // per-bucket offsets + grand total from ONE count-weighted
+    // BucketOffsets aggregate — never an unpartitioned window (the
+    // rankByBucket offsets)
+    val offs = bucketed.agg(bucket_offsets(col("_rs_b"), col(cnt)).as("_rs_bo"))
+      .select(inline(col("_rs_bo")))
+      .select(col("_pid").as("_rs_b"), col("_off").as("_rs_off"), col("_n").as(tot))
     val wIn = Window.partitionBy(col("_rs_b")).orderBy(col(kc))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // shard of a VALUE = ceil(numShards * cumCount / N) — monotone in

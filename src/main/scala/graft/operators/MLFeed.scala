@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.plans.BucketOffsets.bucket_offsets
 
 /** ML-feed operators: day-of-year filtering, exact train/validation
   * splits, epoch shuffles, batch slicing, tensor assembly (P9, B1-B4,
@@ -81,8 +82,9 @@ object MLFeed {
     *     evaluation;
     *  2. rank *within* buckets (parallel) via a bucket-keyed window;
     *  3. global rank = within-bucket rank + exclusive prefix sum of
-    *     per-bucket counts — a numBuckets-row aggregate (tiny),
-    *     broadcast back. Total row count rides along for free.
+    *     per-bucket counts — one numBuckets-entry aggregate
+    *     ([[rankByBucket]]), broadcast back. Total row count rides
+    *     along for free.
     *
     * Adds `_rank` (1-based) and `_n` (total rows). Requires a numeric
     * first order key (both call sites rank on integer permutation keys).
@@ -99,10 +101,9 @@ object MLFeed {
     // [[rankByBucket]] divide the per-task sort by the fanout; the
     // global rank is bucketing-invariant (monotone buckets +
     // within-bucket rank + offset sum), so results are unchanged at
-    // any fanout. The offsets cross-join grows as (buckets)² — at the
-    // 4× over 32 partitions that is 16k rows, still tiny.
-    val numBuckets = df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "200").toInt * RankFanout
+    // any fanout. The offsets map holds one entry per bucket — 128 at
+    // the 4× over 32 partitions.
+    val numBuckets = sortTasks(df)
     val bucket = keyDomain match {
       case Some((lo, hi)) =>
         require(hi > lo, s"empty key domain [$lo, $hi)")
@@ -124,18 +125,38 @@ object MLFeed {
           case (acc, (b, i)) => when(k <= b, i).otherwise(acc)
         }
     }
-    rankByBucket(df, bucket, orderKeys)
+    rankByBucket(df, bucket, orderKeys, numBuckets)
   }
 
   /** Global rank given a DETERMINISTIC bucket id that sorts consistently
     * with `orderKeys` (same-bucket rows ordered by the keys; buckets
-    * ordered by id). The per-bucket offsets come from a cross join of the
-    * tiny per-bucket count frame with itself (numBuckets² rows) — an
-    * aggregate, NOT an unpartitioned window, so no stage ever funnels
-    * real data through one task and the plan carries zero
-    * "No Partition Defined for Window" hazards. Adds `_rank` (1-based,
-    * global) and `_n` (total row count). */
-  def rankByBucket(df: DataFrame, bucket: Column, orderKeys: Seq[Column]): DataFrame = {
+    * ordered by id in Spark's ordering for the bucket's type). Two
+    * independent branches over the same rows:
+    *
+    *  - rows: repartition on the bucket, `row_number()` within it;
+    *  - offsets: ONE global [[graft.plans.BucketOffsets]] aggregate
+    *    (per-bucket counts → exclusive prefix offsets + total), inlined
+    *    and broadcast. Its `Exchange SinglePartition` carries one
+    *    partial count map per input partition, never rows.
+    *
+    * The offsets join AFTER the window, so the row-bearing exchange
+    * never waits on the broadcast: adaptive execution runs the row
+    * shuffle beside the narrow counts stage. No unpartitioned window
+    * and no cross join anywhere. Adds `_rank` (1-based, global) and
+    * `_n` (total row count); rows with a NULL bucket are dropped but
+    * still count in `_n`. The distinct buckets must stay few — the
+    * offsets are one in-memory map merged in one task — numBuckets-
+    * scale, never row-scale. */
+  def rankByBucket(df: DataFrame, bucket: Column, orderKeys: Seq[Column]): DataFrame =
+    rankByBucket(df, bucket, orderKeys, sortTasks(df))
+
+  /** (shuffle.partitions × fanout) — the global rank's bucket count and
+    * its sort-task count; see [[withGlobalRank]]. */
+  private def sortTasks(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt * RankFanout
+
+  private def rankByBucket(df: DataFrame, bucket: Column, orderKeys: Seq[Column],
+                           sortTasks: Int): DataFrame = {
     // Materialize the order keys as attributes BEFORE the window: the
     // window's required sort evaluates raw SortOrder EXPRESSIONS inside
     // every comparison (GenerateOrdering), so ordering n rows by a
@@ -145,24 +166,18 @@ object MLFeed {
     val okCols = orderKeys.zipWithIndex.map { case (k, i) => k.as(s"_ok$i") }
     val okAttrs = orderKeys.indices.map(i => col(s"_ok$i"))
     val parted = df.select(col("*") +: (bucket.as("_pid") +: okCols): _*)
-    val counts = parted.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))
-    val offsets = counts.as("a").crossJoin(counts.as("b"))
-      .groupBy(col("a._pid"))
-      .agg(sum(when(col("b._pid") < col("a._pid"), col("b._cnt"))
-          .otherwise(lit(0L))).as("_off"),
-        sum(col("b._cnt")).as("_n"))
+    val offsets = parted.agg(bucket_offsets(col("_pid")).as("_bo")).select(inline(col("_bo")))
     val wInPart = Window.partitionBy(col("_pid")).orderBy(okAttrs: _*)
     // explicit repartition to (shuffle.partitions × fanout) tasks: the
     // window only needs ClusteredDistribution(_pid), which ANY
     // partition count satisfies — without this, EnsureRequirements
     // inserts the conf-width exchange and each task sorts
     // n/shuffle.partitions rows (the sf20 spill; see withGlobalRank)
-    val sortTasks = df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "200").toInt * RankFanout
-    parted.join(broadcast(offsets), Seq("_pid"))
-      .repartition(sortTasks, col("_pid"))
-      .withColumn("_rank", col("_off") + row_number().over(wInPart))
-      .drop(("_pid" +: "_off" +: orderKeys.indices.map(i => s"_ok$i")): _*)
+    parted.repartition(sortTasks, col("_pid"))
+      .withColumn("_rn", row_number().over(wInPart))
+      .join(broadcast(offsets), Seq("_pid"))
+      .withColumn("_rank", col("_off") + col("_rn"))
+      .drop(("_pid" +: "_off" +: "_rn" +: orderKeys.indices.map(i => s"_ok$i")): _*)
   }
 
   /** `_rank` (1-based) and `_n` per row: the scale-safe two-pass global

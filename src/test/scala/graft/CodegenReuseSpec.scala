@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{MLFeed, Regrid}
 
@@ -11,11 +10,12 @@ import graft.operators.{MLFeed, Regrid}
   * out of generated source.
   *
   * For the duration, stage ids stay out of class names (they differ
-  * between any two plans) and adaptive execution is off: AQE re-plans
-  * from runtime statistics and stage completion order, so which
-  * operators share one generated class can differ between two runs of
-  * the same plan (seen as 4 extra compiles of the rank-offset aggregates
-  * mid-suite), which says nothing about the source Catalyst generates. */
+  * between any two plans). Most laws also turn adaptive execution off:
+  * AQE re-plans from runtime statistics and stage completion order, so
+  * which operators share one generated class can differ between two
+  * runs of the same plan, which says nothing about the source Catalyst
+  * generates. The global rank's epoch law also runs with AQE on: its
+  * offsets are one keyless aggregate, one stage whatever AQE's order. */
 class CodegenReuseSpec extends SparkSpec {
   import spark.implicits._
 
@@ -25,10 +25,13 @@ class CodegenReuseSpec extends SparkSpec {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
   }
 
-  private def withStablePlans(body: => Unit): Unit = {
-    val keys = Seq("spark.sql.codegen.useIdInClassName", "spark.sql.adaptive.enabled")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, "false"))
+  private def withStablePlans(body: => Unit): Unit =
+    withConfs(Seq("spark.sql.codegen.useIdInClassName" -> "false",
+      "spark.sql.adaptive.enabled" -> "false"))(body)
+
+  private def withConfs(confs: Seq[(String, String)])(body: => Unit): Unit = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -52,14 +55,23 @@ class CodegenReuseSpec extends SparkSpec {
     }
   }
 
+  private def batchIdsEpoch(epoch: Int): Unit =
+    MLFeed.batchIds(spark.range(0, 200).toDF("id"),
+      Seq(MLFeed.epochShuffleKey(col("id"), epoch)), 8,
+      keyDomain = Some(MLFeed.PermuteKeyDomain)).collect()
+
   test("MLFeed.batchIds at epoch 1 after epoch 0 compiles nothing new") {
-    val df: DataFrame = spark.range(0, 200).toDF("id")
-    def run(epoch: Int): Unit =
-      MLFeed.batchIds(df, Seq(MLFeed.epochShuffleKey(col("id"), epoch)), 8,
-        keyDomain = Some(MLFeed.PermuteKeyDomain)).collect()
     withStablePlans {
-      run(0)
-      compiles(run(1)) shouldBe 0L
+      batchIdsEpoch(0)
+      compiles(batchIdsEpoch(1)) shouldBe 0L
+    }
+  }
+
+  test("MLFeed.batchIds at epoch 1 after epoch 0 compiles nothing new, with AQE on") {
+    withConfs(Seq("spark.sql.codegen.useIdInClassName" -> "false",
+        "spark.sql.adaptive.enabled" -> "true")) {
+      batchIdsEpoch(0)
+      compiles(batchIdsEpoch(1)) shouldBe 0L
     }
   }
 }

@@ -23,6 +23,24 @@ class PlanContractSpec extends SparkSpec {
     assert(exchanges.size == 1 && exchanges.head.contains("p_brand"), exchanges.mkString("\n"))
   }
 
+  test("q15 batchIds global rank: no cross join, and the row exchange waits on no broadcast") {
+    val lines = plan("q15_batches").linesIterator.toIndexedSeq
+    val p = lines.mkString("\n")
+    p should not include "CartesianProduct"
+    p should not include "BroadcastNestedLoopJoin"
+    // the operator's column in the tree string is its depth; the
+    // subtree of line i is every following line indented deeper
+    def depth(l: String) = l.indexWhere(_.isLetter)
+    val rowExchanges = lines.indices.filter(i =>
+      lines(i).contains("Exchange hashpartitioning(_pid"))
+    assert(rowExchanges.nonEmpty, p)
+    rowExchanges.foreach { i =>
+      val below = lines.drop(i + 1).takeWhile(depth(_) > depth(lines(i)))
+      assert(!below.exists(_.contains("BroadcastExchange")),
+        s"broadcast below the row-bearing exchange:\n$p")
+    }
+  }
+
   test("q07 tumbling tiling: exactly one shuffle (the patch aggregation)") {
     val p = plan("q07_tile_tumbling")
     assert(p.linesIterator.count(_.contains("Exchange hashpartitioning")) == 1, p)
@@ -32,11 +50,10 @@ class PlanContractSpec extends SparkSpec {
     // An unpartitioned window/sort funnels all rows through one task and
     // compiles to `Exchange SinglePartition` — the scale hazard the
     // two-pass rank machinery exists to avoid, so its appearance is
-    // guilty until proven tiny. The known-tiny exemptions: the
-    // per-bucket count frames of the global-rank helpers (numBuckets
-    // rows) in q14/q15/q37, and q36's scalar dims probe (one row).
-    val tinyByDesign = Set("q14_exact_split", "q15_batches", "q37_catalog",
-      "q36_patch_matrix",
+    // guilty until proven tiny. The known-tiny exemption: q36's scalar
+    // dims probe (one row). The global-rank offsets are one keyless
+    // aggregate (a scalar merge), so q14/q15/q37 need none.
+    val tinyByDesign = Set("q36_patch_matrix",
       // q129: every window runs over the FIXED bootstrap sample (500
       // rows by contract) or the B-row means frame — sample-bounded,
       // not corpus-bounded
