@@ -260,46 +260,32 @@ object LakeMaintenance {
           .filter(r => r.valid && r.has_stats &&
             r.col_path == leaves.head.path)
         val rows = cols.head.n.toLong
-        val cj = TxLog.cstatsJson(cstatsOfCols(cols))
+        val cs = cstatsOfCols(cols)
         if (st.isEmpty)
-          (p, rows, None: Option[Long], None: Option[Long], cj)
+          (p, rows, None: Option[Long], None: Option[Long], cs)
         else (p, rows, Some(st.map(_.min_long).min),
-          Some(st.map(_.max_long).max), cj)
+          Some(st.map(_.max_long).max), cs)
       }
       .collect() // bounded: one row per BIN (metadata)
 
     val removes = work.flatten.map(f =>
       s"""{"remove":{"path":"${TxLog.requireJsonSafe(f.path)}"}}""")
-    def jsafe(v: String): Option[String] = TxLog.jsonSafe(v)
     val adds = results.zipWithIndex.map {
-      case ((p, rows, mn, mx, cj), i) =>
+      case ((p, rows, mn, mx, cs), i) =>
       val bin = work(i) // parallelize+map+collect preserves order
-      val stats = (mn, mx) match {
-        case (Some(a), Some(b)) => s""","min_key":$a,"max_key":$b"""
-        case _ => ""
-      }
       // the bin never crosses partition values → the rewritten file
       // keeps the part; the skey window is the UNION of the members'
       // (sound — wider never wrongly prunes), carried only when every
       // member has one
-      val pv = bin.head.part.flatMap(jsafe)
+      val part = bin.head.part
         .filter(_ => bin.forall(_.part == bin.head.part))
-        .map(v => s""","part":"$v"""").getOrElse("")
-      val sk =
-        if (bin.forall(f => f.minSkey.isDefined && f.maxSkey.isDefined)) {
-          val mnS = bin.map(_.minSkey.get).min(utf8Ord)
-          val mxS = bin.map(_.maxSkey.get).max(utf8Ord)
-          (jsafe(mnS), jsafe(mxS)) match {
-            case (Some(a), Some(b)) =>
-              s""","min_skey":"$a","max_skey":"$b""""
-            case _ => ""
-          }
-        } else ""
+      val skeys = bin.forall(f => f.minSkey.isDefined && f.maxSkey.isDefined)
       // dataChange=false (r12, the Delta flag): compaction REWRITES
       // existing rows — a change-feed consumer must not re-emit them.
-      // cstats last (the driver-side parser anchors on the tail).
-      s"""{"add":{"path":"${TxLog.requireJsonSafe(p)}","size":$rows""" +
-        s"""$stats$sk$pv,"dataChange":false$cj}}"""
+      TxLog.renderAdd(TxLog.LiveFile(p, 0L, rows, mn, mx,
+        Option.when(skeys)(bin.map(_.minSkey.get).min(utf8Ord)),
+        Option.when(skeys)(bin.map(_.maxSkey.get).max(utf8Ord)),
+        part, cstats = cs), None, 0L, Some(false))
     }
     val v = commitMaintenance(root, work.flatten.map(_.path).toSeq,
       (removes ++ adds).toSeq :+ TxLog.commitInfoLine("OPTIMIZE"),
@@ -607,7 +593,7 @@ object LakeMaintenance {
     val rootDir = root
     val nFields = df.columns.length
     val written: Array[(String, Long, Option[(Long, Long)],
-        Option[(String, String)], String)] = placed.rdd
+        Option[(String, String)], Seq[TxLog.ColStat])] = placed.rdd
       .mapPartitions { rows =>
         // sorted by (_gz_b, z, tie): one output file per bucket RUN.
         // rowsToCols reads only the leading schema fields, so the
@@ -616,7 +602,7 @@ object LakeMaintenance {
         // and sort above it ran as Catalyst operators.
         val buf = scala.collection.mutable.ArrayBuffer
           .empty[(String, Long, Option[(Long, Long)],
-            Option[(String, String)], String)]
+            Option[(String, String)], Seq[TxLog.ColStat])]
         val it = rows.buffered
         while (it.hasNext) {
           val b = it.head.getLong(nFields + 2) // _gz_b
@@ -630,7 +616,7 @@ object LakeMaintenance {
           val p = s"$rootDir/data/zorder-$run-$b.parquet"
           java.nio.file.Files.write(
             java.nio.file.Paths.get(p), bytes): Unit
-          val cj = TxLog.cstatsJson(cstatsOfCols(cols2))
+          val cs = cstatsOfCols(cols2)
           // key window from the REWRITTEN file's own footer, on the
           // column readers prune with; all-null/absent → no window
           val st =
@@ -649,25 +635,18 @@ object LakeMaintenance {
             }
           }
           val sw = if (mnS == null) None else Some((mnS, mxS))
-          buf += ((p, rs.length.toLong, kw, sw, cj))
+          buf += ((p, rs.length.toLong, kw, sw, cs))
         }
         buf.iterator
       }
       .collect() // bounded: one metadata row per OUTPUT file
-    def jsafe(v: String): Option[String] = TxLog.jsonSafe(v)
     val lines =
       live.map(f =>
         s"""{"remove":{"path":"${TxLog.requireJsonSafe(f.path)}"}}""") ++
-      written.map { case (p, rows, kw, sw, cj) =>
-        val kstats = kw.map { case (mn, mx) =>
-          s""","min_key":$mn,"max_key":$mx""" }.getOrElse("")
-        val sstats = sw.flatMap { case (mn, mx) =>
-          for (x <- jsafe(mn); y <- jsafe(mx))
-            yield s""","min_skey":"$x","max_skey":"$y"""" }.getOrElse("")
-        val pv = partition.flatMap(kv => jsafe(kv._2))
-          .map(v => s""","part":"$v"""").getOrElse("")
-        s"""{"add":{"path":"${TxLog.requireJsonSafe(p)}","size":$rows""" +
-          s"""$kstats$sstats$pv,"dataChange":false$cj}}"""
+      written.map { case (p, rows, kw, sw, cs) =>
+        TxLog.renderAdd(TxLog.LiveFile(p, 0L, rows, kw.map(_._1),
+          kw.map(_._2), sw.map(_._1), sw.map(_._2),
+          partition.map(_._2), cstats = cs), None, 0L, Some(false))
       }
     val v = commitMaintenance(root, live.map(_.path).toSeq,
       lines.toSeq :+ TxLog.commitInfoLine("ZORDER"),
@@ -833,13 +812,13 @@ object LakeMaintenance {
     * per-file metadata. `tag` disambiguates output names within a
     * run. Returns (mode 0=tombstone/1=rewrite/2=dv/3=untouched,
     * oldPath, newPath, rows, minKey, maxKey, matchedKeys,
-    * deletedRows, cdcPath, cdcRows, cstatsJson, dvPath, dvDead). */
+    * deletedRows, cdcPath, cdcRows, cstats, dvPath, dvDead). */
   private[graft] def rewriteOneFile(f: TxLog.LiveFile,
       upd: scala.collection.Map[Long, Array[Any]],
       del: scala.collection.Set[Long],
       keyPhys: String, dvThr: Double, root: String, run: String,
       tag: String): (Int, String, String, Long, Long, Long,
-        Seq[Long], Long, String, Long, String, String, Long) = {
+        Seq[Long], Long, String, Long, Seq[TxLog.ColStat], String, Long) = {
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(f.path))
     val (leaves, fileCols) = ParquetFile.readFileColumns(bytes)
@@ -893,11 +872,11 @@ object LakeMaintenance {
       // stats said maybe, the file says no: UNTOUCHED (mode 3)
       // — no remove, no add, no rewrite (self-review r14: the
       // r12 path rewrote such files for nothing)
-      (3, f.path, "", 0L, 0L, 0L, matched, 0L, "", 0L, "", "",
+      (3, f.path, "", 0L, 0L, 0L, matched, 0L, "", 0L, Seq.empty, "",
         0L)
     else if (keep.isEmpty) // every live row died: remove-only
       (0, f.path, "", 0L, 0L, 0L, matched,
-        delIdx.length.toLong, cdc._1, cdc._2, "", "", 0L)
+        delIdx.length.toLong, cdc._1, cdc._2, Seq.empty, "", 0L)
     else if (updIdx.nonEmpty &&
         (updIdx.length + delIdx.length).toDouble / n <= dvThr) {
       // MERGE-ON-READ update (r15 — the r14 verdict's #6 ask: Delta's
@@ -933,7 +912,7 @@ object LakeMaintenance {
       (4, f.path, p, byKey.length.toLong,
         byKey.map(newKey).min, byKey.map(newKey).max,
         matched, delIdx.length.toLong, cdc._1, cdc._2,
-        TxLog.cstatsJson(cstatsOfCols(outCols)), dp,
+        cstatsOfCols(outCols), dp,
         ords.length.toLong)
     }
     else if (updIdx.isEmpty && delIdx.nonEmpty &&
@@ -956,7 +935,7 @@ object LakeMaintenance {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(dp), db): Unit
       (2, f.path, "", 0L, 0L, 0L, matched,
-        delIdx.length.toLong, cdc._1, cdc._2, "", dp,
+        delIdx.length.toLong, cdc._1, cdc._2, Seq.empty, dp,
         ords.length.toLong)
     } else {
       // per-column output over the SURVIVING rows, applying the
@@ -978,10 +957,10 @@ object LakeMaintenance {
       val st = ParquetFile.parse(0L, out)
         .filter(r => r.valid && r.has_stats &&
           r.col_path == keyPhys)
-      val cj = TxLog.cstatsJson(cstatsOfCols(outCols))
       (1, f.path, p, keep.length.toLong,
         st.map(_.min_long).min, st.map(_.max_long).max,
-        matched, delIdx.length.toLong, cdc._1, cdc._2, cj,
+        matched, delIdx.length.toLong, cdc._1, cdc._2,
+        cstatsOfCols(outCols),
         "", 0L)
     }
   }
@@ -995,7 +974,12 @@ object LakeMaintenance {
   private final case class RewriteMeta(mode: Int, oldPath: String,
       newPath: String, rows: Long, minKey: Long, maxKey: Long,
       fileMatched: Long, cdcPath: String, cdcRows: Long,
-      cstatsJson: String, dvPath: String, dvDead: Long)
+      cstats: Seq[TxLog.ColStat], dvPath: String, dvDead: Long)
+
+  /** One merge insert file: (path, rows, minKey, maxKey, cdcPath,
+    * cstats). */
+  private type InsertMeta = (String, Long, Long, Long, String,
+    Seq[TxLog.ColStat])
 
   /** The ONE merge-commit renderer (r15 review: the line building was
     * a hand-mirrored copy in both paths — the digest-identity law
@@ -1005,40 +989,31 @@ object LakeMaintenance {
     * re-adds, mode-4 DV re-add + small update add, insert adds, then
     * every CDC sidecar. Returns (lines, writtenPaths). */
   private def mergeCommitLines(metas: Seq[RewriteMeta],
-      inserts: Seq[(String, Long, Long, Long, String, String)],
+      inserts: Seq[InsertMeta],
       liveByPath: Map[String, TxLog.LiveFile],
       stampKey: Boolean): (Seq[String], Seq[String]) = {
+    def add(p: String, rows: Long, mn: Long, mx: Long,
+        cs: Seq[TxLog.ColStat], part: Option[String]): String =
+      TxLog.renderAdd(TxLog.LiveFile(p, 0L, rows,
+        Some(mn).filter(_ => stampKey), Some(mx).filter(_ => stampKey),
+        part = part, cstats = cs), None, 0L, None)
     val lines =
       metas.filter(m => m.mode == 0 || m.mode == 1).map(m =>
         s"""{"remove":{"path":"${TxLog.requireJsonSafe(m.oldPath)}"}}""") ++
-      metas.filter(_.mode == 1).map { m =>
-        val kw = if (stampKey)
-          s""","min_key":${m.minKey},"max_key":${m.maxKey}""" else ""
-        val pv =
-          if (m.fileMatched == 0L)
-            liveByPath(m.oldPath).part.flatMap(TxLog.jsonSafe)
-              .map(v => s""","part":"$v"""").getOrElse("")
-          else ""
-        s"""{"add":{"path":"${TxLog.requireJsonSafe(m.newPath)}","size":${m.rows}""" +
-          s"""$kw$pv${m.cstatsJson}}}"""
-      } ++
+      metas.filter(_.mode == 1).map(m =>
+        add(m.newPath, m.rows, m.minKey, m.maxKey, m.cstats,
+          if (m.fileMatched == 0L) liveByPath(m.oldPath).part
+          else None)) ++
       metas.filter(_.mode == 2).map(m =>
         TxLog.renderAdd(liveByPath(m.oldPath), Some(m.dvPath),
           m.dvDead, Some(false))) ++
       metas.filter(_.mode == 4).map(m =>
         TxLog.renderAdd(liveByPath(m.oldPath), Some(m.dvPath),
           m.dvDead, Some(false))) ++
-      metas.filter(_.mode == 4).map { m =>
-        val kw = if (stampKey)
-          s""","min_key":${m.minKey},"max_key":${m.maxKey}""" else ""
-        s"""{"add":{"path":"${TxLog.requireJsonSafe(m.newPath)}","size":${m.rows}""" +
-          s"""$kw${m.cstatsJson}}}"""
-      } ++
-      inserts.map { case (p, rows, mn, mx, _, cj) =>
-        val kw = if (stampKey)
-          s""","min_key":$mn,"max_key":$mx""" else ""
-        s"""{"add":{"path":"${TxLog.requireJsonSafe(p)}","size":$rows""" +
-          s"""$kw$cj}}"""
+      metas.filter(_.mode == 4).map(m =>
+        add(m.newPath, m.rows, m.minKey, m.maxKey, m.cstats, None)) ++
+      inserts.map { case (p, rows, mn, mx, _, cs) =>
+        add(p, rows, mn, mx, cs, None)
       } ++
       metas.filter(_.cdcPath.nonEmpty).map(m =>
         s"""{"cdc":{"path":"${TxLog.requireJsonSafe(m.cdcPath)}",""" +
@@ -1230,14 +1205,14 @@ object LakeMaintenance {
 
     // (mode 0=tombstone/1=rewrite/2=dv, oldPath, newPath, rows,
     // minKey, maxKey, matchedKeys, deletedRows, cdcPath ("" = no
-    // changes in this file), cdcRows, cstatsJson, dvPath, dvDead) —
+    // changes in this file), cdcRows, cstats, dvPath, dvDead) —
     // tuples, not a method-local case class: local classes capture
     // enclosing scope and break task serialization
     val dvThr = dvThreshold
     val rootV = root
     val keyPhysV = keyPhys
     val rewritten: Array[(Int, String, String, Long, Long, Long,
-        Seq[Long], Long, String, Long, String, String, Long)] =
+        Seq[Long], Long, String, Long, Seq[TxLog.ColStat], String, Long)] =
       if (candidates.isEmpty) Array.empty
       else spark.sparkContext
         .parallelize(candidates.zipWithIndex,
@@ -1261,7 +1236,7 @@ object LakeMaintenance {
         .sortBy(_._1)
     // insert file: built from the changeset rows, key-sorted, over
     // the table schema's column templates; plus its CDC sidecar
-    val insertAdd: Option[(String, Long, Long, Long, String, String)] =
+    val insertAdd: Option[InsertMeta] =
       if (inserts.isEmpty) None
       else {
         val cols: Seq[ParquetWrite.Col] = schemaLeaves.zipWithIndex
@@ -1278,7 +1253,7 @@ object LakeMaintenance {
         val cp = s"$root/data/cdc-$run-insert.parquet"
         java.nio.file.Files.write(java.nio.file.Paths.get(cp), cb): Unit
         Some((p, inserts.size.toLong, inserts.head._1,
-          inserts.last._1, cp, TxLog.cstatsJson(cstatsOfCols(cols))))
+          inserts.last._1, cp, cstatsOfCols(cols)))
       }
     if (rewritten.isEmpty && insertAdd.isEmpty)
       return MergeResult(0, 0L, 0L, -1L)
@@ -1315,7 +1290,8 @@ object LakeMaintenance {
   final case class MergeTaskOut(kind: Int, mode: Int, oldPath: String,
       newPath: String, rows: Long, minKey: Long, maxKey: Long,
       fileMatched: Long, deletedRows: Long, cdcPath: String,
-      cdcRows: Long, cstatsJson: String, dvPath: String, dvDead: Long,
+      cdcRows: Long, cstats: Seq[TxLog.ColStat], dvPath: String,
+      dvDead: Long,
       key: Long)
 
   /** DISTRIBUTED join-based MERGE (r15 — the r14 verdict's #1 ask:
@@ -1549,7 +1525,7 @@ object LakeMaintenance {
                 t._5, t._6, t._7.size.toLong, t._8, t._9, t._10,
                 t._11, t._12, t._13, 0L)) ++
                 t._7.iterator.map(k => MergeTaskOut(1, 0, "", "", 0L,
-                  0L, 0L, 0L, 0L, "", 0L, "", "", 0L, k))
+                  0L, 0L, 0L, 0L, "", 0L, Seq.empty, "", 0L, k))
             }(Encoders.product[MergeTaskOut])
             .persist(StorageLevel.MEMORY_AND_DISK)
         try {
@@ -1570,7 +1546,7 @@ object LakeMaintenance {
           val nIns = if (nInsOps == 0L) 0L else insDf.count()
           val bLeaves = spark.sparkContext.broadcast(
             schemaLeaves.toArray)
-          val insMetas: Array[(String, Long, Long, Long, String, String)] =
+          val insMetas: Array[InsertMeta] =
             if (nIns == 0L) Array.empty
             else {
               val nf = math.max(1L,
@@ -1606,9 +1582,9 @@ object LakeMaintenance {
                       java.nio.file.Paths.get(cp), cb): Unit
                     Iterator.single((p, rows.length.toLong,
                       rows.head.getLong(0), rows.last.getLong(0), cp,
-                      TxLog.cstatsJson(cstatsOfCols(cols2))))
+                      cstatsOfCols(cols2)))
                   }
-                }(Encoders.product[(String, Long, Long, Long, String, String)])
+                }(Encoders.product[InsertMeta])
                 .collect() // O(insert files) — metadata
             }
           if (metas.isEmpty && insMetas.isEmpty)
@@ -1620,7 +1596,7 @@ object LakeMaintenance {
           val (lines, writtenPaths) = mergeCommitLines(
             metas.toSeq.map(m => RewriteMeta(m.mode, m.oldPath,
               m.newPath, m.rows, m.minKey, m.maxKey, m.fileMatched,
-              m.cdcPath, m.cdcRows, m.cstatsJson, m.dvPath,
+              m.cdcPath, m.cdcRows, m.cstats, m.dvPath,
               m.dvDead)),
             insMetas.toSeq, liveByPath, stampKey)
           if (lines.isEmpty) return MergeResult(0, 0L, 0L, -1L)
@@ -1856,8 +1832,8 @@ object LakeMaintenance {
     val lines =
       Seq(TxLog.metaDataLine(cols)) ++
       metas.toSeq.map { case (p, rows, mn, mx, hasKey, _, _) =>
-        val kw = if (hasKey) s""","min_key":$mn,"max_key":$mx""" else ""
-        s"""{"add":{"path":"${TxLog.requireJsonSafe(p)}","size":$rows$kw}}"""
+        TxLog.renderAdd(TxLog.LiveFile(p, 0L, rows,
+          Option.when(hasKey)(mn), Option.when(hasKey)(mx)), None, 0L, None)
       } :+
       TxLog.commitInfoLine("CONVERT")
     try TxLog.commitVersion(s"$root/log", 0L, lines)

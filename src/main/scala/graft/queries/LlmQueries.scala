@@ -7,7 +7,7 @@ import graft.Tables
 import graft.codec.Bytes
 import graft.functions.TextFns
 import graft.operators.{BloomPrune, Bpe, CharsetDecode, Curation, Dedup, Drift, FuzzyJoin, Gif, GraphRank, HeavyHitters, Html, Http, Jpeg, Mp3, Mp4, Multimodal, NaiveBayes, Packing, Pdf, Pii, Robots, Sampling, Similarity, Sitemap, Spectral, SuffixArray, Tar, Tiff, Warc, Wet}
-import graft.operators.{Avro, DomainSuffix, ParquetFile, TxLog, Zip}
+import graft.operators.{Avro, DomainSuffix, ParquetFile, ParquetWrite, TxLog, Zip}
 import TextFns._
 
 /** Driver-contract queries for the LLM-data-pipeline operator family
@@ -444,6 +444,36 @@ object LlmQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
 
+  /** The `(doc_id, n_chars: long, lang)` projection the lake gates
+    * build their tables from. */
+  private def docCols(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir).select(col("doc_id"),
+      col("n_chars").cast("long").as("n_chars"), col("lang"))
+
+  /** The lake gates' read-back: per `lang`, the row count `n` and the
+    * `sum_chars` of `n_chars`. */
+  private def langAgg(df: DataFrame): DataFrame =
+    df.groupBy(col("lang"))
+      .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
+
+  /** The add line of a lake fixture file: `rows` rows whose doc_id
+    * window is `[mn, mx]`, in partition `part` if any. */
+  private def fixtureAdd(p: String, rows: Long, mn: Long, mx: Long,
+      part: Option[String] = None): String =
+    TxLog.renderAdd(TxLog.LiveFile(p, 0L, rows, Some(mn), Some(mx),
+      part = part), None, 0L, None)
+
+  /** Write `cols` as `base/data/boot.parquet` and commit it as v0;
+    * `keys` are its doc_ids, ascending and non-empty. */
+  private def bootCommit(base: String, cols: Seq[ParquetWrite.Col],
+      keys: Array[Long]): Unit = {
+    val p = s"$base/data/boot.parquet"
+    java.nio.file.Files.write(java.nio.file.Paths.get(p),
+      ParquetWrite.writeFile(cols)): Unit
+    TxLog.commitVersion(s"$base/log", 0L,
+      Seq(fixtureAdd(p, keys.length, keys.head, keys.last)))
+  }
+
   /** The id feed for the codec-synthesis gates (media/pages/rows =
     * one synthesized artifact per doc_id). r16: spread across the box
     * — the single-file single-row-group input layout made every
@@ -466,48 +496,14 @@ object LlmQueries {
     * the MERGE. Returns v0's add lines. Bench calls this untimed via
     * the query's `prepare` hook; Verify and ad-hoc runs hit the same
     * memoization on first use. */
-  /** 48-bit md5 prefix of `dir` — MEMOIZED-fixture keys must not ride
-    * 32-bit String.hashCode (ADVICE r16: a hashCode collision between
-    * two data dirs would silently serve the first dir's memoized
-    * fixture to the second; md5 makes that practically impossible). */
-  private def dirMd5(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8"))
-      .take(6).map(b => f"$b%02x").mkString
-
-  /** Delete a template tree on JVM exit (ADVICE r16: the data-file
-    * templates leaked one warehouse per application under tmpdir —
-    * repeated large-SF runs accumulated unbounded tmp usage). */
-  private val cleanupRegistered =
-    scala.collection.mutable.Set.empty[String]
-  private def deleteTreeOnExit(path: String): Unit =
-    cleanupRegistered.synchronized {
-      if (cleanupRegistered.add(path))
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def del(f: java.io.File): Unit = {
-            if (f.isDirectory)
-              Option(f.listFiles()).toSeq.flatten.foreach(del)
-            f.delete(): Unit
-          }
-          del(new java.io.File(path))
-        }))
-    }
-
   private val lakemdLock = new Object
   private def lakemdTemplate(s: SparkSession, dir: String): Seq[String] =
     lakemdLock.synchronized {
       import s.implicits._
-      val tpl = s"${System.getProperty("java.io.tmpdir")}/graft_lakemd_tpl_" +
-        s.sparkContext.applicationId + "_" + dirMd5(dir)
-      deleteTreeOnExit(tpl)
+      val tpl = Scratch.dir(s, "lakemd_tpl", dir, wipe = false)
       val marker = new java.io.File(s"$tpl/lines.txt")
       if (!marker.isFile) {
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory)
-            Option(f.listFiles()).toSeq.flatten.foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(tpl))
+        Scratch.deleteTree(new java.io.File(tpl))
         new java.io.File(s"$tpl/data").mkdirs(): Unit
         val lines = docs(s, dir)
           .select((col("doc_id") / 256).cast("long").as("g"),
@@ -531,9 +527,8 @@ object LlmQueries {
             val st = graft.operators.ParquetFile.parse(g, bytes)
               .filter(r => r.valid && r.col_path == "doc_id" &&
                 r.has_stats)
-            (g, s"""{"add":{"path":"$p","size":${rows.length}""" +
-              s""","min_key":${st.map(_.min_long).min}""" +
-              s""","max_key":${st.map(_.max_long).max}}}""")
+            (g, fixtureAdd(p, rows.length, st.map(_.min_long).min,
+              st.map(_.max_long).max))
           }
           .collect().sortBy(_._1).map(_._2).toSeq
         java.nio.file.Files.write(marker.toPath,
@@ -559,23 +554,16 @@ object LlmQueries {
   private val sqlw263Lock = new Object
   private def sqlw263Template(s: SparkSession, dir: String): String =
     sqlw263Lock.synchronized {
-      // the template CATALOG name must carry the dir hash: Spark
+      // the template CATALOG name must carry the dir key: Spark
       // caches catalog instances per NAME per session, so one name
       // serving two test dirs would keep the first dir's warehouse.
-      // md5, not String.hashCode: a 32-bit collision between two dirs
-      // would silently serve the first dir's MEMOIZED data to the
-      // second (the per-run paths elsewhere only risk path reuse,
-      // never a wrong memoized fixture).
-      val hex = dirMd5(dir)
-      val cat = s"graft_c263t_$hex"
-      val tpl = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw263tpl_" +
-        s.sparkContext.applicationId + "_" + hex
-      deleteTreeOnExit(tpl)
+      val cat = s"graft_c263t_${Scratch.md5(dir)}"
+      val tpl = Scratch.dir(s, "sqlw263tpl", dir, wipe = false)
       val marker = new java.io.File(s"$tpl/done.txt")
       if (!marker.isFile) {
+        Scratch.deleteTree(new java.io.File(tpl))
         sqlLakeReset(s, cat, tpl)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        docCols(s, dir)
           .createOrReplaceTempView("q263_tpl_src")
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db"): Unit
         s.sql(s"""CREATE TABLE $cat.db.t (
@@ -614,20 +602,16 @@ object LlmQueries {
     new java.io.File(s"$base/$rel/data").mkdirs(): Unit
   }
 
-  /** Register a LakeCatalog under `name` rooted at `base` and wipe the
-    * warehouse (the SQL-surface gates bootstrap per run; the catalog
-    * instance is cached per session, so `base` must be stable within
-    * one session — it carries the applicationId only). */
+  /** Register a LakeCatalog under `name` rooted at the freshly wiped
+    * warehouse `base` and return `base` (the SQL-surface gates
+    * bootstrap per run; the catalog instance is cached per session, so
+    * `base` must be stable within one session: [[Scratch.appDir]]). */
   private def sqlLakeReset(s: SparkSession, name: String,
-      base: String): Unit = {
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(del)
-      f.delete(): Unit
-    }
-    del(new java.io.File(base))
+      base: String): String = {
     new java.io.File(base).mkdirs(): Unit
     s.conf.set(s"spark.sql.catalog.$name", "graft.sources.LakeCatalog")
     s.conf.set(s"spark.sql.catalog.$name.warehouse", base)
+    base
   }
 
   /** The q258 delete key set — deterministic, shared verbatim with the
@@ -647,15 +631,7 @@ object LlmQueries {
       extraOpts: Map[String, String] = Map.empty)
       : Dataset[(Long, Array[Byte])] = {
     import s.implicits._
-    // per-run artifact path (the q142/q146 rule: no cross-run race)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_pqp_" +
-      tag + "_" + s.sparkContext.applicationId + "_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(del)
-      f.delete(): Unit
-    }
-    del(new java.io.File(base))
+    val base = Scratch.dir(s, s"pqp_$tag", dir)
     docs(s, dir).select(col("doc_id"), col("lang"), col("source"),
         col("n_chars").cast("long").as("n_chars"))
       .repartition(1).sortWithinPartitions("doc_id")
@@ -755,17 +731,11 @@ object LlmQueries {
   private val dlogTplLock = new Object
   private def deltaLogTemplate(s: SparkSession, dir: String, v: Int,
       onePerCommit: Boolean): Option[String] = dlogTplLock.synchronized {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_dltpl_" +
-      v + (if (onePerCommit) "c" else "") + "_" +
-      s.sparkContext.applicationId + "_" + dirMd5(dir)
-    deleteTreeOnExit(base)
+    val base = Scratch.dir(s,
+      s"dltpl_$v" + (if (onePerCommit) "c" else ""), dir, wipe = false)
     val marker = new java.io.File(s"$base/done.txt")
     if (!marker.isFile) {
-      def del(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(del)
-        f.delete(): Unit
-      }
-      del(new java.io.File(base))
+      Scratch.deleteTree(new java.io.File(base))
       new java.io.File(base).mkdirs(): Unit
       val has = writeDeltaLog(s, dir, s"$base/log", v, onePerCommit)
       java.nio.file.Files.write(marker.toPath,
@@ -3371,9 +3341,7 @@ object LlmQueries {
     // trip.
     "q168_dedup_ledger" -> Query(
       (s, dir) => {
-        // per-run artifact path (the q142/q146 rule: no cross-run race)
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_ledger_" +
-          s.sparkContext.applicationId + "_" + dirMd5(dir)
+        val base = Scratch.dir(s, "ledger", dir, wipe = false)
         // r16: spread — both ledger arms tokenize/minhash map-side
         val d = Tables.spread(
           docs(s, dir).select(col("doc_id"), col("text")))
@@ -3513,20 +3481,7 @@ object LlmQueries {
     // side-effecting precedent).
     "q142_shard_sink" -> Query(
       (s, dir) => {
-        // Keyed by (applicationId, input dir): deterministic WITHIN a
-        // run (same path on re-execution, so the delete-then-write
-        // stays idempotent) but disjoint ACROSS concurrent harness
-        // runs over the same data dir — two drivers racing on a shared
-        // delete-then-write path would corrupt each other's manifest
-        // (ADVICE r7).
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_shards_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "shards", dir)
         val d = docs(s, dir).select(col("doc_id"), col("n_chars"))
         val plan = Curation.shardPlan(d, col("n_chars"), col("doc_id"),
           NumShards)
@@ -3548,11 +3503,7 @@ object LlmQueries {
     // retrain→publish→assign lifecycle every IVF deployment runs.
     "q146_codebook_roundtrip" -> Query(
       (s, dir) => {
-        // Per-run path (q142 rationale): concurrent runs must not race
-        // on the codebook artifact's delete-then-write.
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_cb_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
+        val base = Scratch.dir(s, "cb", dir, wipe = false)
         val emb = Tables.embeddings(s, dir)
         Similarity.saveCodebook(emb, col("vec_id") % 125 === 7, base)
         Similarity.assignCells(emb, Similarity.loadCodebook(s, base))
@@ -4453,10 +4404,7 @@ object LlmQueries {
     "q151_bpe_artifact" -> Query(
       (s, dir) => {
         import s.implicits._
-        // per-run artifact path (the q142/q146 rule: no cross-run race)
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_merges_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
+        val base = Scratch.dir(s, "merges", dir, wipe = false)
         Bpe.saveMerges(s, BpeMerges, base)
         val loaded = Bpe.loadMerges(s, base)
         Bpe.tokenize(
@@ -5297,15 +5245,7 @@ object LlmQueries {
     // never a document.
     "q190_recrawl_triage" -> Query(
       (s, dir) => {
-        // applicationId-keyed artifact path (the q142/ADVICE-r7 rule)
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_recrawl_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "recrawl", dir)
         val today = docs(s, dir).select(col("doc_id"),
             explode(sequence(lit(0), lit(2) + col("doc_id") % 6)).as("i"))
           .withColumn("seed", col("doc_id") % 13)
@@ -5628,10 +5568,7 @@ object LlmQueries {
     // raw text, so a drifted artifact cannot match.
     "q198_sa_artifact" -> Query(
       (s, dir) => {
-        // per-run artifact path (the q142/q146 rule: no cross-run race)
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sa_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
+        val base = Scratch.dir(s, "sa", dir, wipe = false)
         val d = docs(s, dir)
         SuffixArray.saveSuffixRanks(d, "doc_id", "text", SaCap, base)
         SuffixArray.duplicateSpansFrom(
@@ -5969,15 +5906,7 @@ object LlmQueries {
     "q202_parquet_footer" -> Query(
       (s, dir) => {
         import s.implicits._
-        // per-run artifact path (the q142/q146 rule: no cross-run race)
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_pqf_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "pqf", dir)
         docs(s, dir).select(col("doc_id"), col("lang"),
             col("n_chars").cast("long").as("n_chars"))
           .repartition(1).sortWithinPartitions("doc_id")
@@ -6145,14 +6074,7 @@ object LlmQueries {
         // checkpoint dir this gate's OPERATOR writes — checkpoint
         // writing + pointer→checkpoint→tail resolution stay timed.
         val log = deltaLogTemplate(s, dir, 48, onePerCommit = true)
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "ckpt", dir)
         log.foreach { lg =>
           Seq(9L, 19L, 29L, 39L).foreach(v =>
             TxLog.writeCheckpoint(s, lg, s"$base/ckpt", v))
@@ -6186,14 +6108,7 @@ object LlmQueries {
         // dirs are only the streaming state + checkpoint the TAIL —
         // the operator under test — writes per micro-batch.
         val log = deltaLogTemplate(s, dir, 48, onePerCommit = true)
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_tail_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "tail", dir)
         val state = log.flatMap(lg =>
           TxLog.tailOnce(s, lg, s"$base/state",
             s"$base/sckpt", filesPerTrigger = 8))
@@ -6226,14 +6141,7 @@ object LlmQueries {
     "q219_parquet_list_read" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_plist_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "plist", dir)
         Tables.embeddings(s, dir).select(col("vec_id"),
             when(col("vec_id") % 13 === 0,
               lit(null).cast("array<float>"))
@@ -6301,14 +6209,7 @@ object LlmQueries {
     "q214_lakehouse_scan" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lake_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lake", dir)
         val d = docs(s, dir).select(col("doc_id"),
           col("n_chars").cast("long").as("n_chars"))
         // bounded scalar probe (the Curation/Drift precedent): the
@@ -6397,14 +6298,7 @@ object LlmQueries {
     "q216_parquet_writer" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_pqw_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "pqw", dir)
         new java.io.File(base).mkdirs()
         docs(s, dir).select((col("doc_id") / 256).cast("long").as("g"),
             col("doc_id"), col("n_chars").cast("long").as("n_chars"),
@@ -6462,14 +6356,7 @@ object LlmQueries {
     "q220_parquet_writer_v2" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_pqw2_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "pqw2", dir)
         new java.io.File(base).mkdirs()
         docs(s, dir).select((col("doc_id") / 1024).cast("long").as("g"),
             col("doc_id"), col("n_chars").cast("long").as("n_chars"),
@@ -6632,36 +6519,20 @@ object LlmQueries {
     "q254_lake_history" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakeh_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakeh", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         val boot = d.where(col("doc_id") % 2 === 0)
           .as[(Long, Long, String)].collect().sortBy(_._1)
         if (boot.isEmpty)
           Seq.empty[(String, Long, Long)]
             .toDF("op", "n_commits", "rows_added")
         else {
-          val bytes = graft.operators.ParquetWrite.writeFile(Seq(
-            graft.operators.ParquetWrite.LongCol("doc_id",
-              boot.map(_._1)),
-            graft.operators.ParquetWrite.LongCol("n_chars",
-              boot.map(_._2)),
-            graft.operators.ParquetWrite.StrCol("lang",
-              boot.map(_._3))))
-          java.nio.file.Files.write(java.nio.file.Paths.get(
-            s"$base/data/boot.parquet"), bytes): Unit
-          graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
-            s"""{"add":{"path":"$base/data/boot.parquet",""" +
-              s""""size":${boot.length},"min_key":${boot.head._1},""" +
-              s""""max_key":${boot.last._1}}}"""))
+          bootCommit(base, Seq(
+            ParquetWrite.LongCol("doc_id", boot.map(_._1)),
+            ParquetWrite.LongCol("n_chars", boot.map(_._2)),
+            ParquetWrite.StrCol("lang", boot.map(_._3))),
+            boot.map(_._1))
           d.where(col("doc_id") % 2 === 1).coalesce(1)
             .write.format("graft-lake").option("path", base)
             .mode("append").save()
@@ -6711,38 +6582,19 @@ object LlmQueries {
     "q251_lake_constraints" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakecn_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakecn", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         val boot = d.where(col("doc_id") < 256)
           .as[(Long, Long, String)].collect().sortBy(_._1)
         if (boot.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(d.limit(0))
         else {
-          val bytes = graft.operators.ParquetWrite.writeFile(Seq(
-            graft.operators.ParquetWrite.LongCol("doc_id",
-              boot.map(_._1)),
-            graft.operators.ParquetWrite.LongCol("n_chars",
-              boot.map(_._2)),
-            graft.operators.ParquetWrite.StrCol("lang",
-              boot.map(_._3))))
-          java.nio.file.Files.write(java.nio.file.Paths.get(
-            s"$base/data/boot.parquet"), bytes): Unit
-          graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
-            s"""{"add":{"path":"$base/data/boot.parquet",""" +
-              s""""size":${boot.length},"min_key":${boot.head._1},""" +
-              s""""max_key":${boot.last._1}}}"""))
+          bootCommit(base, Seq(
+            ParquetWrite.LongCol("doc_id", boot.map(_._1)),
+            ParquetWrite.LongCol("n_chars", boot.map(_._2)),
+            ParquetWrite.StrCol("lang", boot.map(_._3))),
+            boot.map(_._1))
           graft.sources.LakeSource.addConstraint(s, base,
             "chars_sane", "n_chars >= 0 AND doc_id >= 0"): Unit
           d.where(col("doc_id") >= 256)
@@ -6776,9 +6628,7 @@ object LlmQueries {
                   "CHECK constraint chars_sane"))) throw e
           }
           s.read.format("graft-lake").option("path", base).load()
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""SELECT lang, CAST(count(*) AS BIGINT) AS n,
@@ -6799,17 +6649,9 @@ object LlmQueries {
     "q252_lake_compact_where" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakecw_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakecw", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         val adds = d
           .withColumn("g", (col("doc_id") / 256).cast("long"))
           .as[(Long, Long, String, Long)]
@@ -6826,16 +6668,11 @@ object LlmQueries {
             val p = s"$base/data/part-${k._1}-${k._2}.parquet"
             java.nio.file.Files.write(
               java.nio.file.Paths.get(p), bytes): Unit
-            ((k._1, k._2),
-              s"""{"add":{"path":"$p","size":${rs.length}""" +
-              s""","min_key":${rs.head._1},"max_key":${rs.last._1}""" +
-              s""","part":"${k._1}"}}""")
+            ((k._1, k._2), fixtureAdd(p, rs.length, rs.head._1,
+              rs.last._1, Some(k._1)))
           }.collect().toSeq.sortBy(_._1)
         if (adds.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(d.limit(0))
         else {
           graft.operators.TxLog.commitVersion(s"$base/log", 0L,
             adds.map(_._2))
@@ -6846,9 +6683,7 @@ object LlmQueries {
           s.read.format("graft-lake").option("path", base)
             .option("partitionBy", "lang").load()
             .where(col("lang").isin("en", "de", "zh"))
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""SELECT lang, CAST(count(*) AS BIGINT) AS n,
@@ -6866,38 +6701,19 @@ object LlmQueries {
     "q253_lake_time_travel_ts" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_laketts_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "laketts", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         val boot = d.where(col("doc_id") % 2 === 0)
           .as[(Long, Long, String)].collect().sortBy(_._1)
         if (boot.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(d.limit(0))
         else {
-          val bytes = graft.operators.ParquetWrite.writeFile(Seq(
-            graft.operators.ParquetWrite.LongCol("doc_id",
-              boot.map(_._1)),
-            graft.operators.ParquetWrite.LongCol("n_chars",
-              boot.map(_._2)),
-            graft.operators.ParquetWrite.StrCol("lang",
-              boot.map(_._3))))
-          java.nio.file.Files.write(java.nio.file.Paths.get(
-            s"$base/data/boot.parquet"), bytes): Unit
-          graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
-            s"""{"add":{"path":"$base/data/boot.parquet",""" +
-              s""""size":${boot.length},"min_key":${boot.head._1},""" +
-              s""""max_key":${boot.last._1}}}"""))
+          bootCommit(base, Seq(
+            ParquetWrite.LongCol("doc_id", boot.map(_._1)),
+            ParquetWrite.LongCol("n_chars", boot.map(_._2)),
+            ParquetWrite.StrCol("lang", boot.map(_._3))),
+            boot.map(_._1))
           d.where(col("doc_id") % 2 === 1).repartition(2)
             .write.format("graft-lake").option("path", base)
             .mode("append").save()
@@ -6909,9 +6725,7 @@ object LlmQueries {
             .setLastModified(t0 + 60000L): Unit
           s.read.format("graft-lake").option("path", base)
             .option("asOfTs", t0 + 30000L).load() // the v0 snapshot
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""SELECT lang, CAST(count(*) AS BIGINT) AS n,
@@ -6931,17 +6745,9 @@ object LlmQueries {
     "q250_lake_log_expiry" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakexp_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakexp", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         val adds = d.where(col("doc_id") % 2 === 0)
           .withColumn("g", (col("doc_id") / 128).cast("long"))
           .as[(Long, Long, String, Long)]
@@ -6958,14 +6764,10 @@ object LlmQueries {
             val p = s"$base/data/part-$g.parquet"
             java.nio.file.Files.write(
               java.nio.file.Paths.get(p), bytes): Unit
-            (g, s"""{"add":{"path":"$p","size":${rs.length}""" +
-              s""","min_key":${rs.head._1},"max_key":${rs.last._1}}}""")
+            (g, fixtureAdd(p, rs.length, rs.head._1, rs.last._1))
           }.collect().toSeq.sortBy(_._1)
         if (adds.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(d.limit(0))
         else {
           graft.operators.TxLog.commitVersion(s"$base/log", 0L,
             adds.map(_._2))
@@ -6990,9 +6792,7 @@ object LlmQueries {
             .write.format("graft-lake").option("path", base)
             .mode("append").save()
           s.read.format("graft-lake").option("path", base).load()
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""WITH d AS (SELECT doc_id, CAST(n_chars AS BIGINT)
@@ -7024,14 +6824,7 @@ object LlmQueries {
     "q244_lake_merge_embeddings" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakeme_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakeme", dir)
         new java.io.File(s"$base/data").mkdirs()
         val e = Tables.embeddings(s, dir).select(col("vec_id"),
           col("label").cast("long").as("label"),
@@ -7056,9 +6849,7 @@ object LlmQueries {
             val p = s"$base/data/part-$g.parquet"
             java.nio.file.Files.write(
               java.nio.file.Paths.get(p), bytes): Unit
-            (g, s"""{"add":{"path":"$p","size":${rows.length}""" +
-              s""","min_key":${rows.head._1}""" +
-              s""","max_key":${rows.last._1}}}""")
+            (g, fixtureAdd(p, rows.length, rows.head._1, rows.last._1))
           }.collect().toSeq.sortBy(_._1)
         if (adds.isEmpty)
           Seq.empty[(Long, Long, Long, Long, Long)]
@@ -7143,17 +6934,9 @@ object LlmQueries {
     "q245_lake_cdc_rows" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakecr_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakecr", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         val adds = d.where(col("doc_id") % 2 === 0)
           .withColumn("g", (col("doc_id") / 128).cast("long"))
           .as[(Long, Long, String, Long)]
@@ -7170,8 +6953,7 @@ object LlmQueries {
             val p = s"$base/data/part-$g.parquet"
             java.nio.file.Files.write(
               java.nio.file.Paths.get(p), bytes): Unit
-            (g, s"""{"add":{"path":"$p","size":${rs.length}""" +
-              s""","min_key":${rs.head._1},"max_key":${rs.last._1}}}""")
+            (g, fixtureAdd(p, rs.length, rs.head._1, rs.last._1))
           }.collect().toSeq.sortBy(_._1)
         if (adds.isEmpty)
           Seq.empty[(String, Long, Long, Long)]
@@ -7271,38 +7053,19 @@ object LlmQueries {
     "q246_lake_column_mapping" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakemap_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakemap", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         val boot = d.where(col("doc_id") < 256)
           .as[(Long, Long, String)].collect().sortBy(_._1)
         if (boot.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(d.limit(0))
         else {
-          val bytes = graft.operators.ParquetWrite.writeFile(Seq(
-            graft.operators.ParquetWrite.LongCol("doc_id",
-              boot.map(_._1)),
-            graft.operators.ParquetWrite.LongCol("n_chars",
-              boot.map(_._2)),
-            graft.operators.ParquetWrite.StrCol("lang",
-              boot.map(_._3))))
-          java.nio.file.Files.write(java.nio.file.Paths.get(
-            s"$base/data/boot.parquet"), bytes): Unit
-          graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
-            s"""{"add":{"path":"$base/data/boot.parquet",""" +
-              s""""size":${boot.length},"min_key":${boot.head._1},""" +
-              s""""max_key":${boot.last._1}}}"""))
+          bootCommit(base, Seq(
+            ParquetWrite.LongCol("doc_id", boot.map(_._1)),
+            ParquetWrite.LongCol("n_chars", boot.map(_._2)),
+            ParquetWrite.StrCol("lang", boot.map(_._3))),
+            boot.map(_._1))
           graft.sources.LakeSource.renameColumn(base,
             "n_chars", "chars"): Unit
           graft.sources.LakeSource.dropColumn(base, "lang"): Unit
@@ -7340,17 +7103,9 @@ object LlmQueries {
     "q247_lake_agg_groupby" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakegb_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakegb", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         // bootstrap: one file PER lang (each add carries its part
         // value — the whole table must be partitioned for the
         // grouped pushdown to engage)
@@ -7369,9 +7124,8 @@ object LlmQueries {
             val p = s"$base/data/boot-$lang.parquet"
             java.nio.file.Files.write(
               java.nio.file.Paths.get(p), bytes): Unit
-            (lang, s"""{"add":{"path":"$p","size":${rs.length}""" +
-              s""","min_key":${rs.head._1},"max_key":${rs.last._1}""" +
-              s""","part":"$lang"}}""")
+            (lang, fixtureAdd(p, rs.length, rs.head._1, rs.last._1,
+              Some(lang)))
           }.collect().toSeq.sortBy(_._1)
         if (adds.isEmpty)
           Seq.empty[(String, Long, Long, Long)]
@@ -7411,14 +7165,7 @@ object LlmQueries {
     "q248_lake_zorder_multi" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakezm_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakezm", dir)
         new java.io.File(s"$base/data").mkdirs()
         val adds = docs(s, dir)
           .select((col("doc_id") / 256).cast("long").as("g"),
@@ -7440,14 +7187,10 @@ object LlmQueries {
             val p = s"$base/data/part-$g.parquet"
             java.nio.file.Files.write(
               java.nio.file.Paths.get(p), bytes): Unit
-            (g, s"""{"add":{"path":"$p","size":${rs.length}""" +
-              s""","min_key":${rs.head._2},"max_key":${rs.last._2}}}""")
+            (g, fixtureAdd(p, rs.length, rs.head._2, rs.last._2))
           }.collect().toSeq.sortBy(_._1)
         if (adds.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(docCols(s, dir).limit(0))
         else {
           graft.operators.TxLog.commitVersion(s"$base/log", 0L,
             adds.map(_._2))
@@ -7459,9 +7202,7 @@ object LlmQueries {
             .option("strStatsCol", "lang").load()
             .where(col("h").between(1000L, 1999L) ||
               col("lang") === "zh")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""WITH d AS (SELECT lang, n_chars,
@@ -7483,38 +7224,19 @@ object LlmQueries {
     "q249_lake_concurrent_append" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakecc_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakecc", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         val boot = d.where(col("doc_id") < 256)
           .as[(Long, Long, String)].collect().sortBy(_._1)
         if (boot.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(d.limit(0))
         else {
-          val bytes = graft.operators.ParquetWrite.writeFile(Seq(
-            graft.operators.ParquetWrite.LongCol("doc_id",
-              boot.map(_._1)),
-            graft.operators.ParquetWrite.LongCol("n_chars",
-              boot.map(_._2)),
-            graft.operators.ParquetWrite.StrCol("lang",
-              boot.map(_._3))))
-          java.nio.file.Files.write(java.nio.file.Paths.get(
-            s"$base/data/boot.parquet"), bytes): Unit
-          graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
-            s"""{"add":{"path":"$base/data/boot.parquet",""" +
-              s""""size":${boot.length},"min_key":${boot.head._1},""" +
-              s""""max_key":${boot.last._1}}}"""))
+          bootCommit(base, Seq(
+            ParquetWrite.LongCol("doc_id", boot.map(_._1)),
+            ParquetWrite.LongCol("n_chars", boot.map(_._2)),
+            ParquetWrite.StrCol("lang", boot.map(_._3))),
+            boot.map(_._1))
           import scala.concurrent.{Await, Future}
           import scala.concurrent.duration._
           import scala.concurrent.ExecutionContext.Implicits.global
@@ -7529,9 +7251,7 @@ object LlmQueries {
           Await.result(f0, 300.seconds)
           Await.result(f1, 300.seconds)
           s.read.format("graft-lake").option("path", base).load()
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""SELECT lang, CAST(count(*) AS BIGINT) AS n,
@@ -7551,14 +7271,7 @@ object LlmQueries {
     "q243_lake_agg_pushdown" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakeagg_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakeagg", dir)
         new java.io.File(s"$base/data").mkdirs()
         val adds = docs(s, dir)
           .select((col("doc_id") / 512).cast("long").as("g"),
@@ -7578,8 +7291,7 @@ object LlmQueries {
             val p = s"$base/data/part-$g.parquet"
             java.nio.file.Files.write(
               java.nio.file.Paths.get(p), bytes): Unit
-            (g, s"""{"add":{"path":"$p","size":${rs.length}""" +
-              s""","min_key":${rs.head._2},"max_key":${rs.last._2}}}""")
+            (g, fixtureAdd(p, rs.length, rs.head._2, rs.last._2))
           }.collect().toSeq.sortBy(_._1)
         if (adds.isEmpty)
           Seq.empty[(Long, Long, Long)].toDF("n", "min_id", "max_id")
@@ -7623,14 +7335,7 @@ object LlmQueries {
     "q242_lake_zorder" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakez_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakez", dir)
         new java.io.File(s"$base/data").mkdirs()
         val adds = docs(s, dir)
           .select((col("doc_id") / 256).cast("long").as("g"),
@@ -7652,14 +7357,10 @@ object LlmQueries {
             val p = s"$base/data/part-$g.parquet"
             java.nio.file.Files.write(
               java.nio.file.Paths.get(p), bytes): Unit
-            (g, s"""{"add":{"path":"$p","size":${rs.length}""" +
-              s""","min_key":${rs.head._2},"max_key":${rs.last._2}}}""")
+            (g, fixtureAdd(p, rs.length, rs.head._2, rs.last._2))
           }.collect().toSeq.sortBy(_._1)
         if (adds.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(docCols(s, dir).limit(0))
         else {
           graft.operators.TxLog.commitVersion(s"$base/log", 0L,
             adds.map(_._2))
@@ -7668,9 +7369,7 @@ object LlmQueries {
             rowsPerGroup = 128): Unit
           s.read.format("graft-lake").option("path", base).load()
             .where(col("h").between(1000L, 1999L))
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""WITH d AS (SELECT lang, n_chars,
@@ -7693,36 +7392,20 @@ object LlmQueries {
     "q241_lake_add_column" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakeevo_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakeevo", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         val boot = d.where(col("doc_id") < 256)
           .as[(Long, Long, String)].collect().sortBy(_._1)
         if (boot.isEmpty)
           Seq.empty[(String, Long, Long, Long)]
             .toDF("lang", "n", "n_scored", "sum_q")
         else {
-          val bytes = graft.operators.ParquetWrite.writeFile(Seq(
-            graft.operators.ParquetWrite.LongCol("doc_id",
-              boot.map(_._1)),
-            graft.operators.ParquetWrite.LongCol("n_chars",
-              boot.map(_._2)),
-            graft.operators.ParquetWrite.StrCol("lang",
-              boot.map(_._3))))
-          java.nio.file.Files.write(java.nio.file.Paths.get(
-            s"$base/data/boot.parquet"), bytes): Unit
-          graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
-            s"""{"add":{"path":"$base/data/boot.parquet",""" +
-              s""""size":${boot.length},"min_key":${boot.head._1},""" +
-              s""""max_key":${boot.last._1}}}"""))
+          bootCommit(base, Seq(
+            ParquetWrite.LongCol("doc_id", boot.map(_._1)),
+            ParquetWrite.LongCol("n_chars", boot.map(_._2)),
+            ParquetWrite.StrCol("lang", boot.map(_._3))),
+            boot.map(_._1))
           graft.sources.LakeSource.addColumn(base, "score", "double"): Unit
           d.where(col("doc_id") >= 256)
             .select(col("doc_id"), col("n_chars"), col("lang"),
@@ -7758,17 +7441,9 @@ object LlmQueries {
     "q240_lake_cdc_tail" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakecdc_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakecdc", dir)
         new java.io.File(s"$base/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         // bootstrap: EVEN ids as small per-bucket files (the
         // compaction fodder), committed at v0
         val adds = d.where(col("doc_id") % 2 === 0)
@@ -7787,14 +7462,10 @@ object LlmQueries {
             val p = s"$base/data/part-$g.parquet"
             java.nio.file.Files.write(
               java.nio.file.Paths.get(p), bytes): Unit
-            (g, s"""{"add":{"path":"$p","size":${rs.length}""" +
-              s""","min_key":${rs.head._1},"max_key":${rs.last._1}}}""")
+            (g, fixtureAdd(p, rs.length, rs.head._1, rs.last._1))
           }.collect().toSeq.sortBy(_._1)
         if (adds.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(d.limit(0))
         else {
           graft.operators.TxLog.commitVersion(s"$base/log", 0L,
             adds.map(_._2))
@@ -7822,9 +7493,7 @@ object LlmQueries {
             .mode("append").save()
           drain() // phase 3: the append, once
           s.read.parquet(sink)
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""SELECT lang, CAST(count(*) AS BIGINT) AS n,
@@ -7844,14 +7513,7 @@ object LlmQueries {
     "q239_lake_compact_embeddings" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakece_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakece", dir)
         new java.io.File(s"$base/data").mkdirs()
         val e = Tables.embeddings(s, dir).select(col("vec_id"),
           col("label").cast("long").as("label"),
@@ -7864,21 +7526,13 @@ object LlmQueries {
           Seq.empty[(Long, Long, Long, Long, Long)]
             .toDF("label", "n", "n_elems", "sum_q", "sum_sq")
         else {
-          val bytes = graft.operators.ParquetWrite.writeFile(Seq(
-            graft.operators.ParquetWrite.LongCol("vec_id",
-              boot.map(_._1)),
-            graft.operators.ParquetWrite.LongCol("label",
-              boot.map(_._2)),
-            graft.operators.ParquetWrite.FloatListCol("embedding",
+          bootCommit(base, Seq(
+            ParquetWrite.LongCol("vec_id", boot.map(_._1)),
+            ParquetWrite.LongCol("label", boot.map(_._2)),
+            ParquetWrite.FloatListCol("embedding",
               boot.map(_._3.map(java.lang.Float.valueOf))),
-            graft.operators.ParquetWrite.DoubleCol("score",
-              boot.map(_._4))))
-          java.nio.file.Files.write(java.nio.file.Paths.get(
-            s"$base/data/boot.parquet"), bytes): Unit
-          graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
-            s"""{"add":{"path":"$base/data/boot.parquet",""" +
-              s""""size":${boot.length},"min_key":${boot.head._1},""" +
-              s""""max_key":${boot.last._1}}}"""))
+            ParquetWrite.DoubleCol("score", boot.map(_._4))),
+            boot.map(_._1))
           // the rest in one-file-per-64-ids appends (small files —
           // the compaction fixture), through the connector
           e.where(col("vec_id") >= 32)
@@ -7926,14 +7580,7 @@ object LlmQueries {
     "q237_lake_partition" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakep_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakep", dir)
         new java.io.File(s"$base/data").mkdirs()
         val d = docs(s, dir).select(col("doc_id"),
           col("n_chars").cast("long").as("n_chars"),
@@ -7942,26 +7589,14 @@ object LlmQueries {
         val boot = d.where(col("doc_id") < 64)
           .as[(Long, Long, String, String)].collect().sortBy(_._1)
         if (boot.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(docCols(s, dir).limit(0))
         else {
-          val bytes = graft.operators.ParquetWrite.writeFile(Seq(
-            graft.operators.ParquetWrite.LongCol("doc_id",
-              boot.map(_._1)),
-            graft.operators.ParquetWrite.LongCol("n_chars",
-              boot.map(_._2)),
-            graft.operators.ParquetWrite.StrCol("lang",
-              boot.map(_._3)),
-            graft.operators.ParquetWrite.StrCol("source",
-              boot.map(_._4))))
-          java.nio.file.Files.write(java.nio.file.Paths.get(
-            s"$base/data/boot.parquet"), bytes): Unit
-          graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
-            s"""{"add":{"path":"$base/data/boot.parquet",""" +
-              s""""size":${boot.length},"min_key":${boot.head._1},""" +
-              s""""max_key":${boot.last._1}}}"""))
+          bootCommit(base, Seq(
+            ParquetWrite.LongCol("doc_id", boot.map(_._1)),
+            ParquetWrite.LongCol("n_chars", boot.map(_._2)),
+            ParquetWrite.StrCol("lang", boot.map(_._3)),
+            ParquetWrite.StrCol("source", boot.map(_._4))),
+            boot.map(_._1))
           d.where(col("doc_id") >= 64)
             .repartition(4, col("source"))
             .write.format("graft-lake").option("path", base)
@@ -7969,9 +7604,7 @@ object LlmQueries {
           s.read.format("graft-lake").option("path", base)
             .option("partitionBy", "source").load()
             .where(col("source") === "src3")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""SELECT lang, CAST(count(*) AS BIGINT) AS n,
@@ -7990,14 +7623,7 @@ object LlmQueries {
     "q238_lake_string_stats" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakess_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakess", dir)
         new java.io.File(s"$base/data").mkdirs()
         val d = docs(s, dir).select(col("doc_id"),
           col("n_chars").cast("long").as("n_chars"),
@@ -8010,21 +7636,12 @@ object LlmQueries {
             .agg(count(lit(1)).as("n"),
               sum(col("sum_chars")).as("sum_chars"))
         else {
-          val bytes = graft.operators.ParquetWrite.writeFile(Seq(
-            graft.operators.ParquetWrite.LongCol("doc_id",
-              boot.map(_._1)),
-            graft.operators.ParquetWrite.LongCol("n_chars",
-              boot.map(_._2)),
-            graft.operators.ParquetWrite.StrCol("lang",
-              boot.map(_._3)),
-            graft.operators.ParquetWrite.StrCol("source",
-              boot.map(_._4))))
-          java.nio.file.Files.write(java.nio.file.Paths.get(
-            s"$base/data/boot.parquet"), bytes): Unit
-          graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
-            s"""{"add":{"path":"$base/data/boot.parquet",""" +
-              s""""size":${boot.length},"min_key":${boot.head._1},""" +
-              s""""max_key":${boot.last._1}}}"""))
+          bootCommit(base, Seq(
+            ParquetWrite.LongCol("doc_id", boot.map(_._1)),
+            ParquetWrite.LongCol("n_chars", boot.map(_._2)),
+            ParquetWrite.StrCol("lang", boot.map(_._3)),
+            ParquetWrite.StrCol("source", boot.map(_._4))),
+            boot.map(_._1))
           d.where(col("doc_id") >= 64)
             .repartition(8, col("lang"))
             .write.format("graft-lake").option("path", base)
@@ -8057,19 +7674,11 @@ object LlmQueries {
     "q236_lake_stream_sink" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakes_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakes", dir)
         val src = s"$base/src"; val dst = s"$base/dst"
         new java.io.File(s"$src/data").mkdirs()
         new java.io.File(s"$dst/data").mkdirs()
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         // writes one table's files under root/data, one file per
         // (bucket of 256 ids) group, returning the add lines
         def build(root: String, rows: org.apache.spark.sql.DataFrame)
@@ -8093,17 +7702,13 @@ object LlmQueries {
               val st = graft.operators.ParquetFile.parse(g, bytes)
                 .filter(r => r.valid && r.col_path == "doc_id" &&
                   r.has_stats)
-              (g, s"""{"add":{"path":"$p","size":${rs.length}""" +
-                s""","min_key":${st.map(_.min_long).min}""" +
-                s""","max_key":${st.map(_.max_long).max}}}""")
+              (g, fixtureAdd(p, rs.length, st.map(_.min_long).min,
+                st.map(_.max_long).max))
             }.collect().toSeq.sortBy(_._1)
         val srcAdds = build(src, d.where(col("doc_id") % 2 === 1))
         val dstAdds = build(dst, d.where(col("doc_id") % 2 === 0))
         if (srcAdds.isEmpty || dstAdds.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(d.limit(0))
         else {
           // SOURCE: a FIXED number of commit versions (4) regardless
           // of SF — each holds 1/4 of the files, so the per-epoch
@@ -8134,9 +7739,7 @@ object LlmQueries {
             .start()
           q.awaitTermination()
           s.read.format("graft-lake").option("path", dst).load()
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""WITH d AS (SELECT lang,
@@ -8208,14 +7811,7 @@ object LlmQueries {
     "q231_parquet_page_write" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_pqpi_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "pqpi", dir)
         new java.io.File(base).mkdirs()
         docs(s, dir).select((col("doc_id") / 2048).cast("long").as("g"),
             col("doc_id"), col("n_chars").cast("long").as("n_chars"),
@@ -8278,14 +7874,7 @@ object LlmQueries {
     "q228_lake_compact" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakeo_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakeo", dir)
         new java.io.File(s"$base/data").mkdirs()
         val adds = docs(s, dir)
           .select((col("doc_id") / 64).cast("long").as("g"),
@@ -8314,10 +7903,7 @@ object LlmQueries {
           }
           .toDF("path", "min_key", "max_key", "size")
         if (adds.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(docCols(s, dir).limit(0))
         else {
           adds.select(lit(0L).as("version"), to_json(struct(
               struct(col("path"), col("min_key"), col("max_key"),
@@ -8327,9 +7913,7 @@ object LlmQueries {
           graft.operators.LakeMaintenance.compact(s, base,
             targetRows = 1024): Unit
           s.read.format("graft-lake").option("path", base).load()
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""WITH d AS (SELECT lang,
@@ -8353,14 +7937,7 @@ object LlmQueries {
     "q230_lake_merge" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakem_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakem", dir)
         new java.io.File(s"$base/data").mkdirs()
         val adds = docs(s, dir)
           .select((col("doc_id") / 1024).cast("long").as("g"),
@@ -8389,10 +7966,7 @@ object LlmQueries {
           }
           .toDF("path", "min_key", "max_key", "size")
         if (adds.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(docCols(s, dir).limit(0))
         else {
           adds.select(lit(0L).as("version"), to_json(struct(
               struct(col("path"), col("min_key"), col("max_key"),
@@ -8414,9 +7988,7 @@ object LlmQueries {
           graft.operators.LakeMaintenance.merge(s, base,
             (upd ++ ins).toSeq, "doc_id"): Unit
           s.read.format("graft-lake").option("path", base).load()
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""WITH mx AS (SELECT max(doc_id) AS m FROM documents),
@@ -8450,10 +8022,7 @@ object LlmQueries {
         import s.implicits._
         val lines = lakemdTemplate(s, dir)
         if (lines.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(docCols(s, dir).limit(0))
         else {
           // per-RUN table: a UUID child under a stable parent, with
           // an AGE-BASED sweep of finished siblings (review r15 pass
@@ -8463,19 +8032,12 @@ object LlmQueries {
           // the leak). v0 references the shared immutable template
           // files; the merge commits its rewrites under this run's
           // own data dir.
-          val parent = s"${System.getProperty("java.io.tmpdir")}/graft_lakemd_" +
-            s.sparkContext.applicationId + "_" +
-            java.lang.Integer.toHexString(dir.hashCode)
-          def del(f: java.io.File): Unit = {
-            if (f.isDirectory)
-              Option(f.listFiles()).toSeq.flatten.foreach(del)
-            f.delete(): Unit
-          }
+          val parent = Scratch.dir(s, "lakemd", dir, wipe = false)
           new java.io.File(parent).mkdirs()
           Option(new java.io.File(parent).listFiles()).toSeq.flatten
             .filter(f => f.isDirectory &&
               System.currentTimeMillis - f.lastModified > 30L * 60000L)
-            .foreach(del)
+            .foreach(Scratch.deleteTree)
           val base = s"$parent/run-" +
             java.util.UUID.randomUUID().toString.take(8)
           new java.io.File(s"$base/data").mkdirs()
@@ -8499,9 +8061,7 @@ object LlmQueries {
           graft.operators.LakeMaintenance.merge(s, base,
             (upd ++ ins).toSeq, "doc_id", deletes = dels): Unit
           s.read.format("graft-lake").option("path", base).load()
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""WITH mx AS (SELECT max(doc_id) AS m FROM documents),
@@ -8534,14 +8094,7 @@ object LlmQueries {
     "q229_lake_vacuum" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakev_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakev", dir)
         new java.io.File(s"$base/data").mkdirs()
         val adds = docs(s, dir)
           .select((col("doc_id") / 64).cast("long").as("g"),
@@ -8570,10 +8123,7 @@ object LlmQueries {
           }
           .toDF("path", "min_key", "max_key", "size")
         if (adds.isEmpty)
-          Seq.empty[(String, Long, Long)].toDF("lang", "n", "sum_chars")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("sum_chars")).as("sum_chars"))
+          langAgg(docCols(s, dir).limit(0))
         else {
           adds.select(lit(0L).as("version"), to_json(struct(
               struct(col("path"), col("min_key"), col("max_key"),
@@ -8591,9 +8141,7 @@ object LlmQueries {
           graft.operators.LakeMaintenance.vacuum(base,
             retainVersions = 0, graceMs = 0L): Unit
           s.read.format("graft-lake").option("path", base).load()
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("n_chars")).as("sum_chars"))
+            .transform(langAgg)
         }
       },
       Some("""WITH d AS (SELECT lang,
@@ -8620,14 +8168,7 @@ object LlmQueries {
     "q222_lake_connector" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakec_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakec", dir)
         new java.io.File(s"$base/data").mkdirs()
         // write files on executors; return (path, min, max) for the log
         val adds = docs(s, dir)
@@ -8709,14 +8250,7 @@ object LlmQueries {
     "q224_lake_append" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakew_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakew", dir)
         new java.io.File(s"$base/data").mkdirs()
         val d = docs(s, dir).select(col("doc_id"),
           col("n_chars").cast("long").as("n_chars"),
@@ -8801,14 +8335,7 @@ object LlmQueries {
     "q233_lake_embeddings" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakee_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakee", dir)
         new java.io.File(s"$base/data").mkdirs()
         // score: exact binary arithmetic (0.25 steps) so the oracle's
         // double math replays bit-identically
@@ -9690,11 +9217,9 @@ object LlmQueries {
     // equivalence); these gates pin the end-to-end SQL loop.
     "q255_lake_sql_catalog" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw255_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c255", base)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        sqlLakeReset(s, "graft_c255",
+          Scratch.appDir(s, "sqlw255")): Unit
+        docCols(s, dir)
           .createOrReplaceTempView("q255_src")
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_c255.db"): Unit
         s.sql("""CREATE TABLE graft_c255.db.docs (
@@ -9717,11 +9242,9 @@ object LlmQueries {
     // matched key, or resurrected a deleted row cannot match.
     "q256_lake_sql_merge" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw256_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c256", base)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        sqlLakeReset(s, "graft_c256",
+          Scratch.appDir(s, "sqlw256")): Unit
+        docCols(s, dir)
           .createOrReplaceTempView("q256_src")
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_c256.db"): Unit
         s.sql("""CREATE TABLE graft_c256.db.t (
@@ -9770,11 +9293,9 @@ object LlmQueries {
     // values; pre-evolution snapshots count only their own rows).
     "q257_lake_sql_timetravel" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw257_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c257", base)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        sqlLakeReset(s, "graft_c257",
+          Scratch.appDir(s, "sqlw257")): Unit
+        docCols(s, dir)
           .createOrReplaceTempView("q257_src")
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_c257.db"): Unit
         s.sql("""CREATE TABLE graft_c257.db.tt (
@@ -9813,11 +9334,9 @@ object LlmQueries {
     // cannot match.
     "q258_lake_sql_delete" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw258_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c258", base)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        sqlLakeReset(s, "graft_c258",
+          Scratch.appDir(s, "sqlw258")): Unit
+        docCols(s, dir)
           .createOrReplaceTempView("q258_src")
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_c258.db"): Unit
         s.sql("""CREATE TABLE graft_c258.db.d (
@@ -9849,14 +9368,7 @@ object LlmQueries {
     // (fewer LakePartitions) and the all-null-window law.
     "q259_lake_data_skipping" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakeds_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakeds", dir)
         new java.io.File(s"$base/data").mkdirs()
         graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
           graft.operators.TxLog.metaDataLine(Seq(
@@ -9884,9 +9396,7 @@ object LlmQueries {
         s.read.format("graft-lake").option("path", base).load()
           .where(col("n_chars") >= 100L && col("n_chars") < 2000L &&
             col("score") <= 300.0 && col("lang") >= "d")
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("n_chars")).as("sum_chars"))
+          .transform(langAgg)
       },
       Some("""SELECT lang, CAST(count(*) AS BIGINT) AS n,
           CAST(sum(n_chars) AS BIGINT) AS sum_chars
@@ -9907,14 +9417,7 @@ object LlmQueries {
     "q260_lake_deletion_vectors" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakedv_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakedv", dir)
         new java.io.File(s"$base/data").mkdirs()
         graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
           graft.operators.TxLog.metaDataLine(Seq(
@@ -9925,8 +9428,7 @@ object LlmQueries {
             graft.operators.TxLog.MetaCol("lang", "string",
               nullable = true))),
           graft.operators.TxLog.commitInfoLine("CREATE TABLE")))
-        val d = docs(s, dir).select(col("doc_id"),
-          col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val d = docCols(s, dir)
         d.coalesce(1)
           .write.format("graft-lake").option("path", base)
           .mode("append").save()
@@ -9953,9 +9455,7 @@ object LlmQueries {
         // must subtract the DV); the grouped aggregate rides the row
         // path (which must apply it) — both must agree with DuckDB
         val total = t.agg(count(lit(1)).as("n")).as[Long].head()
-        t.groupBy(col("lang"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("n_chars")).as("sum_chars"))
+        langAgg(t)
           .withColumn("total", lit(total))
       },
       Some("""WITH kept AS (SELECT * FROM documents
@@ -9977,11 +9477,9 @@ object LlmQueries {
     // constraints as CALLs, loud unknown-procedure rejection).
     "q261_lake_sql_call" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw261_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c261", base)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        sqlLakeReset(s, "graft_c261",
+          Scratch.appDir(s, "sqlw261")): Unit
+        docCols(s, dir)
           .createOrReplaceTempView("q261_src")
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_c261.db"): Unit
         s.sql("""CREATE TABLE graft_c261.db.m (
@@ -10018,11 +9516,9 @@ object LlmQueries {
     // per-occurrence-rejection guards and key reassignment.
     "q262_lake_sql_update" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw262_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c262", base)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        sqlLakeReset(s, "graft_c262",
+          Scratch.appDir(s, "sqlw262")): Unit
+        docCols(s, dir)
           .createOrReplaceTempView("q262_src")
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_c262.db"): Unit
         s.sql("""CREATE TABLE graft_c262.db.u (
@@ -10067,12 +9563,10 @@ object LlmQueries {
         // DML statements under test + the read-back, not the bootstrap
         // INSERT's full table write
         val tpl = sqlw263Template(s, dir)
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw263_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c263", base)
+        val base = sqlLakeReset(s, "graft_c263",
+          Scratch.appDir(s, "sqlw263"))
         sqlwCloneMeta(tpl, base, "db/t")
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        docCols(s, dir)
           .createOrReplaceTempView("q263_src")
         s.conf.set("spark.graft.lake.mergeCollectBound", "50")
         try {
@@ -10129,11 +9623,9 @@ object LlmQueries {
     // oracle replays the partition arithmetic relationally.
     "q264_lake_insert_overwrite" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw264_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c264", base)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val base = sqlLakeReset(s, "graft_c264",
+          Scratch.appDir(s, "sqlw264"))
+        docCols(s, dir)
           .createOrReplaceTempView("q264_src")
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_c264.db"): Unit
         s.sql("""CREATE TABLE graft_c264.db.t (
@@ -10194,14 +9686,7 @@ object LlmQueries {
     // and the join aggregate must match DuckDB's replay.
     "q265_lake_report_statistics" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakest_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakest", dir)
         new java.io.File(s"$base/data").mkdirs()
         graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
           graft.operators.TxLog.metaDataLine(Seq(
@@ -10257,11 +9742,9 @@ object LlmQueries {
     // the restored (= original) table, replayed by DuckDB.
     "q266_lake_restore" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw266_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c266", base)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        sqlLakeReset(s, "graft_c266",
+          Scratch.appDir(s, "sqlw266")): Unit
+        docCols(s, dir)
           .createOrReplaceTempView("q266_src")
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_c266.db"): Unit
         s.sql("""CREATE TABLE graft_c266.db.r (
@@ -10320,11 +9803,9 @@ object LlmQueries {
         // appId-stable base, NO dir hash (the catalog instance is
         // CACHED per session with its first warehouse — a dir-varying
         // base desyncs the cached catalog from the wiped directory)
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw267_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c267", base)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val base = sqlLakeReset(s, "graft_c267",
+          Scratch.appDir(s, "sqlw267"))
+        docCols(s, dir)
           .createOrReplaceTempView("q267_src")
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_c267.db"): Unit
         Seq("src", "dst").foreach { t =>
@@ -10372,14 +9853,7 @@ object LlmQueries {
     "q268_lake_dv_update" -> Query(
       (s, dir) => {
         import s.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakedvu_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakedvu", dir)
         new java.io.File(s"$base/data").mkdirs()
         graft.operators.TxLog.commitVersion(s"$base/log", 0L, Seq(
           graft.operators.TxLog.metaDataLine(Seq(
@@ -10390,8 +9864,7 @@ object LlmQueries {
             graft.operators.TxLog.MetaCol("lang", "string",
               nullable = true))),
           graft.operators.TxLog.commitInfoLine("CREATE TABLE")))
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        docCols(s, dir)
           .coalesce(1)
           .write.format("graft-lake").option("path", base)
           .mode("append").save()
@@ -10415,9 +9888,7 @@ object LlmQueries {
           "the updated row must re-insert as one small add")
         val t = s.read.format("graft-lake").option("path", base).load()
         val total = t.agg(count(lit(1)).as("n")).as[Long].head()
-        t.groupBy(col("lang"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("n_chars")).as("sum_chars"))
+        langAgg(t)
           .withColumn("total", lit(total))
       },
       Some("""WITH t AS (SELECT doc_id,
@@ -10440,11 +9911,9 @@ object LlmQueries {
     // untouched aggregate in one frame.
     "q269_lake_clone" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_sqlw269_" +
-          s.sparkContext.applicationId
-        sqlLakeReset(s, "graft_c269", base)
-        docs(s, dir).select(col("doc_id"),
-            col("n_chars").cast("long").as("n_chars"), col("lang"))
+        val base = sqlLakeReset(s, "graft_c269",
+          Scratch.appDir(s, "sqlw269"))
+        docCols(s, dir)
           .createOrReplaceTempView("q269_src")
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_c269.db"): Unit
         s.sql("""CREATE TABLE graft_c269.db.src (
@@ -10494,22 +9963,14 @@ object LlmQueries {
     // replays both states.
     "q270_lake_convert" -> Query(
       (s, dir) => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_lakecv_" +
-          s.sparkContext.applicationId + "_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        def del(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(del)
-          f.delete(): Unit
-        }
-        del(new java.io.File(base))
+        val base = Scratch.dir(s, "lakecv", dir)
         // typed Dataset: the encoder's primitive Long makes doc_id
         // REQUIRED in the written files (a plain DataFrame write
         // marks every column optional, and the merge key must be a
         // required long)
         locally {
           import s.implicits._
-          docs(s, dir).select(col("doc_id"),
-              col("n_chars").cast("long").as("n_chars"), col("lang"))
+          docCols(s, dir)
             .as[(Long, Option[Long], String)]
             .map(identity) // encoder round-trip: non-null _1 schema
             .toDF("doc_id", "n_chars", "lang")
@@ -10531,9 +9992,7 @@ object LlmQueries {
         val t = s.read.format("graft-lake").option("path", base).load()
         val pre = s.read.format("graft-lake").option("path", base)
           .option("asOf", "0").load().count() // time travel across it
-        t.groupBy(col("lang"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("n_chars")).as("sum_chars"))
+        langAgg(t)
           .withColumn("pre_delete", lit(pre))
       },
       Some("""WITH kept AS (SELECT * FROM documents

@@ -20,11 +20,6 @@ import Q._
   */
 object SceneQueries {
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
   /** The per-scene pixel grid: horizontal 10-line bands of the events
     * grid become scenes; polygon ids map into `part`'s key domain so the
     * decode join has a real dimension table. A sparse deterministic mask
@@ -98,10 +93,8 @@ object SceneQueries {
     * which is what makes an update-mode stream oracle-gateable. */
   private def drainUpdateLatest(df: DataFrame, keyCols: Seq[String],
                                 tag: String, dir: String): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-    deleteRecursively(new java.io.File(base))
     val spark = df.sparkSession
+    val base = Scratch.dir(spark, tag, dir)
     val saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try {
@@ -137,18 +130,16 @@ object SceneQueries {
 
   private def drainToParquet(df: DataFrame, tag: String, dir: String,
                              statePartitions: Int = 8): DataFrame = {
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-    deleteRecursively(new java.io.File(base))
     val spark = df.sparkSession
+    val base = Scratch.dir(spark, tag, dir)
     // The stateful-shuffle partition count is frozen into the checkpoint
     // at FIRST start (state cannot be repartitioned afterwards), so it is
     // a sizing decision the stream owner makes, not something to inherit
     // from whatever spark.sql.shuffle.partitions happens to be: each
     // state partition costs delta+snapshot file ops per micro-batch, so
     // oversizing multiplies small-file I/O, while production sizes it to
-    // expected state volume. The checkpoint here is per-run (deleted
-    // above), so the setting binds afresh each drain; the session conf is
+    // expected state volume. The checkpoint here is per-run (wiped on
+    // entry), so the setting binds afresh each drain; the session conf is
     // restored after the drain so batch queries are untouched.
     val saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
@@ -344,12 +335,7 @@ object SceneQueries {
         val schema = new StructType()
           .add("event_id", LongType).add("event_type", StringType)
           .add("value", DoubleType)
-        // deterministic per-input-dir path, deleted before each run:
-        // repeated bench/verify builds reuse one directory instead of
-        // leaking a fresh UUID-named output+checkpoint pair per run.
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_" +
-          java.lang.Integer.toHexString(dir.hashCode)
-        deleteRecursively(new java.io.File(base))
+        val base = Scratch.dir(s, "stream", dir)
         val (root, glob) = eventsStreamSource(s, dir)
         IncrementalPipeline.runOnce(s, root, schema,
           df => df, s"$base/out", s"$base/ckpt", glob = glob)
@@ -1375,9 +1361,7 @@ object SceneQueries {
     "q152_nc_scene_files" -> Query(
       (s, dir) => {
         val base = new java.io.File(
-          s"${System.getProperty("java.io.tmpdir")}/graft_ncscenes_" +
-            s.sparkContext.applicationId + "_" +
-            java.lang.Integer.toHexString(dir.hashCode))
+          Scratch.dir(s, "ncscenes", dir, wipe = false))
         graft.sources.NcSceneCodec.writeFixtureScenes(base, 4, 32, 32,
           version = 2)
         s.read.format("graft-scene")

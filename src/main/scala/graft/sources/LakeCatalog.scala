@@ -275,13 +275,7 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
   override def dropTable(ident: Identifier): Boolean = {
     val dir = new java.io.File(rootOf(ident))
     if (!dir.isDirectory || !isTableDir(dir)) false
-    else { deleteRec(dir); true }
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteRec)
-    f.delete(): Unit
+    else { graft.queries.Scratch.deleteTree(dir); true }
   }
 
   override def renameTable(oldIdent: Identifier,
@@ -374,7 +368,7 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
           Option(d.listFiles()).toSeq.flatten.isEmpty,
         s"graft catalog: namespace ${namespace.mkString(".")} is " +
           "not empty (use CASCADE)")
-      deleteRec(d); true
+      graft.queries.Scratch.deleteTree(d); true
     }
   }
 }

@@ -1534,26 +1534,10 @@ object LakeCommitMessage {
     * commits): stats keys are dropped — never mangled — when a value
     * cannot ride the no-escape JSON subset; pruning then degrades to
     * a scan of that file, which is always correct. */
-  private[sources] def line(a: LakeAdd): String = {
-    def safe(v: String): Option[String] =
-      graft.operators.TxLog.jsonSafe(v)
-    val kstats =
-      if (a.hasKey) s""","min_key":${a.minKey},"max_key":${a.maxKey}"""
-      else ""
-    val sstats = (a.minSkey.flatMap(safe), a.maxSkey.flatMap(safe)) match {
-      case (Some(mn), Some(mx)) =>
-        s""","min_skey":"$mn","max_skey":"$mx""""
-      case _ => ""
-    }
-    val pv = a.part.flatMap(safe) match {
-      case Some(p) => s""","part":"$p""""
-      case None => ""
-    }
-    // cstats render LAST (the driver-side parser anchors on the tail)
-    s"""{"add":{"path":"${graft.operators.TxLog.requireJsonSafe(a.path)}",""" +
-      s""""size":${a.numRows}$kstats$sstats$pv""" +
-      graft.operators.TxLog.cstatsJson(a.cstats) + "}}"
-  }
+  private[sources] def line(a: LakeAdd): String =
+    TxLog.renderAdd(TxLog.LiveFile(a.path, 0L, a.numRows,
+      Option.when(a.hasKey)(a.minKey), Option.when(a.hasKey)(a.maxKey),
+      a.minSkey, a.maxSkey, a.part, cstats = a.cstats), None, 0L, None)
 }
 
 /** The write MODE a builder resolved to (r15): plain append, full

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Bpe
+import graft.queries.Scratch
 
 /** Real BPE application (VERDICT r7 #7): golden merge sequences,
   * the fixpoint/reassembly laws, and distributed-vs-local parity. */
@@ -97,13 +98,7 @@ class BpeSpec extends SparkSpec {
         loaded.zipWithIndex.toMap,
         loaded.zipWithIndex.map { case ((l, r), k) => (l + r) -> (1000L + k) }.toMap)
       viaLoaded shouldBe enc("thermal")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(dir)
-    }
+    } finally Scratch.deleteTree(dir)
   }
 
   test("applyMergeCol == the Scala one-pass reference, fuzzed (incl. " +

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.apache.spark.sql.streaming.OutputMode
+import graft.queries.Scratch
 import graft.streaming.EventWindows
 
 /** Event-time semantics: watermark finalization + late-data drop,
@@ -259,12 +260,6 @@ class EventWindowsSpec extends SparkSpec {
       val (out2, dropped2) = drainOnce()
       dropped2 shouldBe 1L
       out2.count(_ == ((null, 99.0))) shouldBe 0 // the late row never surfaces
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(base)
-    }
+    } finally Scratch.deleteTree(base)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{LakeMaintenance, TxLog}
+import graft.queries.Scratch
 
 /** DISTRIBUTED join-based MERGE (r15 — the r14 verdict's #1 ask) —
   * the laws:
@@ -204,13 +205,7 @@ class LakeDistributedMergeSpec extends SparkSpec {
   test("SQL MERGE above the collect bound routes distributed: " +
       "correct result, and NO source rows reach the driver " +
       "(result bytes stay metadata-sized)") {
-    val wh = s"${System.getProperty("java.io.tmpdir")}/graft_dm_wh_" +
-      spark.sparkContext.applicationId
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(del)
-      f.delete(): Unit
-    }
-    del(new java.io.File(wh))
+    val wh = Scratch.appDir(spark, "dm_wh")
     spark.conf.set("spark.sql.catalog.graft_dm",
       "graft.sources.LakeCatalog")
     spark.conf.set("spark.sql.catalog.graft_dm.warehouse", wh)
@@ -276,13 +271,7 @@ class LakeDistributedMergeSpec extends SparkSpec {
   test("SQL UPDATE and predicate DELETE above the bound route " +
       "distributed; the whole-key guard still rejects a predicate " +
       "that splits a duplicated key") {
-    val wh = s"${System.getProperty("java.io.tmpdir")}/graft_dm2_wh_" +
-      spark.sparkContext.applicationId
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(del)
-      f.delete(): Unit
-    }
-    del(new java.io.File(wh))
+    val wh = Scratch.appDir(spark, "dm2_wh")
     spark.conf.set("spark.sql.catalog.graft_dm2",
       "graft.sources.LakeCatalog")
     spark.conf.set("spark.sql.catalog.graft_dm2.warehouse", wh)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.TxLog
+import graft.queries.Scratch
 
 /** INSERT OVERWRITE / truncate / dynamic partition overwrite (r15 —
   * the r14 verdict's #2 ask) — the laws:
@@ -21,13 +22,7 @@ class LakeOverwriteSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshCat(tag: String): String = {
-    val wh = s"${System.getProperty("java.io.tmpdir")}/graft_ow_${tag}_" +
-      spark.sparkContext.applicationId
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(del)
-      f.delete(): Unit
-    }
-    del(new java.io.File(wh))
+    val wh = Scratch.appDir(spark, s"ow_$tag")
     spark.conf.set(s"spark.sql.catalog.graft_ow$tag",
       "graft.sources.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.graft_ow$tag.warehouse", wh)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
+import graft.queries.Scratch
 import graft.sources.SceneFixtures
 
 /** A second codec proving the [[graft.sources.SceneCodec]] seam: flat
@@ -34,11 +35,6 @@ class SceneSourceSpec extends SparkSpec {
 
   private def scanPartitions(df: DataFrame): Int =
     df.rdd.getNumPartitions
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-    f.delete(): Unit
-  }
 
   test("DSv2 read is bit-identical to SceneFixtures.pixels") {
     val v2 = scenes(4096).collect().map(_.toSeq).toSet
@@ -78,13 +74,9 @@ class SceneSourceSpec extends SparkSpec {
       .option("bandLines", 4).option("scenesPerTrigger", 1)
       .load()
       .groupBy("scene").count()
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
     val q = stream.writeStream.format("memory").queryName("scene_stream")
       .outputMode("complete").option("checkpointLocation", ckpt).start()
-    try q.processAllAvailable() finally { q.stop(); rm(new java.io.File(ckpt)) }
+    try q.processAllAvailable() finally { q.stop(); Scratch.deleteTree(new java.io.File(ckpt)) }
     val got = spark.table("scene_stream").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     got shouldBe Map("sc0" -> 64L, "sc1" -> 64L, "sc2" -> 64L)
@@ -93,10 +85,6 @@ class SceneSourceSpec extends SparkSpec {
   }
 
   test("checkpoint restart resumes after the committed scene — no replay") {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
     val base = java.nio.file.Files.createTempDirectory("graft_scene_restart").toString
     def run(nScenes: Int): Unit = {
       val q = spark.readStream.format("graft-scene")
@@ -117,7 +105,7 @@ class SceneSourceSpec extends SparkSpec {
       // the regression mode this pins: a restarted stream re-seeding its
       // arrival counter at 0 would replay sc1/sc2 (128 extra rows)
       counts shouldBe (0 until 5).map(i => s"sc$i" -> 64L).toMap
-    } finally rm(new java.io.File(base))
+    } finally Scratch.deleteTree(new java.io.File(base))
   }
 
   test("codec seam: a second codec drops in via the option, planning unchanged") {
@@ -219,7 +207,7 @@ class SceneSourceSpec extends SparkSpec {
           .collect { case b: BatchScanExec => b.scan.readSchema().fieldNames.toSeq }
         scans shouldBe Seq(Seq("line", "distance_map"))
         df.select("line", "distance_map").distinct().count() shouldBe 8L * 8
-      } finally rm(dir)
+      } finally Scratch.deleteTree(dir)
     }
 
   test("pruned + banded read still reconstructs the full grid") {
@@ -261,7 +249,7 @@ class SceneSourceSpec extends SparkSpec {
           .collect { case b: BatchScanExec => b.scan.readSchema().fieldNames.toSeq }
         scans shouldBe Seq(Seq("line", "distance_map"))
         df.select("line", "distance_map").distinct().count() shouldBe 8L * 8
-      } finally rm(dir)
+      } finally Scratch.deleteTree(dir)
     }
 
   // VERDICT r9 #7 — the full four-law connector matrix re-asserted
@@ -314,6 +302,6 @@ class SceneSourceSpec extends SparkSpec {
           org.apache.spark.sql.sources.In("scene", Array("sc2"))))
         scan.asInstanceOf[org.apache.spark.sql.connector.read.Batch]
           .planInputPartitions().length shouldBe 2
-      } finally rm(dir)
+      } finally Scratch.deleteTree(dir)
     }
 }
